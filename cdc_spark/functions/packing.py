@@ -16,7 +16,7 @@ corpus through ONE partition (Spark plans an un-partitioned window as
 Exchange SinglePartition) — the classic scale cliff. Instead the
 offsets are computed as a textbook two-phase distributed prefix sum:
 
-  1. range-bucket each row by id (`floor((id - min_id)/width)` — order-
+  1. range-bucket each row by id (`(id - min_id) div width` — order-
      aligned, so bucket b's rows all precede bucket b+1's);
   2. ONE map-side-combinable `groupBy(_bkt).sum(n_tok)` → collect the
      O(n_buckets) per-bucket totals to the driver and exclusive-scan
@@ -37,9 +37,16 @@ is a P-series training-data operator per SURVEY.md §2.6.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _div(num: str, den: int) -> Column:
+    """`num div den` for a SQL expression `num` over long columns: exact
+    long division (floor, since every dividend here is non-negative).
+    `/` would divide in doubles, which round above 2^53."""
+    return F.expr(f"({num}) div {int(den)}")
 
 
 def pack_manifest(
@@ -78,8 +85,7 @@ def pack_manifest(
     src = df.select(
         F.col(id_col).cast("long").alias(id_col),
         F.col(n_tok_col).cast("long").alias(n_tok_col),
-        F.floor((F.col(id_col) - F.lit(lo)) / F.lit(width)).alias("_bkt"),
-    )
+    ).withColumn("_bkt", _div(f"`{id_col}` - ({lo})", width))
 
     # phase 1+2: per-bucket totals (map-side combinable) -> driver
     # exclusive scan over O(n_buckets) rows -> broadcast back
@@ -103,18 +109,20 @@ def pack_manifest(
     cum = F.sum(n_tok_col).over(w)
     offs = src.withColumn("_off_in_bkt", cum - F.col(n_tok_col)).join(
         F.broadcast(base_df), "_bkt"
+    ).select(
+        F.col(id_col),
+        F.col(n_tok_col),
+        (F.col("_base") + F.col("_off_in_bkt")).alias("tok_offset"),
     )
-    off = F.col("_base") + F.col("_off_in_bkt")
-    last_tok = off + F.greatest(F.col(n_tok_col), F.lit(1)) - 1
+    seq_first = _div("tok_offset", seq_len)
+    seq_last = _div(f"tok_offset + greatest(`{n_tok_col}`, 1) - 1", seq_len)
     return offs.select(
         F.col(id_col),
         F.col(n_tok_col),
-        off.alias("tok_offset"),
-        F.floor(off / seq_len).cast("long").alias("seq_first"),
-        F.floor(last_tok / seq_len).cast("long").alias("seq_last"),
-        (F.floor(last_tok / seq_len) - F.floor(off / seq_len) + 1)
-        .cast("long")
-        .alias("n_seqs"),
+        F.col("tok_offset"),
+        seq_first.alias("seq_first"),
+        seq_last.alias("seq_last"),
+        (seq_last - seq_first + 1).alias("n_seqs"),
     )
 
 
@@ -171,8 +179,7 @@ def emit_sequences(
         F.col(id_col).cast("long").alias(id_col),
         F.col(tokens_col),
         F.size(tokens_col).cast("long").alias("_nt"),
-        F.floor((F.col(id_col) - F.lit(lo)) / F.lit(width)).alias("_bkt"),
-    )
+    ).withColumn("_bkt", _div(f"`{id_col}` - ({lo})", width))
 
     # phase 1+2: per-bucket token totals (column-pruned to _bkt/_nt) ->
     # O(n_buckets) driver exclusive scan -> broadcast back
@@ -196,11 +203,10 @@ def emit_sequences(
         "_off_in_bkt", F.sum("_nt").over(w) - F.col("_nt")
     ).join(F.broadcast(base_df), "_bkt")
     off = (F.col("_base") + F.col("_off_in_bkt")).alias("tok_offset")
-    last_tok = F.col("tok_offset") + F.greatest(F.col("_nt"), F.lit(1)) - 1
     seq = F.explode(
         F.sequence(
-            F.floor(F.col("tok_offset") / seq_len),
-            F.floor(last_tok / seq_len),
+            _div("tok_offset", seq_len),
+            _div("tok_offset + greatest(_nt, 1) - 1", seq_len),
         )
     ).alias("seq_id")
     contrib = offs.select(F.col(tokens_col), off, F.col("_nt")).select(

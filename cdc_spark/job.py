@@ -58,12 +58,6 @@ def main(argv: list[str] | None = None) -> int:
         r = sub.add_parser(name, help=f"{name} driver: binlog → target table")
         r.add_argument("--binlog", required=True)
         r.add_argument("--table", required=True)
-        r.add_argument("--dedupe", default="agg", choices=["agg", "window", "salted", "auto"],
-                       help="LWW dedupe plan; agg (default) partial-"
-                       "aggregates map-side and is already hot-key-proof "
-                       "— auto's sampled histogram costs 2 extra jobs/"
-                       "epoch (see operators/dedupe.py)")
-        r.add_argument("--normalize", default="expr", choices=["expr", "arrow"])
         r.add_argument("--compact-every", type=int, default=16)
         r.add_argument("--compact-budget", type=int, default=None,
                        help="max dirty buckets an inline compaction tick "
@@ -114,11 +108,6 @@ def main(argv: list[str] | None = None) -> int:
     jr.add_argument("--outbox", default="changes", help="outbox table name")
     jr.add_argument("--driver", default=None, help="JDBC driver class")
     jr.add_argument("--num-partitions", type=int, default=4)
-    jr.add_argument("--dedupe", default="agg", choices=["agg", "window", "salted", "auto"],
-                       help="LWW dedupe plan; agg (default) partial-"
-                       "aggregates map-side and is already hot-key-proof "
-                       "— auto's sampled histogram costs 2 extra jobs/"
-                       "epoch (see operators/dedupe.py)")
     _add_common(jr)
 
     ae = sub.add_parser(
@@ -223,7 +212,6 @@ def main(argv: list[str] | None = None) -> int:
 
                 router = replay_multi(
                     spark, args.binlog, args.table,
-                    dedupe_mode=args.dedupe, normalize_impl=args.normalize,
                     compact_every=args.compact_every, wire=args.wire,
                     images=args.images,
                 )
@@ -232,7 +220,6 @@ def main(argv: list[str] | None = None) -> int:
 
                 router = stream(spark, args.binlog, args.table,
                                 checkpoint_dir=args.checkpoint,
-                                dedupe_mode=args.dedupe,
                                 max_files_per_trigger=args.max_files_per_trigger,
                                 wire=args.wire, multi=True, images=args.images)
             out = {}
@@ -255,7 +242,6 @@ def main(argv: list[str] | None = None) -> int:
 
                 table = replay(
                     spark, args.binlog, args.table,
-                    dedupe_mode=args.dedupe, normalize_impl=args.normalize,
                     compact_every=args.compact_every, stats_out=epoch_stats,
                     wire=args.wire, lineage=not args.no_lineage,
                     images=args.images, compact_budget=args.compact_budget,
@@ -264,7 +250,6 @@ def main(argv: list[str] | None = None) -> int:
                 from cdc_spark.streaming.pipeline import stream
 
                 table = stream(spark, args.binlog, args.table, checkpoint_dir=args.checkpoint,
-                               dedupe_mode=args.dedupe,
                                max_files_per_trigger=args.max_files_per_trigger,
                                wire=args.wire, images=args.images,
                                compact_budget=args.compact_budget)
@@ -355,7 +340,6 @@ def main(argv: list[str] | None = None) -> int:
             table = jdbc_replay(
                 spark, args.url, args.table, outbox_table=args.outbox,
                 driver=args.driver, num_partitions=args.num_partitions,
-                dedupe_mode=args.dedupe,
             )
             st = table.state()
             print(json.dumps({
@@ -439,7 +423,8 @@ def main(argv: list[str] | None = None) -> int:
             counts = {r["_change_type"]: r["count"] for r in st}
             print(json.dumps({
                 "from_version": args.from_version,
-                "to_version": args.to_version or table.state()["version"],
+                "to_version": (args.to_version if args.to_version is not None
+                               else table.state()["version"]),
                 "rows": int(sum(counts.values())),
                 "upserts": int(counts.get("upsert", 0)),
                 "deletes": int(counts.get("delete", 0)),
@@ -461,10 +446,22 @@ def main(argv: list[str] | None = None) -> int:
                 F.regexp_extract("doc_id", r"(\d+)$", 1).cast("long").alias("_ord"),
                 F.coalesce(F.col("tokens"), F.array().cast("array<int>")).alias("tokens"),
             )
-            n_bad = src.filter(F.col("_ord").isNull()).count()
+            chk = src.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count("_ord").alias("n_ord"),
+                F.countDistinct("_ord").alias("n_distinct"),
+            ).first()
+            n_bad = chk["n"] - chk["n_ord"]
             if n_bad:
                 print(json.dumps({"error": "doc_id without numeric tail",
                                   "rows": n_bad}))
+                return 1
+            # two docs sharing a tail (doc7, doc07) have no defined
+            # concat order between them
+            n_dup = chk["n_ord"] - chk["n_distinct"]
+            if n_dup:
+                print(json.dumps({"error": "duplicate numeric doc_id tail",
+                                  "rows": n_dup}))
                 return 1
             out = emit_sequences(
                 src.withColumnRenamed("_ord", "doc_id"),

@@ -8,29 +8,18 @@ and restore *per-key* order instead: only the max-lsn event per doc_id
 survives a micro-batch; cross-batch order comes from the monotone lsn
 kept in the target table (last_lsn).
 
-Three interchangeable strategies (tests pin them equal):
-
-- ``agg`` (default): ``groupBy(key).agg(max_by(struct(*), lsn))``.
-  Hash aggregate with map-side partial aggregation — hot keys reduce
-  locally before the shuffle, so Zipf skew never concentrates on one
-  reducer. This is the 100-TB path.
-- ``window``: ``row_number() over (partition by key order by lsn desc)``.
-  The textbook formulation (and the DuckDB-oracle formulation), but a
-  full shuffle+sort with no partial reduction — skew-sensitive.
-- ``salted``: explicit two-phase window — partial LWW within
-  (key, salt=pmod(xxhash64(lsn), S)) partitions, then final LWW across
-  the ≤S survivors per key (the north rule's salted repartitioning,
-  mirroring partial+final aggregation; SURVEY.md §4.3).
-- ``auto``: per-batch hot-key detection (seeded sample histogram — the
-  `cdc_hot_keys` logic inlined) routes rows of keys above a frequency
-  threshold through the salted two-phase path and everything else
-  through ``agg``; with no hot key detected it IS ``agg``. Costs one
-  extra sampled-scan job per batch.
+One formulation: ``groupBy(key).agg(max_by(struct(*), lsn))``. It is a
+hash aggregate with map-side partial aggregation (pinned by
+tests/test_plans.py), so a hot key reduces locally before the shuffle
+and ships at most one pre-reduced row per map task: Zipf skew never
+concentrates on one reducer, with no hot-key detection pass. The
+textbook ``row_number()`` window lives on only in the contract's DuckDB
+twins (``cdc_lww_dedupe_*`` in __spark_entry__.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -38,121 +27,19 @@ def lww_dedupe(
     df: DataFrame,
     key: str | list[str] = "doc_id",
     order: str = "lsn",
-    mode: str = "agg",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Keep only the max-`order` row per `key` (a column name or a
     composite list — the multi-table router keys by (table, doc_id)).
     Ties broken by `deleted` (delete wins — only possible for the D half
     of a PK-change split, which shares the source event's lsn with its I
     half but always targets a *different* key, so ties cannot occur in
-    valid feeds; the tiebreak just makes the operator total).
-
-    Why `agg` stays the DEFAULT over `auto` (VERDICT r3 item #7,
-    deliberate): the agg formulation's max_by groupBy partial-aggregates
-    map-side (pinned by tests/test_plans.py), so even a mega-hot key
-    ships at most one pre-reduced row per map task — the skew `auto`'s
-    salting guards against cannot arise in this formulation. `auto`'s
-    hot-key histogram costs TWO extra per-epoch jobs (count + sampled
-    scan), each recomputing normalize on the unpersisted hot path — a
-    fixed per-epoch barrier tax bought for protection agg already has.
-    `auto`/`salted` exist for window-semantics callers (row_number has
-    no map-side reduction) and stay available via --dedupe."""
+    valid feeds; the tiebreak just makes the operator total)."""
     keys = [key] if isinstance(key, str) else list(key)
     cols = df.columns
-    if mode == "auto":
-        if len(keys) != 1:
-            raise ValueError("auto dedupe mode supports a single key column")
-        return _auto_salted(df, keys[0], order, salt_buckets)
-    if mode == "agg":
-        ordering = F.struct(F.col(order), F.col("deleted")) if "deleted" in cols else F.col(order)
-        return (
-            df.groupBy(*keys)
-            .agg(F.max_by(F.struct(*[c for c in cols if c not in keys]), ordering).alias("_r"))
-            .select(*keys, "_r.*")
-            .select(*cols)
-        )
-    if mode == "window":
-        order_cols = [F.col(order).desc()]
-        if "deleted" in cols:
-            order_cols.append(F.col("deleted").desc())
-        w = Window.partitionBy(*keys).orderBy(*order_cols)
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .select(*cols)
-        )
-    if mode == "salted":
-        salt = F.pmod(F.xxhash64(F.col(order)), F.lit(salt_buckets)).alias("_salt")
-        salted = df.withColumn("_salt", salt).repartition(
-            *[F.col(k) for k in keys], F.col("_salt")
-        )
-        # same (order, deleted) total ordering as agg/window — ties are
-        # impossible in valid feeds, but all three modes stay pinned
-        # equal even on degenerate input
-        order_cols = [F.col(order).desc()]
-        if "deleted" in cols:
-            order_cols.append(F.col("deleted").desc())
-        w1 = Window.partitionBy(*keys, "_salt").orderBy(*order_cols)
-        partial = (
-            salted.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_salt")
-        )
-        w2 = Window.partitionBy(*keys).orderBy(*order_cols)
-        return (
-            partial.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .select(*cols)
-        )
-    raise ValueError(f"unknown dedupe mode {mode!r}")
-
-
-def detect_hot_keys(
-    df: DataFrame,
-    key: str = "doc_id",
-    threshold: float = 0.05,
-    sample_fraction: float = 0.02,
-    min_sample: int = 20_000,
-    seed: int = 42,
-) -> list:
-    """Keys whose estimated batch share exceeds `threshold`, from ONE
-    seeded sampled-scan job (the per-batch `cdc_hot_keys` histogram,
-    SURVEY.md §4.3). At most ceil(1/threshold) keys can qualify, so the
-    driver-side collect is bounded by construction. The estimate only
-    ROUTES rows (both downstream paths are correct for any key), so
-    sampling error cannot affect results — only which plan a key takes."""
-    n = df.count()
-    if n == 0:
-        return []
-    frac = min(1.0, max(sample_fraction, min_sample / n))
-    sample = df.sample(fraction=frac, seed=seed)
-    cutoff = max(1, int(threshold * frac * n * 0.5))  # 0.5: undercount slack
-    rows = (
-        sample.groupBy(key).count()
-        .filter(F.col("count") >= cutoff)
-        .orderBy(F.col("count").desc())
-        .limit(int(1 / threshold) + 1)
-        .collect()
+    ordering = F.struct(F.col(order), F.col("deleted")) if "deleted" in cols else F.col(order)
+    return (
+        df.groupBy(*keys)
+        .agg(F.max_by(F.struct(*[c for c in cols if c not in keys]), ordering).alias("_r"))
+        .select(*keys, "_r.*")
+        .select(*cols)
     )
-    return [r[key] for r in rows if r["count"] >= threshold * frac * n * 0.5]
-
-
-def _auto_salted(df: DataFrame, key: str, order: str, salt_buckets: int) -> DataFrame:
-    """Hot keys → salted two-phase LWW; the cold remainder → plain agg.
-
-    The salted branch bounds any single reducer's rows to ~1/S of the
-    hottest key even under window semantics; the agg branch keeps
-    map-side partial aggregation for the long tail."""
-    cols = df.columns
-    hot = detect_hot_keys(df, key=key)
-    if not hot:
-        return lww_dedupe(df, key=key, order=order, mode="agg")
-    hot_df = df.filter(F.col(key).isin(hot))
-    cold_df = df.filter(~F.col(key).isin(hot) | F.col(key).isNull())
-    deduped_hot = lww_dedupe(hot_df, key=key, order=order, mode="salted",
-                             salt_buckets=salt_buckets)
-    deduped_cold = lww_dedupe(cold_df, key=key, order=order, mode="agg")
-    return deduped_hot.unionByName(deduped_cold).select(*cols)

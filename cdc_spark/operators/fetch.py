@@ -55,8 +55,6 @@ from __future__ import annotations
 
 import logging
 
-import pyarrow as pa
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -146,34 +144,6 @@ WINNER_SCHEMA = T.StructType(
 )
 
 _EMPTY_MAP = "cast(map() as map<string,string>)"
-
-#: Arrow twin of FETCH_EVENT_SCHEMA — the driver↔JVM hops in
-#: resolve_cross_key (re-injecting resolved pendings) go through
-#: `createDataFrame(pyarrow.Table)`, which skips the per-row pickle
-#: path (measured ~2.5× faster on 10k nested rows; the hop is serial
-#: driver work, so it is the scaling-efficiency term worth shaving)
-_ARROW_FETCH_EVENT = pa.schema(
-    [
-        pa.field("lsn", pa.int64()),
-        pa.field("epoch", pa.int32()),
-        pa.field("doc_id", pa.string()),
-        pa.field("deleted", pa.bool_()),
-        pa.field("tokens", pa.list_(pa.int32())),
-        pa.field("n_tok", pa.int32()),
-        pa.field("source", pa.string()),
-        pa.field("extra", pa.map_(pa.string(), pa.string())),
-        pa.field("set_tokens", pa.bool_()),
-        pa.field("set_source", pa.bool_()),
-        pa.field("reset", pa.bool_()),
-        pa.field("base_key", pa.string()),
-    ]
-)
-
-
-def _events_df(spark: SparkSession, dicts, names) -> DataFrame:
-    """FETCH_EVENT dicts → DataFrame via the Arrow fast path."""
-    rows = [{n: d[n] for n in names} for d in dicts]
-    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=_ARROW_FETCH_EVENT))
 
 
 def normalize_fetch(changes: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
@@ -312,22 +282,6 @@ def _chain_apply(ch: dict, ev: dict) -> None:
     for k, v in (ev["extra"] or {}).items():
         ch["fold"][k] = (ev["lsn"], v)
 
-
-_ANSWER_SCHEMA = T.StructType(
-    [
-        T.StructField("pending_lsn", T.LongType()),
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("tokens", T.ArrayType(T.IntegerType())),
-        T.StructField("n_tok", T.IntegerType()),
-        T.StructField("tokens_is_marker", T.BooleanType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("source_is_marker", T.BooleanType()),
-        T.StructField("origin", T.StringType()),
-        T.StructField("fold", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-_MAX_CHAIN_ROUNDS = 8
 
 class _Unknown:
     """Pickle-stable singleton sentinel. A bare ``object()`` loses
@@ -518,188 +472,9 @@ def _chain_resolve_kernel(drops: list[tuple[int, str]]):
     return run_partition
 
 
-def _answers_expr(stream: DataFrame, drops: list[tuple[int, str]]) -> DataFrame:
-    """Round-based JVM query-fold (the impl="expr" legacy twin): one
-    Catalyst aggregate per key replays the (event ∪ placeholder ∪
-    query)-interleaved timeline and accumulates answer rows, instead of
-    a Python fold. Input = FETCH_EVENT_SCHEMA + `kind` int column; output =
-    _ANSWER_SCHEMA rows. Query rows sort before same-lsn events via the
-    struct's second field (the same _qord trick as the kernel), which
-    keeps the fetch-then-delete order of a PK-change's D-half."""
-    empty_fold = F.expr("cast(map() as map<string,struct<l:bigint,v:string>>)")
-    empty_sfold = F.expr(_EMPTY_MAP)
-    drops_arr = _drops_lit(drops)
-
-    ev_struct = F.struct(
-        F.col("lsn"),
-        F.when(F.col("kind") == 2, F.lit(0)).otherwise(F.lit(1)).alias("qord"),
-        F.col("kind"), F.col("epoch"), F.col("deleted"), F.col("tokens"),
-        F.col("n_tok"), F.col("source"),
-        F.coalesce(F.col("extra"), F.expr(_EMPTY_MAP)).alias("extra"),
-        F.col("set_tokens"), F.col("set_source"), F.col("reset"),
-        F.col("base_key"),
-    )
-    grouped = stream.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(ev_struct),
-            lambda l, r: F.when(l["lsn"] < r["lsn"], -1)
-            .when(l["lsn"] > r["lsn"], 1)
-            .when(l["qord"] < r["qord"], -1)
-            .when(l["qord"] > r["qord"], 1)
-            .otherwise(0),
-        ).alias("evs")
-    )
-
-    answer_t = (
-        "struct<pending_lsn:bigint,ok:boolean,tokens:array<int>,n_tok:int,"
-        "tokens_is_marker:boolean,source:string,source_is_marker:boolean,"
-        "origin:string,fold:map<string,string>>"
-    )
-    init = F.struct(
-        F.lit(None).cast("array<int>").alias("tokens"),
-        F.lit(None).cast("int").alias("n_tok"),
-        F.lit(None).cast("string").alias("source"),
-        F.lit(True).alias("t_mark"), F.lit(True).alias("s_mark"),
-        F.lit(False).alias("t_unk"), F.lit(False).alias("s_unk"),
-        empty_fold.alias("fold"), F.lit(False).alias("fold_unk"),
-        F.col("doc_id").alias("origin"), F.lit(False).alias("origin_unk"),
-        F.expr(f"cast(array() as array<{answer_t}>)").alias("answers"),
-    )
-
-    def merge(acc, e):
-        # --- kind 2: append a snapshot answer, state unchanged --------
-        need_t, need_s = ~e["set_tokens"], ~e["set_source"]
-        unk = (
-            (need_t & acc["t_unk"]) | (need_s & acc["s_unk"])
-            | acc["origin_unk"] | acc["fold_unk"]
-        )
-        purged = F.map_filter(
-            acc["fold"],
-            lambda fk, sv: ~F.exists(
-                drops_arr,
-                lambda d: (d["k"] == fk) & (sv["l"] < d["l"]) & (d["l"] <= e["lsn"]),
-            ),
-        )
-        bad = F.struct(
-            e["lsn"].alias("pending_lsn"), F.lit(False).alias("ok"),
-            F.lit(None).cast("array<int>").alias("tokens"),
-            F.lit(None).cast("int").alias("n_tok"),
-            F.lit(False).alias("tokens_is_marker"),
-            F.lit(None).cast("string").alias("source"),
-            F.lit(False).alias("source_is_marker"),
-            F.lit(None).cast("string").alias("origin"),
-            empty_sfold.alias("fold"),
-        )
-        good = F.struct(
-            e["lsn"].alias("pending_lsn"), F.lit(True).alias("ok"),
-            F.when(~acc["t_mark"] & ~acc["t_unk"], acc["tokens"]).alias("tokens"),
-            F.when(~acc["t_mark"] & ~acc["t_unk"], acc["n_tok"]).alias("n_tok"),
-            acc["t_mark"].alias("tokens_is_marker"),
-            F.when(~acc["s_mark"] & ~acc["s_unk"], acc["source"]).alias("source"),
-            acc["s_mark"].alias("source_is_marker"),
-            acc["origin"].alias("origin"),
-            F.transform_values(purged, lambda _k, sv: sv["v"]).alias("fold"),
-        )
-        answered = F.struct(
-            *[acc[f].alias(f) for f in (
-                "tokens", "n_tok", "source", "t_mark", "s_mark", "t_unk",
-                "s_unk", "fold", "fold_unk", "origin", "origin_unk",
-            )],
-            F.array_append(acc["answers"], F.when(unk, bad).otherwise(good))
-            .alias("answers"),
-        )
-
-        # --- kind 1: unresolved-pending placeholder -------------------
-        placeholder = F.struct(
-            F.when(e["set_tokens"], e["tokens"]).alias("tokens"),
-            F.when(e["set_tokens"], e["n_tok"]).alias("n_tok"),
-            F.when(e["set_source"], e["source"]).alias("source"),
-            F.lit(False).alias("t_mark"), F.lit(False).alias("s_mark"),
-            (~e["set_tokens"]).alias("t_unk"), (~e["set_source"]).alias("s_unk"),
-            empty_fold.alias("fold"), F.lit(True).alias("fold_unk"),
-            F.lit(None).cast("string").alias("origin"),
-            F.lit(True).alias("origin_unk"),
-            acc["answers"].alias("answers"),
-        )
-
-        # --- kind 0 transitions (mirror fetch_winners_expr + unk) -----
-        stamped = F.transform_values(
-            e["extra"],
-            lambda _k, v: F.struct(e["lsn"].alias("l"), v.alias("v")),
-        )
-        false_unks = [
-            F.lit(False).alias("t_unk"), F.lit(False).alias("s_unk"),
-        ]
-        del_state = F.struct(
-            F.lit(None).cast("array<int>").alias("tokens"),
-            F.lit(None).cast("int").alias("n_tok"),
-            F.lit(None).cast("string").alias("source"),
-            F.lit(False).alias("t_mark"), F.lit(False).alias("s_mark"),
-            *false_unks,
-            empty_fold.alias("fold"), F.lit(False).alias("fold_unk"),
-            F.lit(None).cast("string").alias("origin"),
-            F.lit(False).alias("origin_unk"),
-            acc["answers"].alias("answers"),
-        )
-        reset_state = F.struct(
-            F.when(e["set_tokens"], e["tokens"]).alias("tokens"),
-            F.when(e["set_tokens"], e["n_tok"]).alias("n_tok"),
-            F.when(e["set_source"], e["source"]).alias("source"),
-            (~e["set_tokens"]).alias("t_mark"), (~e["set_source"]).alias("s_mark"),
-            *false_unks,
-            stamped.alias("fold"), F.lit(False).alias("fold_unk"),
-            e["base_key"].alias("origin"), F.lit(False).alias("origin_unk"),
-            acc["answers"].alias("answers"),
-        )
-        setters_only = F.struct(
-            F.when(e["set_tokens"], e["tokens"]).otherwise(acc["tokens"]).alias("tokens"),
-            F.when(e["set_tokens"], e["n_tok"]).otherwise(acc["n_tok"]).alias("n_tok"),
-            F.when(e["set_source"], e["source"]).otherwise(acc["source"]).alias("source"),
-            (acc["t_mark"] & ~e["set_tokens"]).alias("t_mark"),
-            (acc["s_mark"] & ~e["set_source"]).alias("s_mark"),
-            (acc["t_unk"] & ~e["set_tokens"]).alias("t_unk"),
-            (acc["s_unk"] & ~e["set_source"]).alias("s_unk"),
-            acc["fold"].alias("fold"), acc["fold_unk"].alias("fold_unk"),
-            acc["origin"].alias("origin"), acc["origin_unk"].alias("origin_unk"),
-            acc["answers"].alias("answers"),
-        )
-        merged_fold = F.map_concat(
-            F.map_filter(
-                acc["fold"],
-                lambda fk, _v: ~F.map_contains_key(e["extra"], fk),
-            ),
-            stamped,
-        )
-        norm_state = F.struct(
-            F.when(e["set_tokens"], e["tokens"]).otherwise(acc["tokens"]).alias("tokens"),
-            F.when(e["set_tokens"], e["n_tok"]).otherwise(acc["n_tok"]).alias("n_tok"),
-            F.when(e["set_source"], e["source"]).otherwise(acc["source"]).alias("source"),
-            (acc["t_mark"] & ~e["set_tokens"]).alias("t_mark"),
-            (acc["s_mark"] & ~e["set_source"]).alias("s_mark"),
-            *false_unks,
-            merged_fold.alias("fold"), F.lit(False).alias("fold_unk"),
-            acc["origin"].alias("origin"), F.lit(False).alias("origin_unk"),
-            acc["answers"].alias("answers"),
-        )
-        return (
-            F.when(e["kind"] == 2, answered)
-            .when(e["kind"] == 1, placeholder)
-            .when(e["deleted"], del_state)
-            .when(e["reset"], reset_state)
-            .when(acc["fold_unk"], setters_only)
-            .otherwise(norm_state)
-        )
-
-    answers = F.aggregate(F.col("evs"), init, merge, lambda acc: acc["answers"])
-    return (
-        grouped.select(F.explode(answers).alias("a"))
-        .select(*[F.col(f"a.{f.name}") for f in _ANSWER_SCHEMA.fields])
-    )
-
-
 def resolve_cross_key(
     spark: SparkSession, events: DataFrame, drops: list[tuple[int, str]],
-    impl: str = "pandas", n_pk_change: int | None = None,
+    n_pk_change: int | None = None,
 ) -> DataFrame:
     """Replace cross-key reset events (PK-change I-halves) with
     literal/marker-resolved twins so the per-key replay becomes fully
@@ -717,7 +492,7 @@ def resolve_cross_key(
     refolds of just the affected keys, not k driver-blocking Spark jobs
     — and emits the resolved literal twins directly, so there is no
     driver collect of answers and no driver-built injection frame at
-    all. The round-3 design ran up to `_MAX_CHAIN_ROUNDS` full jobs with
+    all. The round-3 design ran up to 8 full jobs with
     a driver collect + Arrow re-injection between each; that serial
     driver share was the engine's one sub-0.8 scaling surface
     (BENCH_scaling_fetch_r3.md). Timelines nobody queries cannot affect
@@ -728,29 +503,10 @@ def resolve_cross_key(
     `n_pk_change`: the epoch's PK-change event count when the caller's
     stats pass already knows it (lineage_stats pk_change=True). 0 skips
     even the edge-probe job — the common no-PK-change epoch then pays
-    nothing here.
-
-    impl="pandas" (default): the single-pass kernel. impl="expr": the
-    legacy round loop with the fold as a JVM Catalyst aggregate
-    (`_answers_expr`) — an algorithmically independent twin (different
-    fold engine AND different resolution strategy), pinned equal by
-    tests."""
+    nothing here."""
     if n_pk_change == 0:
         return events
     is_pending = F.col("reset") & F.col("base_key").isNotNull()
-    if impl == "expr":
-        pend_rows = _collect_pendings(events)
-        if not pend_rows:
-            return events
-        base = events.filter(~is_pending)
-        resolved = _resolve_pendings(
-            spark, base, {r["lsn"]: r for r in pend_rows}, drops
-        )
-        inj_df = _events_df(spark, resolved.values(), _NAMES)
-        # structural filter: EVERY cross-key reset row was just resolved,
-        # so drop that shape wholesale and union the literal twins back in
-        return base.unionByName(inj_df)
-
     edges = (
         events.filter(is_pending)
         .select("doc_id", "base_key")
@@ -842,41 +598,6 @@ def resolve_cross_key(
     return base.unionByName(resolved_events)
 
 
-def _collect_pendings(events: DataFrame) -> list[dict]:
-    """Driver-collect the (capped) cross-key pending set as dicts.
-
-    Deliberately STRICTER than the default impl's soft cap: this legacy
-    twin collects full pending ROWS (payload arrays and maps, not the
-    two-string edges the single-pass resolver collects), so its driver
-    memory bound is genuinely lower — a mass re-key epoch above
-    `_PENDING_MAX` must run the default impl="pandas" path, which
-    degrades gracefully up to `_PENDING_HARD_MAX`."""
-
-    def to_dict(row) -> dict:
-        d = dict(zip(_NAMES, row))
-        if d["extra"] is not None and not isinstance(d["extra"], dict):
-            d["extra"] = dict(d["extra"])
-        if d["tokens"] is not None:
-            d["tokens"] = list(d["tokens"])
-        return d
-
-    pend_rows = [
-        to_dict(r)
-        for r in events.filter(F.col("reset") & F.col("base_key").isNotNull())
-        .select(*_NAMES)
-        .limit(_PENDING_MAX + 1)
-        .collect()
-    ]
-    if len(pend_rows) > _PENDING_MAX:
-        raise ValueError(
-            f"more than {_PENDING_MAX} cross-key (PK-change) fetch events "
-            "in one epoch; the expr twin collects full pending rows "
-            "driver-side — use the default impl='pandas' resolver, which "
-            f"degrades gracefully up to {_PENDING_HARD_MAX} edges"
-        )
-    return pend_rows
-
-
 def _make_resolved(p: dict, a: dict) -> dict:
     out = dict(p)
     if not p["set_tokens"]:
@@ -895,82 +616,6 @@ def _make_resolved(p: dict, a: dict) -> dict:
     # markers carry the same one); None => fully absolute
     out["base_key"] = a["origin"]
     return out
-
-
-def _resolve_pendings(
-    spark: SparkSession,
-    base: DataFrame,
-    unresolved: dict[int, dict],
-    drops: list[tuple[int, str]],
-) -> dict[int, dict]:
-    """LEGACY round loop resolving the pending set → {lsn: literal event
-    dict}, one `_answers_expr` Catalyst-aggregate job + driver collect
-    per chain round. Kept ONLY as resolve_cross_key's impl="expr"
-    cross-validating twin; the default path is the single-pass
-    `_chain_resolve_kernel`."""
-    kind0 = F.lit(0).cast("int").alias("kind")
-    resolved: dict[int, dict] = {}
-    ans_names = [f.name for f in _ANSWER_SCHEMA.fields]
-
-    for _round in range(_MAX_CHAIN_ROUNDS):
-        if not unresolved:
-            break
-        pend_df = _events_df(spark, unresolved.values(), _NAMES)
-        inj_df = (
-            _events_df(spark, resolved.values(), _NAMES)
-            if resolved
-            else spark.createDataFrame([], FETCH_EVENT_SCHEMA)
-        )
-        stream = (
-            base.select(*_NAMES, kind0)
-            .unionByName(inj_df.select(*_NAMES, kind0))
-            .unionByName(
-                pend_df.select(*_NAMES, F.lit(1).cast("int").alias("kind"))
-            )
-            .unionByName(
-                pend_df.select(
-                    F.col("base_key").alias("doc_id"),
-                    *[F.col(n) for n in _NAMES if n not in ("doc_id",)],
-                    F.lit(2).cast("int").alias("kind"),
-                ).select(*_NAMES, "kind")
-            )
-        )
-        # queried-key round filter: only timelines some pending
-        # QUERIES can affect an answer, so each round folds just
-        # those (the set is driver-known and capped → broadcast
-        # semi-join; it shrinks with the unresolved set, so later
-        # rounds touch a handful of keys instead of re-folding the
-        # whole epoch)
-        queried = spark.createDataFrame(
-            sorted({(d["base_key"],) for d in unresolved.values()}),
-            "doc_id string",
-        )
-        stream = stream.join(F.broadcast(queried), "doc_id", "left_semi")
-        answers = _answers_expr(stream, drops).collect()
-        progressed = False
-        for r in answers:
-            a = dict(zip(ans_names, r))
-            if a["fold"] is not None and not isinstance(a["fold"], dict):
-                a["fold"] = dict(a["fold"])
-            if a["tokens"] is not None:
-                a["tokens"] = list(a["tokens"])
-            p = unresolved.get(a["pending_lsn"])
-            if p is None or not a["ok"]:
-                continue
-            resolved[p["lsn"]] = _make_resolved(p, a)
-            del unresolved[p["lsn"]]
-            progressed = True
-        if unresolved and not progressed:
-            raise RuntimeError(
-                "cross-key fetch chains did not progress (cyclic or "
-                "malformed feed)"
-            )
-    if unresolved:
-        raise ValueError(
-            f"cross-key fetch chains deeper than {_MAX_CHAIN_ROUNDS} "
-            "rounds; refusing a pathological feed"
-        )
-    return resolved
 
 
 def fetch_winners(
@@ -1347,165 +992,6 @@ def fetch_winners_tree(
     )
 
 
-def _drops_lit(drops: list[tuple[int, str]]):
-    """drops → literal array<struct<l,k>> column for in-expression purge."""
-    if not drops:
-        return F.expr("cast(array() as array<struct<l:bigint,k:string>>)")
-    return F.array(*[
-        F.struct(F.lit(int(dl)).cast("bigint").alias("l"),
-                 F.lit(sk).alias("k"))
-        for dl, sk in drops
-    ])
-
-
-def fetch_winners_expr(events: DataFrame, drops: list[tuple[int, str]]) -> DataFrame:
-    """JVM twin of `fetch_winners`: per-key chain replay as ONE Catalyst
-    aggregate — groupBy(doc_id) → sort_array(collect_list(event)) →
-    F.aggregate fold — instead of a Python fold over Arrow batches.
-
-    Same single exchange as the pandas kernel (the groupBy shuffle), but
-    the per-event transition runs as interpreted JVM expressions: no
-    Python workers, no Arrow round-trip, no per-partition pandas
-    concat/sort. The fold state mirrors `_chain_apply` field-for-field
-    (tokens/n_tok/source + marker flags, the (set_lsn, value) extra
-    fold, the chain origin); `finish` mirrors `_winner_of` including the
-    drop-DDL purge. Equality with the pandas kernel is test-pinned.
-
-    lsn is unique within a key's timeline (the PK-change explode puts
-    its D- and I-halves on different keys), so ordering by lsn alone is
-    total; the sort is an array_sort comparator because structs holding
-    a map column are not natively orderable."""
-    empty_fold = F.expr("cast(map() as map<string,struct<l:bigint,v:string>>)")
-    drops_arr = _drops_lit(drops)
-
-    ev_struct = F.struct(
-        F.col("lsn"), F.col("epoch"), F.col("deleted"), F.col("tokens"),
-        F.col("n_tok"), F.col("source"),
-        F.coalesce(F.col("extra"), F.expr(_EMPTY_MAP)).alias("extra"),
-        F.col("set_tokens"), F.col("set_source"), F.col("reset"),
-        F.col("base_key"),
-    )
-    grouped = events.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(ev_struct),
-            lambda l, r: F.when(l["lsn"] < r["lsn"], -1)
-            .when(l["lsn"] > r["lsn"], 1)
-            .otherwise(0),
-        ).alias("evs")
-    )
-
-    init = F.struct(
-        F.lit(None).cast("array<int>").alias("tokens"),
-        F.lit(None).cast("int").alias("n_tok"),
-        F.lit(None).cast("string").alias("source"),
-        F.lit(True).alias("t_mark"), F.lit(True).alias("s_mark"),
-        empty_fold.alias("fold"),
-        F.col("doc_id").alias("origin"),
-        F.lit(None).cast("bigint").alias("lsn"),
-        F.lit(None).cast("int").alias("epoch"),
-        F.lit(False).alias("deleted"),
-    )
-
-    def merge(acc, e):
-        stamped = F.transform_values(
-            e["extra"],
-            lambda _k, v: F.struct(e["lsn"].alias("l"), v.alias("v")),
-        )
-        del_state = F.struct(
-            F.lit(None).cast("array<int>").alias("tokens"),
-            F.lit(None).cast("int").alias("n_tok"),
-            F.lit(None).cast("string").alias("source"),
-            F.lit(False).alias("t_mark"), F.lit(False).alias("s_mark"),
-            empty_fold.alias("fold"),
-            F.lit(None).cast("string").alias("origin"),
-            e["lsn"].alias("lsn"), e["epoch"].alias("epoch"),
-            F.lit(True).alias("deleted"),
-        )
-        reset_state = F.struct(
-            F.when(e["set_tokens"], e["tokens"]).alias("tokens"),
-            F.when(e["set_tokens"], e["n_tok"]).alias("n_tok"),
-            F.when(e["set_source"], e["source"]).alias("source"),
-            (~e["set_tokens"]).alias("t_mark"),
-            (~e["set_source"]).alias("s_mark"),
-            stamped.alias("fold"),
-            e["base_key"].alias("origin"),
-            e["lsn"].alias("lsn"), e["epoch"].alias("epoch"),
-            F.lit(False).alias("deleted"),
-        )
-        merged_fold = F.map_concat(
-            F.map_filter(
-                acc["fold"],
-                lambda fk, _v: ~F.map_contains_key(e["extra"], fk),
-            ),
-            stamped,
-        )
-        norm_state = F.struct(
-            F.when(e["set_tokens"], e["tokens"]).otherwise(acc["tokens"]).alias("tokens"),
-            F.when(e["set_tokens"], e["n_tok"]).otherwise(acc["n_tok"]).alias("n_tok"),
-            F.when(e["set_source"], e["source"]).otherwise(acc["source"]).alias("source"),
-            (acc["t_mark"] & ~e["set_tokens"]).alias("t_mark"),
-            (acc["s_mark"] & ~e["set_source"]).alias("s_mark"),
-            merged_fold.alias("fold"),
-            acc["origin"].alias("origin"),
-            e["lsn"].alias("lsn"), e["epoch"].alias("epoch"),
-            F.lit(False).alias("deleted"),
-        )
-        return (
-            F.when(e["deleted"], del_state)
-            .when(e["reset"], reset_state)
-            .otherwise(norm_state)
-        )
-
-    def finish(acc):
-        purged = F.map_filter(
-            acc["fold"],
-            lambda fk, sv: ~F.exists(
-                drops_arr, lambda d: (d["k"] == fk) & (sv["l"] < d["l"])
-            ),
-        )
-        extra_out = F.transform_values(purged, lambda _k, sv: sv["v"])
-        tomb = F.struct(
-            acc["lsn"].alias("lsn"), acc["epoch"].alias("epoch"),
-            F.lit(True).alias("deleted"),
-            F.lit(None).cast("array<int>").alias("tokens"),
-            F.lit(None).cast("int").alias("n_tok"),
-            F.lit(None).cast("string").alias("source"),
-            F.expr(_EMPTY_MAP).alias("extra"),
-            F.lit(False).alias("need_tokens"),
-            F.lit(False).alias("need_source"),
-            F.lit(False).alias("need_extra"),
-            F.lit(None).cast("string").alias("state_key"),
-        )
-        alive = F.struct(
-            acc["lsn"].alias("lsn"), acc["epoch"].alias("epoch"),
-            F.lit(False).alias("deleted"),
-            F.when(~acc["t_mark"], acc["tokens"]).alias("tokens"),
-            F.when(~acc["t_mark"], acc["n_tok"]).alias("n_tok"),
-            F.when(~acc["s_mark"], acc["source"]).alias("source"),
-            extra_out.alias("extra"),
-            acc["t_mark"].alias("need_tokens"),
-            acc["s_mark"].alias("need_source"),
-            acc["origin"].isNotNull().alias("need_extra"),
-            acc["origin"].alias("state_key"),
-        )
-        return F.when(acc["deleted"], tomb).otherwise(alive)
-
-    win = F.aggregate(F.col("evs"), init, merge, finish)
-    # explode(array(w)) puts a Generate barrier between the interpreted
-    # HOF and the per-field projection — CollapseProject would otherwise
-    # inline the whole fold once per selected column
-    return (
-        grouped.select(F.col("doc_id"), F.explode(F.array(win)).alias("w"))
-        .select(
-            F.col("w.lsn"), F.col("w.epoch"), F.col("doc_id"),
-            F.col("w.deleted"), F.col("w.tokens"), F.col("w.n_tok"),
-            F.col("w.source"), F.col("w.extra"), F.col("w.need_tokens"),
-            F.col("w.need_source"), F.col("w.need_extra"),
-            F.col("w.state_key"),
-        )
-    )
-
-
 def fetch_delta(
     spark: SparkSession,
     winners: DataFrame,
@@ -1604,7 +1090,6 @@ def fetch_delta_from_events(
     table,
     events: DataFrame,
     drops: list[tuple[int, str]],
-    winners_impl: str = "pandas",
     n_pk_change: int | None = None,
     n_events: int | None = None,
 ) -> DataFrame:
@@ -1614,13 +1099,6 @@ def fetch_delta_from_events(
     by table, and each table's slice (a cheap parquet re-read, which is
     why the slice needs no persist) flows through this per-table tail
     against that table's own resolved state.
-
-    winners_impl: "pandas" (default) = the Arrow-batched Python kernel;
-    "expr" = the same fold as a JVM Catalyst aggregate
-    (`fetch_winners_expr`) — measured slower on the 500k bench epoch
-    (3.3s vs 2.4s: interpreted HOF eval copies the whole fold
-    state per event where the kernel mutates dicts in place); kept as a
-    cross-validating twin, pinned equal by tests.
 
     A FUSED variant (round-0 answers emitted from the winners fold,
     pendings' keys re-folded after resolution) was built and measured
@@ -1638,12 +1116,9 @@ def fetch_delta_from_events(
         if n_events and n_events >= _TREE_MIN_EVENTS else None
     )
     events = resolve_cross_key(spark, events, drops, n_pk_change=n_pk_change)
-    if winners_impl == "expr":
-        winners = track_persist(fetch_winners_expr(events, drops))
-    else:
-        winners = track_persist(fetch_winners_auto(
-            events, drops, n_events=n_events, profile=profile,
-        ))
+    winners = track_persist(fetch_winners_auto(
+        events, drops, n_events=n_events, profile=profile,
+    ))
     state = table.read_resolved(spark)
     return fetch_delta(spark, winners, state, table.state()["registry"],
                        needy_bound=n_events)

@@ -13,9 +13,8 @@ Re-expresses the reference's Normalizer (source/oracle/Normalizer.java):
   per-row Python (reference uses flatMap, GoldenGateKafka.java:233-239).
 - T10 heartbeat/DDL drop (Normalizer.java:68-72): a plain filter.
 
-An Arrow-vectorized alternative (``impl='arrow'``) does the image merge
-in one pandas UDF batch — kept as the designated vectorized-UDF path of
-the north star and pinned equal to the expression path by tests.
+Every step is a column expression, so the whole pass stays in
+whole-stage codegen with no Python worker in the loop.
 
 Output schema: cdc_spark.schema.APPLY_SCHEMA
 (lsn, epoch, doc_id, deleted, tokens, n_tok, source, extra).
@@ -85,7 +84,7 @@ def _delete_struct(doc_id: Column) -> Column:
     )
 
 
-def normalize(changes: DataFrame, impl: str = "expr", keep: tuple = ()) -> DataFrame:
+def normalize(changes: DataFrame, keep: tuple = ()) -> DataFrame:
     """Raw change feed (CHANGE_SCHEMA) → apply-events (APPLY_SCHEMA).
 
     DDL rows are dropped (the pipeline collects them separately on the
@@ -95,20 +94,8 @@ def normalize(changes: DataFrame, impl: str = "expr", keep: tuple = ()) -> DataF
     (the multi-table router keeps `table` for routing).
     """
     dml = changes.filter(F.col("op_type").isin("I", "U", "D"))
-    if impl == "arrow":
-        from cdc_spark.functions.arrow import merged_image_arrow
-
-        merged = merged_image_arrow(dml)
-        tokens, n_tok, source, extra = (
-            F.col("_img.tokens"),
-            F.col("_img.n_tok"),
-            F.col("_img.source"),
-            F.col("_img.extra"),
-        )
-        dml = merged
-    else:
-        tokens, n_tok = _masked("tokens"), _masked("n_tok", mask_name="tokens")
-        source, extra = _masked("source"), _merged_extra()
+    tokens, n_tok = _masked("tokens"), _masked("n_tok", mask_name="tokens")
+    source, extra = _masked("source"), _merged_extra()
 
     pk_changed = (
         (F.col("op_type") == "U")

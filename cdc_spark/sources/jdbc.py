@@ -96,7 +96,6 @@ def jdbc_replay(
     outbox_table: str = "changes",
     driver: str | None = None,
     num_partitions: int = 4,
-    dedupe_mode: str = "agg",
     stop_after: int | None = None,
 ):
     """Polling driver: discover epochs in the outbox, apply each through
@@ -115,7 +114,7 @@ def jdbc_replay(
             spark, url, ep["lo"], ep["hi"], table=outbox_table,
             num_partitions=num_partitions, driver=driver,
         )
-        apply_batch(spark, t, batch, ep["epoch"], dedupe_mode=dedupe_mode)
+        apply_batch(spark, t, batch, ep["epoch"])
         done += 1
         if stop_after is not None and done >= stop_after:
             break

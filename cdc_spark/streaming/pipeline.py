@@ -25,6 +25,7 @@ the same `apply_batch`, so resume/replay semantics are identical.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 
@@ -40,6 +41,8 @@ __all__ = [
     "apply_batch", "apply_batch_multi", "replay", "replay_multi", "stream",
     "read_changes",
 ]
+
+_LOG = logging.getLogger(__name__)
 
 #: driver-side collect cap for the per-epoch DDL/unknown-op probe — DDL
 #: volume is tiny by design; a feed above this is hostile or corrupt
@@ -115,8 +118,6 @@ def apply_batch(
     table: TargetTable,
     batch: DataFrame,
     epoch: int,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
     lineage_dir: str | None = None,
     verify_redelivery: bool = False,
     images: str = "carry",
@@ -185,10 +186,7 @@ def apply_batch(
         # micro-batches (BENCH.md epoch-size sensitivity table). Fetch
         # mode always takes the full pre-pass (it needs the stats and
         # the drop-DDL list before touching state anyway).
-        return _apply_batch_observed(
-            spark, table, batch, epoch, t0,
-            dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
-        )
+        return _apply_batch_observed(spark, table, batch, epoch, t0)
 
     # -- phase 1: one pruned pass → per-partition lineage + DDL barrier
     # (the prefetch thread already paid this scan when `prepared`) -------
@@ -256,8 +254,8 @@ def apply_batch(
             delta = build_fetch_delta(spark, table, batch, drops,
                                       n_pk_change=n_pkc, n_events=n_dml)
     else:
-        events = normalize(batch, impl=normalize_impl)
-        deduped = lww_dedupe(events, key="doc_id", order="lsn", mode=dedupe_mode)
+        events = normalize(batch)
+        deduped = lww_dedupe(events, key="doc_id", order="lsn")
         delta = project_to_table(deduped, registry)
     n_events = int(sum(r["n_insert"] + r["n_update"] + r["n_delete"] + r["n_ddl"] for r in lineage))
     stats = {
@@ -265,10 +263,9 @@ def apply_batch(
         "min_lsn": min((r["min_lsn"] for r in lineage), default=None),
         "max_lsn": max((r["max_lsn"] for r in lineage), default=None),
     }
-    # the LWW dedupe aggregate already hash-partitions by doc_id ('agg'
-    # and 'salted' modes; 'window' too — Window.partitionBy shuffles by
-    # key; fetch mode's per-key replay groupBy likewise), so the
-    # bucketed delta write needs no second exchange
+    # the LWW dedupe aggregate already hash-partitions by doc_id (fetch
+    # mode's per-key replay exchange likewise), so the bucketed delta
+    # write needs no second exchange
     entry = table.commit_delta(delta, epoch, stats=stats, pre_partitioned=True)
     if images == "fetch":
         from cdc_spark.caching import release_persisted
@@ -312,8 +309,6 @@ def _apply_batch_observed(
     batch: DataFrame,
     epoch: int,
     t0: float,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
 ) -> dict:
     """apply_batch's single-job fast path: DDL via pruned probe, guard +
     stats via Observation on the delta-write job (see apply_batch)."""
@@ -373,8 +368,8 @@ def _apply_batch_observed(
             F.lit(0).cast("long"),
         ).alias("n_heartbeat"),
     )
-    events = normalize(observed, impl=normalize_impl)
-    deduped = lww_dedupe(events, key="doc_id", order="lsn", mode=dedupe_mode)
+    events = normalize(observed)
+    deduped = lww_dedupe(events, key="doc_id", order="lsn")
     delta = project_to_table(deduped, registry)
 
     metrics: dict = {}
@@ -415,8 +410,6 @@ def apply_batch_multi(
     router: TableRouter,
     batch: DataFrame,
     epoch: int,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
     lineage: bool = True,
     images: str = "carry",
 ) -> dict:
@@ -555,10 +548,7 @@ def apply_batch_multi(
         if images == "fetch":
             _stage_epoch_fetch_events(spark, batch, stage_dir)
         else:
-            _stage_epoch_winners(
-                spark, batch, stage_dir,
-                dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
-            )
+            _stage_epoch_winners(spark, batch, stage_dir)
         slices = _stage_slices(stage_dir)
     fetch_tails: list[str] = []
     for name in names:
@@ -656,8 +646,6 @@ def _stage_epoch_winners(
     spark: SparkSession,
     batch: DataFrame,
     stage_dir: str,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
 ) -> None:
     """ONE job: normalize the whole epoch, LWW-dedupe keyed by
     (table, doc_id), write the winners partitioned by table.
@@ -673,12 +661,8 @@ def _stage_epoch_winners(
 
     tmp = stage_dir + ".inprogress"
     _shutil.rmtree(tmp, ignore_errors=True)
-    events = normalize(batch, impl=normalize_impl, keep=("table",))
-    # auto (hot-key salting) is single-key; the composite (table, doc_id)
-    # key takes the agg formulation, which is already skew-proof via
-    # map-side partial aggregation — all modes are result-identical
-    mode = "agg" if dedupe_mode == "auto" else dedupe_mode
-    winners = lww_dedupe(events, key=["table", "doc_id"], order="lsn", mode=mode)
+    events = normalize(batch, keep=("table",))
+    winners = lww_dedupe(events, key=["table", "doc_id"], order="lsn")
     winners.write.mode("overwrite").partitionBy("table").parquet(tmp)
     os.makedirs(os.path.dirname(stage_dir), exist_ok=True)
     os.rename(tmp, stage_dir)
@@ -754,8 +738,6 @@ def replay_multi(
     spark: SparkSession,
     binlog_dir: str,
     root_path: str,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
     lineage: bool = True,
     stop_after: int | None = None,
     compact_every: int = 16,
@@ -797,12 +779,12 @@ def replay_multi(
             if images == "fetch":
                 _stage_epoch_fetch_events(spark, b, stage_dir)
             else:
-                _stage_epoch_winners(
-                    spark, b, stage_dir,
-                    dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
-                )
+                _stage_epoch_winners(spark, b, stage_dir)
         except Exception:
-            pass
+            _LOG.warning(
+                "pre-staging epoch %d failed; its apply stages it "
+                "synchronously", e, exc_info=True,
+            )
 
     done = 0
     fut = None
@@ -819,9 +801,7 @@ def replay_multi(
             ):
                 fut = pool.submit(_prestage, eps[i + 1])
             apply_batch_multi(
-                spark, router, batch, epoch,
-                dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
-                lineage=lineage, images=images,
+                spark, router, batch, epoch, lineage=lineage, images=images,
             )
             done += 1
             if stop_after is not None and done >= stop_after:
@@ -831,7 +811,7 @@ def replay_multi(
             try:
                 fut.result()
             except Exception:
-                pass
+                _LOG.warning("orphaned pre-stage failed", exc_info=True)
         if pool is not None:
             pool.shutdown(wait=False)
     return router
@@ -841,8 +821,6 @@ def replay(
     spark: SparkSession,
     binlog_dir: str,
     table_path: str,
-    dedupe_mode: str = "agg",
-    normalize_impl: str = "expr",
     lineage: bool = True,
     stop_after: int | None = None,
     compact_every: int = 16,
@@ -926,7 +904,6 @@ def replay(
             try:
                 res = apply_batch(
                     spark, table, batch, epoch,
-                    dedupe_mode=dedupe_mode, normalize_impl=normalize_impl,
                     lineage_dir=lineage_dir, images=images, prepared=prepared,
                 )
             finally:
@@ -1062,7 +1039,6 @@ def stream(
     binlog_dir: str,
     table_path: str,
     checkpoint_dir: str,
-    dedupe_mode: str = "agg",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     wire: str = "parquet",
@@ -1096,9 +1072,7 @@ def stream(
             for e, cur, _ in _epoch_gate(
                 spark, bdf, binlog_dir, staging_root_m, lambda _e: False
             ):
-                apply_batch_multi(
-                    spark, router, cur, e, dedupe_mode=dedupe_mode, images=images
-                )
+                apply_batch_multi(spark, router, cur, e, images=images)
 
         writer = (
             stream_reader(spark, binlog_dir, max_files_per_trigger, wire=wire)
@@ -1134,8 +1108,7 @@ def stream(
             # true redelivery but fails loudly if this delivery's contents
             # differ from what committed
             apply_batch(
-                spark, table, cur, e,
-                dedupe_mode=dedupe_mode, lineage_dir=lineage_dir,
+                spark, table, cur, e, lineage_dir=lineage_dir,
                 verify_redelivery=True, images=images,
             )
             sparse.add(e)

@@ -1,4 +1,4 @@
-"""LWW dedupe (O3): three strategies agree and pick the max-lsn row."""
+"""LWW dedupe (O3): the max-lsn row per key survives, delete winning a tie."""
 
 import pytest
 from pyspark.sql import Row
@@ -15,9 +15,18 @@ def events(spark):
     return spark.createDataFrame(rows)
 
 
-@pytest.mark.parametrize("mode", ["agg", "window", "salted"])
-def test_max_lsn_survives(spark, events, mode):
-    out = lww_dedupe(events, mode=mode).collect()
+def _py_lww(rows):
+    """Max-(lsn, deleted) row per doc_id, in plain Python."""
+    best = {}
+    for r in rows:
+        cur = best.get(r["doc_id"])
+        if cur is None or (r["lsn"], r["deleted"]) > (cur["lsn"], cur["deleted"]):
+            best[r["doc_id"]] = r
+    return best
+
+
+def test_max_lsn_survives(spark, events):
+    out = lww_dedupe(events).collect()
     assert len(out) == 7
     by_doc = {r["doc_id"]: r for r in out}
     for d, r in by_doc.items():
@@ -25,66 +34,42 @@ def test_max_lsn_survives(spark, events, mode):
         assert r["lsn"] == expect and r["payload"] == expect * 10
 
 
-def test_modes_agree_on_real_feed(spark, small_binlog):
+def test_real_feed_matches_python_lww(spark, small_binlog):
+    """Normalized events of a real feed (PK-change D+I halves included)
+    dedupe to exactly the max-lsn row per key computed in Python."""
     from cdc_spark.operators.normalize import normalize
     from cdc_spark.streaming.pipeline import read_changes
 
     ev = normalize(read_changes(spark, small_binlog))
-    results = {}
-    for mode in ("agg", "window", "salted"):
-        rows = lww_dedupe(ev, mode=mode).collect()
-        results[mode] = {r["doc_id"]: (r["lsn"], r["deleted"], tuple(r["tokens"] or ())) for r in rows}
-    assert results["agg"] == results["window"] == results["salted"]
+
+    def key(r):
+        return (r["lsn"], r["deleted"], tuple(r["tokens"] or ()))
+
+    got = {r["doc_id"]: key(r) for r in lww_dedupe(ev).collect()}
+    expect = {k: key(r) for k, r in _py_lww(ev.collect()).items()}
+    assert got == expect
 
 
 def test_columns_preserved(spark, events):
-    out = lww_dedupe(events, mode="agg")
+    out = lww_dedupe(events)
     assert out.columns == events.columns
 
 
-def test_auto_mode_salts_mega_hot_key_and_matches_agg(spark):
-    """Round-3 auto-salting (SURVEY §4.3): with one key holding >=30% of
-    the batch, `auto` must route it through the salted two-phase window
-    (plan shows BOTH partial and final row_number windows) and still pin
-    exactly equal to `agg`."""
+def test_mega_hot_key_matches_python_lww(spark):
+    """One key holding ~40% of the batch (the skew the map-side partial
+    aggregate absorbs) still resolves to the max-lsn row per key."""
     from pyspark.sql import functions as F
 
     n = 20_000
     df = spark.range(n).select(
         (F.col("id") + 1).alias("lsn"),
         F.lit(0).alias("epoch"),
-        # ~40% of rows share one mega-hot key
         F.when(F.col("id") % 5 <= 1, F.lit("HOT"))
         .otherwise(F.concat(F.lit("d"), (F.col("id") % 997).cast("string")))
         .alias("doc_id"),
         (F.col("id") % 13 == 0).alias("deleted"),
         (F.col("id") * 10).alias("payload"),
     )
-    auto = lww_dedupe(df, mode="auto")
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    # two-phase shape: two Window(row_number) operators (partial within
-    # (key, salt), final across salts) present for the hot branch
-    assert plan.count("row_number()") >= 2, plan
-    assert "Union" in plan  # hot (salted) ∪ cold (agg)
-    a = {r["doc_id"]: (r["lsn"], r["payload"]) for r in auto.collect()}
-    b = {r["doc_id"]: (r["lsn"], r["payload"])
-         for r in lww_dedupe(df, mode="agg").collect()}
-    assert a == b and a["HOT"][0] == n - 3  # last HOT lsn: id%5<=1
-
-
-def test_auto_mode_without_hot_keys_is_plain_agg(spark, events):
-    out = lww_dedupe(events, mode="auto")
-    # events fixture: 7 near-uniform keys out of 199 rows → every key is
-    # "hot" at the 5% threshold? 199/7 ≈ 14% each — all salted then.
-    # Use a genuinely uniform frame instead:
-    from pyspark.sql import functions as F
-
-    uni = spark.range(5000).select(
-        (F.col("id") + 1).alias("lsn"),
-        F.concat(F.lit("k"), (F.col("id") % 2500).cast("string")).alias("doc_id"),
-        F.col("id").alias("payload"),
-    )
-    plan = lww_dedupe(uni, mode="auto")._jdf.queryExecution().executedPlan().toString()
-    assert "row_number()" not in plan  # pure agg path, no salting
-    assert lww_dedupe(uni, mode="auto").count() == 2500
-    assert out.count() == 7  # and the skewed fixture still resolves right
+    got = {r["doc_id"]: (r["lsn"], r["payload"]) for r in lww_dedupe(df).collect()}
+    expect = {k: (r["lsn"], r["payload"]) for k, r in _py_lww(df.collect()).items()}
+    assert got == expect and got["HOT"][0] == n - 3  # last HOT lsn: id%5<=1

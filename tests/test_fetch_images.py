@@ -122,42 +122,35 @@ def test_fetch_state_join_is_broadcast(spark, workdir, keys_binlog):
     assert "SortMergeJoin" not in plan
 
 
-def test_winners_expr_equals_pandas_kernel(spark, workdir):
-    """The JVM Catalyst winner fold (fetch_winners_expr, the
-    cross-validating twin of the default Arrow-batched kernel)
-    must emit row-for-row what the Python kernel emits,
-    on a feed exercising every transition: PK-change resets, heavy
-    masks, deletes, extra-map folds, and drop-DDL purges."""
-    from cdc_spark.operators.fetch import (
-        fetch_winners, fetch_winners_expr, normalize_fetch, resolve_cross_key,
-    )
-    from cdc_spark.sources.binlog import read_changes
-
-    cfg = GenConfig(
-        n_events=4000, n_docs=250, events_per_epoch=4000, seed=91,
-        p_pk_change=0.3, p_missing_tokens=0.6, p_missing_source=0.6,
-        ddl_schedule=DDL_SCHEDULE_WITH_DROP,
-    )
-    d = f"{workdir}/binlog_winner_twins"
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        # every winners-fold transition: PK-change resets, heavy masks,
+        # deletes, extra-map folds, and a drop DDL purging folded values
+        GenConfig(
+            n_events=4000, n_docs=250, events_per_epoch=4000, seed=91,
+            p_pk_change=0.3, p_missing_tokens=0.6, p_missing_source=0.6,
+            ddl_schedule=DDL_SCHEDULE_WITH_DROP,
+        ),
+        # cross-key chains: half the updates re-key, so fields copy
+        # across keys through multi-hop chains inside the one epoch
+        GenConfig(
+            n_events=3000, n_docs=120, events_per_epoch=3000, seed=77,
+            p_pk_change=0.5, p_missing_tokens=0.8, p_missing_source=0.8,
+            ddl_schedule=DDL_SCHEDULE_WITH_DROP,
+        ),
+    ],
+    ids=["winners_fold", "cross_key_chains"],
+)
+def test_single_epoch_fetch_matches_oracle(spark, workdir, cfg):
+    """The whole feed in ONE epoch, so the winners fold and the
+    cross-key resolver see every transition (and the drop DDL's purge)
+    at once; the final table must equal the fetch-mode oracle."""
+    d = f"{workdir}/binlog_one_epoch_{cfg.seed}"
     write_binlog_keys(cfg, d)
-    batch = read_changes(spark, sorted(glob.glob(f"{d}/segment-*.parquet")))
-    drops = [(2400, "rating")]
-    events = resolve_cross_key(spark, normalize_fetch(batch), drops)
-
-    def norm(rows):
-        out = {}
-        for r in rows:
-            x = r.asDict()
-            x["tokens"] = list(x["tokens"]) if x["tokens"] is not None else None
-            x["extra"] = dict(x["extra"] or {})
-            out[x["doc_id"]] = x
-        return out
-
-    a = norm(fetch_winners(events, drops).collect())
-    b = norm(fetch_winners_expr(events, drops).collect())
-    assert set(a) == set(b)
-    diffs = [(k, a[k], b[k]) for k in a if a[k] != b[k]]
-    assert not diffs, f"{len(diffs)} diffs, first 3: {diffs[:3]}"
+    table = replay(spark, d, f"{workdir}/t_one_epoch_{cfg.seed}",
+                   images="fetch", lineage=False)
+    _assert_fetch_matches_oracle(spark, table, d)
 
 
 def test_winners_tree_equals_pandas_kernel(spark, workdir):
@@ -251,39 +244,6 @@ def test_winners_auto_dispatch(spark, workdir):
     # default gates on a small epoch: sequential route, same rows
     c = norm(fetch_winners_auto(events, [], n_events=6000).collect())
     assert a == c
-
-
-def test_resolve_cross_key_expr_equals_pandas(spark, workdir):
-    """The JVM answers fold (+ queried-key round filter) must resolve a
-    chain-heavy feed to exactly the event set the Python kernel path
-    produces — including multi-round value-dependency chains."""
-    from cdc_spark.operators.fetch import normalize_fetch, resolve_cross_key
-    from cdc_spark.sources.binlog import read_changes
-
-    cfg = GenConfig(
-        n_events=3000, n_docs=120, events_per_epoch=3000, seed=77,
-        p_pk_change=0.5, p_missing_tokens=0.8, p_missing_source=0.8,
-        ddl_schedule=(),
-    )
-    d = f"{workdir}/binlog_answers_twins"
-    write_binlog_keys(cfg, d)
-    batch = read_changes(spark, sorted(glob.glob(f"{d}/segment-*.parquet")))
-    drops = [(1800, "rating")]
-
-    def norm(df):
-        out = {}
-        for r in df.collect():
-            x = r.asDict()
-            x["tokens"] = list(x["tokens"]) if x["tokens"] is not None else None
-            x["extra"] = dict(x["extra"] or {})
-            out[(x["doc_id"], x["lsn"])] = x
-        return out
-
-    a = norm(resolve_cross_key(spark, normalize_fetch(batch), drops, impl="pandas"))
-    b = norm(resolve_cross_key(spark, normalize_fetch(batch), drops, impl="expr"))
-    assert set(a) == set(b)
-    diffs = [(k, a[k], b[k]) for k in a if a[k] != b[k]]
-    assert not diffs, f"{len(diffs)} diffs, first 3: {diffs[:3]}"
 
 
 def test_fetch_pending_base_key_with_no_inepoch_events(spark, workdir):

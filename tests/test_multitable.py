@@ -206,3 +206,35 @@ def test_sweep_stage_keeps_future_epochs(workdir):
     assert left == ["epoch=00000002.fetch", "epoch=00000002.fetch.inprogress"], left
     _sweep_stage(router, stage)  # no guard: everything unreferenced goes
     assert sorted(os.listdir(stage)) == [], os.listdir(stage)
+
+
+def test_prestage_failure_warns_and_falls_back(
+    spark, workdir, mt_binlog, mt_cfg, monkeypatch, caplog
+):
+    """A failed pre-stage of epoch N+1 is logged at WARNING with its
+    traceback, and that epoch's apply then stages it synchronously: the
+    tables still equal the oracle."""
+    import logging
+    import threading
+
+    from cdc_spark.streaming import pipeline
+
+    real = pipeline._stage_epoch_winners
+    failed = []
+
+    def fail_first_prestage(spark_, batch, stage_dir):
+        if threading.current_thread() is not threading.main_thread() and not failed:
+            failed.append(stage_dir)
+            raise RuntimeError("injected pre-stage failure")
+        return real(spark_, batch, stage_dir)
+
+    monkeypatch.setattr(pipeline, "_stage_epoch_winners", fail_first_prestage)
+    with caplog.at_level(logging.WARNING, logger=pipeline.__name__):
+        router = replay_multi(spark, mt_binlog, f"{workdir}/mt_prestage_fail",
+                              lineage=False)
+    assert len(failed) == 1
+    warned = [r for r in caplog.records
+              if r.name == pipeline.__name__ and r.levelno == logging.WARNING]
+    assert len(warned) == 1, [r.getMessage() for r in warned]
+    assert "injected pre-stage failure" in str(warned[0].exc_info[1])
+    _assert_router_matches_oracle(spark, router, mt_binlog, mt_cfg.tables)

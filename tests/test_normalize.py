@@ -1,8 +1,5 @@
 """Unit tests for operators.normalize (T7/T8/T10 semantics)."""
 
-import pytest
-from pyspark.sql import functions as F
-
 from cdc_spark.operators.normalize import normalize
 from cdc_spark.schema import CHANGE_SCHEMA
 
@@ -104,16 +101,3 @@ def test_extra_merge_after_wins(spark):
     )
     r = normalize(df).collect()[0]
     assert r["extra"] == {"q": "0.9", "r": "5"}
-
-
-@pytest.mark.parametrize("n", [500])
-def test_arrow_impl_equals_expr_impl(spark, small_binlog, n):
-    """The Arrow-vectorized merge kernel is pinned to the expression path."""
-    from cdc_spark.streaming.pipeline import read_changes
-
-    df = read_changes(spark, small_binlog).filter(F.col("lsn") <= n)
-    a = {(r["lsn"], r["doc_id"], r["deleted"]): r for r in normalize(df, impl="expr").collect()}
-    b = {(r["lsn"], r["doc_id"], r["deleted"]): r for r in normalize(df, impl="arrow").collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k] == b[k], f"divergence at {k}"

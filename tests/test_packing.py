@@ -4,6 +4,7 @@ SinglePartition window; broadcast eval-side probe)."""
 
 from __future__ import annotations
 
+import pathlib
 import re
 
 import pyspark.sql.functions as F
@@ -12,6 +13,8 @@ import pytest
 from cdc_spark.functions.contamination import contaminated
 from cdc_spark.functions.packing import pack_manifest
 from cdc_spark.plans.inspect import formatted_plan
+
+_REPO = str(pathlib.Path(__file__).resolve().parents[1])
 
 
 def _docs(spark, rows):
@@ -78,6 +81,39 @@ def test_pack_plan_has_no_single_partition_window(spark):
     assert "SinglePartition" not in plan
     assert "hashpartitioning(_bkt" in plan
     assert "BroadcastExchange" in plan
+
+
+def test_pack_ids_and_offsets_past_double_precision(spark):
+    """Bucket and sequence ids are exact long division. Ids near 2^62
+    and token offsets past 2^53 make a double quotient round across a
+    bucket or sequence boundary; the manifest must still equal the
+    Python packer's integer arithmetic, for any bucket count."""
+    from cdc_spark.functions.packing import emit_sequences
+
+    base = 2**62
+    sizes = [2**60 + 5, 2**59 + 3, 1, 2**58 - 1, 0, 11]
+    rows = [(base + 7 * i + i * i, n) for i, n in enumerate(sizes)]
+    seq_len = 3
+    expect, off = {}, 0
+    for doc_id, n in rows:
+        last = off + max(n, 1) - 1
+        expect[doc_id] = (n, off, off // seq_len, last // seq_len,
+                          last // seq_len - off // seq_len + 1)
+        off += n
+    for n_buckets in (1, 3, 64):
+        got = {
+            r["doc_id"]: (r["n_tok"], r["tok_offset"], r["seq_first"],
+                          r["seq_last"], r["n_seqs"])
+            for r in pack_manifest(_docs(spark, rows), seq_len,
+                                   n_buckets=n_buckets).collect()
+        }
+        assert got == expect, n_buckets
+    tok_rows = [(base + 3 * i, [i] * (i % 4)) for i in range(12)]
+    got = {
+        r["seq_id"]: list(r["tokens"])
+        for r in emit_sequences(_tok_docs(spark, tok_rows), 5, n_buckets=3).collect()
+    }
+    assert got == _py_pack(tok_rows, 5)
 
 
 def _tok_docs(spark, rows):
@@ -204,6 +240,37 @@ def test_pack_cli_packs_resolved_table(spark, workdir, small_binlog):
         for r in spark.read.parquet(out_dir).collect()
     }
     assert got == expect
+
+
+def test_pack_cli_refuses_duplicate_numeric_tails(spark, workdir):
+    """Two doc ids with the same numeric tail (doc7, doc007) have no
+    defined concat order: `job pack` must fail with a JSON error and
+    exit code 1 instead of packing them in an arbitrary order."""
+    import json
+    import subprocess
+    import sys
+
+    from cdc_spark.sinks.target import TargetTable
+
+    table_dir = f"{workdir}/pack_dup_table"
+    table = TargetTable(table_dir)
+    table.create_if_absent()
+    seed = spark.createDataFrame(
+        [("doc7", [1, 2], 2, "wiki"), ("doc007", [3], 1, "web"),
+         ("doc8", [4], 1, "web")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    ).select("*", F.lit(0).cast("long").alias("last_lsn"),
+             F.lit(False).alias("deleted"))
+    table.commit_delta(seed, epoch=-1, stats=None)
+    res = subprocess.run(
+        [sys.executable, "-m", "cdc_spark.job", "pack",
+         "--table", table_dir, "--out", f"{workdir}/pack_dup_out",
+         "--seq-len", "4", "--master", "local[2]"],
+        capture_output=True, text=True, cwd=_REPO, timeout=600,
+    )
+    assert res.returncode == 1, res.stdout + res.stderr[-2000:]
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert out == {"error": "duplicate numeric doc_id tail", "rows": 1}
 
 
 def _texts(spark, rows):

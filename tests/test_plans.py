@@ -45,17 +45,9 @@ def test_lww_agg_partial_aggregates_one_shuffle(spark, small_binlog):
     """The 100-TB dedupe path: map-side partial max_by, exactly one
     shuffle — hot keys reduce locally before hitting the wire."""
     ev = normalize(read_changes(spark, small_binlog))
-    dd = lww_dedupe(ev, mode="agg")
+    dd = lww_dedupe(ev)
     assert has_partial_aggregate(dd)
     assert count_exchanges(dd) == 1
-
-
-def test_window_mode_shuffles_without_partial_reduce(spark, small_binlog):
-    """Documents WHY 'agg' is the default: the window formulation is a
-    plain shuffle+sort with no map-side reduction."""
-    ev = normalize(read_changes(spark, small_binlog))
-    dd = lww_dedupe(ev, mode="window")
-    assert not has_partial_aggregate(dd)
 
 
 def test_minhash_partial_aggregates(spark):

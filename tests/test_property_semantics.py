@@ -105,7 +105,7 @@ def test_engine_matches_sequential_applier(spark, ops, data):
     df = spark.createDataFrame(rows, CHANGE_SCHEMA)
     events = normalize(df)
     resolved = (
-        lww_dedupe(events, key="doc_id", order="lsn", mode="agg")
+        lww_dedupe(events, key="doc_id", order="lsn")
         .filter(~F.col("deleted"))
         .collect()
     )

@@ -2,8 +2,6 @@
 engine's final table must equal the single-threaded oracle per-row
 (token-array equality — the BASELINE.json input_hint invariant)."""
 
-import pytest
-
 from cdc_spark.genlog import GenConfig, write_binlog
 from cdc_spark.streaming.pipeline import replay
 from tests.conftest import assert_matches_oracle
@@ -11,21 +9,6 @@ from tests.conftest import assert_matches_oracle
 
 def test_golden_replay_default(spark, small_binlog, workdir):
     table = replay(spark, small_binlog, f"{workdir}/t_golden", compact_every=3)
-    assert_matches_oracle(spark, table, small_binlog)
-
-
-@pytest.mark.parametrize("dedupe_mode", ["window", "salted"])
-def test_golden_replay_dedupe_modes(spark, small_binlog, workdir, dedupe_mode):
-    table = replay(
-        spark, small_binlog, f"{workdir}/t_{dedupe_mode}", dedupe_mode=dedupe_mode
-    )
-    assert_matches_oracle(spark, table, small_binlog)
-
-
-def test_golden_replay_arrow_normalize(spark, small_binlog, workdir):
-    table = replay(
-        spark, small_binlog, f"{workdir}/t_arrow", normalize_impl="arrow"
-    )
     assert_matches_oracle(spark, table, small_binlog)
 
 
@@ -45,7 +28,7 @@ def test_golden_replay_heavy_skew(spark, workdir):
     )
     d = f"{workdir}/binlog_skew"
     write_binlog(cfg, d)
-    table = replay(spark, d, f"{workdir}/t_skew", dedupe_mode="salted")
+    table = replay(spark, d, f"{workdir}/t_skew")
     assert_matches_oracle(spark, table, d)
 
 

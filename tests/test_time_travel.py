@@ -5,10 +5,14 @@ answering wrong."""
 
 from __future__ import annotations
 
+import pathlib
+
 import pytest
 
 from cdc_spark.sinks.target import TargetTable
 from cdc_spark.streaming.pipeline import replay
+
+_REPO = str(pathlib.Path(__file__).resolve().parents[1])
 
 
 def _rows(df):
@@ -127,6 +131,27 @@ def test_changelog_empty_and_expired(spark, workdir, small_binlog):
     table.compact(spark)
     with pytest.raises(FileNotFoundError, match="consumed"):
         table.read_changes_between(spark, v_first).collect()
+
+
+def test_changes_cli_reports_version_zero(spark, workdir, small_binlog):
+    """`job changes --to-version 0` names version 0 as the window end,
+    not the head version (0 is a version, not "unset")."""
+    import json
+    import subprocess
+    import sys
+
+    d = f"{workdir}/cl_table_v0"
+    table = replay(spark, small_binlog, d, lineage=False)
+    assert table.history()[0]["version"] == 0
+    assert table.state()["version"] > 0
+    res = subprocess.run(
+        [sys.executable, "-m", "cdc_spark.job", "changes", "--table", d,
+         "--from-version", "0", "--to-version", "0", "--master", "local[2]"],
+        capture_output=True, text=True, cwd=_REPO, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert out["to_version"] == 0 and out["rows"] == 0
 
 
 def test_changelog_chains_to_downstream_replica(spark, workdir):

@@ -2,7 +2,10 @@
 queries() entry on Spark and its oracle_sql() twin on DuckDB at the
 given sf dir, compare row count, column names, and order-insensitive
 values (with small float tolerance reporting so near-misses are visible
-before the driver's exact hash sees them)."""
+before the driver's exact hash sees them).
+
+An entry with no DuckDB twin passes rows-only, unless it has a
+`matches_oracle` column holding anything but true, which fails it."""
 
 from __future__ import annotations
 
@@ -54,6 +57,16 @@ def main() -> int:
         finally:
             release_persisted()  # query-scoped self-join caches
         if name not in oracles:
+            # a rows-only entry that carries its own oracle digest must
+            # read uniformly true: a false is a wrong answer, not a pass
+            if "matches_oracle" in scols:
+                i = scols.index("matches_oracle")
+                n_false = sum(1 for r in srows if r[i] is not True)
+                if n_false:
+                    print(f"FAIL  {name}: matches_oracle not true in "
+                          f"{n_false} of {len(srows)} rows")
+                    failures += 1
+                    continue
             print(f"ok*   {name}: rows-only ({len(srows)} rows, {time.monotonic()-t0:.1f}s)")
             continue
         try:
