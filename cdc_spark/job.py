@@ -205,61 +205,47 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(master=args.master, shuffle_partitions=args.shuffle_partitions)
     try:
-        if args.cmd in ("replay", "stream") and args.multi_table:
-            t0 = time.monotonic()
-            if args.cmd == "replay":
-                from cdc_spark.streaming.pipeline import replay_multi
+        if args.cmd in ("replay", "stream"):
+            from cdc_spark.streaming.pipeline import replay, replay_multi, stream
 
-                router = replay_multi(
+            t0 = time.monotonic()
+            epoch_stats: list = []
+            if args.cmd == "stream":
+                target = stream(spark, args.binlog, args.table, checkpoint_dir=args.checkpoint,
+                                max_files_per_trigger=args.max_files_per_trigger,
+                                wire=args.wire, multi=args.multi_table, images=args.images,
+                                compact_budget=args.compact_budget)
+            elif args.multi_table:
+                target = replay_multi(
                     spark, args.binlog, args.table,
                     compact_every=args.compact_every, wire=args.wire,
                     images=args.images,
                 )
             else:
-                from cdc_spark.streaming.pipeline import stream
-
-                router = stream(spark, args.binlog, args.table,
-                                checkpoint_dir=args.checkpoint,
-                                max_files_per_trigger=args.max_files_per_trigger,
-                                wire=args.wire, multi=True, images=args.images)
-            out = {}
-            for name in router.names():
-                t = router.get(name)
-                out[name] = {
-                    "final_rows": t.read_resolved(spark).count(),
-                    "version": t.state()["version"],
-                    "registry": t.state()["registry"],
-                }
-            print(json.dumps({"seconds": round(time.monotonic() - t0, 2),
-                              "tables": out}))
-            return 0
-
-        if args.cmd in ("replay", "stream"):
-            t0 = time.monotonic()
-            epoch_stats: list = []
-            if args.cmd == "replay":
-                from cdc_spark.streaming.pipeline import replay
-
-                table = replay(
+                target = replay(
                     spark, args.binlog, args.table,
                     compact_every=args.compact_every, stats_out=epoch_stats,
                     wire=args.wire, lineage=not args.no_lineage,
                     images=args.images, compact_budget=args.compact_budget,
                 )
-            else:
-                from cdc_spark.streaming.pipeline import stream
-
-                table = stream(spark, args.binlog, args.table, checkpoint_dir=args.checkpoint,
-                               max_files_per_trigger=args.max_files_per_trigger,
-                               wire=args.wire, images=args.images,
-                               compact_budget=args.compact_budget)
-            dt = time.monotonic() - t0
-            st = table.state()
-            n_rows = table.read_resolved(spark).count()
+            dt = round(time.monotonic() - t0, 2)
+            if args.multi_table:
+                out = {}
+                for name in target.names():
+                    t = target.get(name)
+                    out[name] = {
+                        "final_rows": t.read_resolved(spark).count(),
+                        "version": t.state()["version"],
+                        "registry": t.state()["registry"],
+                    }
+                print(json.dumps({"seconds": dt, "tables": out}))
+                return 0
+            st = target.state()
+            n_rows = target.read_resolved(spark).count()
             print(json.dumps({
                 "epochs_applied": st.get("epochs_applied", len(st["epochs"])),
                 "version": st["version"],
-                "final_rows": n_rows, "seconds": round(dt, 2),
+                "final_rows": n_rows, "seconds": dt,
                 # filtered identically so the two lists stay positionally
                 # aligned when some epochs no-op on a resumed replay
                 "epoch_seconds": [round(r["seconds"], 2) for r in epoch_stats if "seconds" in r],

@@ -1108,20 +1108,24 @@ def fetch_delta_from_events(
     filter already minimizes the round-0 fold; the fused pass's
     tainted-key patch fold and larger persisted frame offset the saved
     fold, so the simpler unfused pipeline stays."""
-    # profile the PRE-resolve frame (persisted by build_fetch_delta;
-    # a pruned parquet slice re-read in the multi-table tail) — see
-    # fetch_winners_auto's docstring for the measured why
+    winners = track_persist(_winners(spark, events, drops, n_pk_change, n_events))
+    state = table.read_resolved(spark)
+    return fetch_delta(spark, winners, state, table.state()["registry"],
+                       needy_bound=n_events)
+
+
+def _winners(spark: SparkSession, events: DataFrame, drops: list[tuple[int, str]],
+             n_pk_change: int | None, n_events: int | None) -> DataFrame:
+    """Cross-key resolve → per-key replay over normalized fetch events.
+    The key profile samples the PRE-resolve frame (persisted by the
+    caller, or a pruned parquet slice re-read in the multi-table tail) —
+    see fetch_winners_auto's docstring for the measured why."""
     profile = (
         sample_key_profile(events, n_events)
         if n_events and n_events >= _TREE_MIN_EVENTS else None
     )
-    events = resolve_cross_key(spark, events, drops, n_pk_change=n_pk_change)
-    winners = track_persist(fetch_winners_auto(
-        events, drops, n_events=n_events, profile=profile,
-    ))
-    state = table.read_resolved(spark)
-    return fetch_delta(spark, winners, state, table.state()["registry"],
-                       needy_bound=n_events)
+    resolved = resolve_cross_key(spark, events, drops, n_pk_change=n_pk_change)
+    return fetch_winners_auto(resolved, drops, n_events=n_events, profile=profile)
 
 
 def prepare_fetch_epoch(
@@ -1150,15 +1154,7 @@ def prepare_fetch_epoch(
     events = normalize_fetch(batch).persist()
     winners = None
     try:
-        profile = (
-            sample_key_profile(events, n_events)
-            if n_events and n_events >= _TREE_MIN_EVENTS else None
-        )
-        resolved = resolve_cross_key(spark, events, drops,
-                                     n_pk_change=n_pk_change)
-        winners = fetch_winners_auto(
-            resolved, drops, n_events=n_events, profile=profile,
-        ).persist()
+        winners = _winners(spark, events, drops, n_pk_change, n_events).persist()
         n_needy = (
             winners.filter(
                 F.col("need_tokens") | F.col("need_source") | F.col("need_extra")
@@ -1173,7 +1169,8 @@ def prepare_fetch_epoch(
                 try:
                     df.unpersist()
                 except Exception:
-                    pass
+                    _LOG.warning("releasing a prepare_fetch_epoch cache failed",
+                                 exc_info=True)
         raise
     return {
         "winners": winners,

@@ -53,6 +53,7 @@ back to the full hash-aggregate resolve.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -681,16 +682,21 @@ class TargetTable:
 
         new_eps = sorted(e for e in s_to if not _applied_from(e))
         if f_to is not None and w_to > _NEG_INF:
-            lo = w_from + 1 if (f_from is not None and f_from <= f_to) else f_to
-            folded = [
-                e for e in range(max(f_to, lo), w_to + 1) if not _applied_from(e)
-            ]
-            if folded:
+            # folded = [f_to, w_to] - [f_from, w_from] - s_from as intervals:
+            # a legacy floor is -inf, so count the span, never walk it
+            spans = [(f_to, w_to)]
+            if f_from is not None and f_from <= w_from:
+                spans = [(f_to, min(w_to, f_from - 1)), (max(f_to, w_from + 1), w_to)]
+            spans = [(a, b) for a, b in spans if a <= b]
+            n_folded = sum(b - a + 1 - sum(a <= e <= b for e in s_from) for a, b in spans)
+            if n_folded:
+                first = list(itertools.islice(
+                    (e for a, b in spans for e in range(a, b + 1) if e not in s_from), 5))
                 raise FileNotFoundError(
                     f"{self.path}: incremental read {v_from}->"
-                    f"{st_to['version']} spans {len(folded)} epoch(s) "
+                    f"{st_to['version']} spans {n_folded} epoch(s) "
                     f"already consumed by compaction (folded into the "
-                    f"watermark): {folded[:5]}; the changelog is readable "
+                    f"watermark): {first}; the changelog is readable "
                     f"back to the last compaction"
                 )
         reg = st_to["registry"]
@@ -765,34 +771,7 @@ class TargetTable:
         df.write.mode("overwrite").parquet(outdir)
         if callable(stats):
             stats = stats()
-        entry = self._commit(
-            {
-                **st,
-                "version": st["version"] + 1,
-                "kind": "delta",
-                "delta_epochs": st["delta_epochs"] + [epoch],
-                # measured ONCE here by the writer; read_resolved's
-                # fast-path volume check reads the journal instead of
-                # walking the filesystem per read
-                "delta_bytes": {**st.get("delta_bytes", {}),
-                                str(epoch): self._dir_bytes(outdir)},
-                # resolved via applied_epochs so a legacy journal (no
-                # epoch_floor key) keeps its -inf floor instead of
-                # un-applying its folded watermark range
-                "epoch_floor": (lambda f: epoch if f is None else min(f, epoch))(
-                    self.applied_epochs(st)[0]
-                ),
-                "epochs": sorted(set(st["epochs"]) | {epoch}),
-                "epochs_applied": st.get("epochs_applied", 0) + 1,
-                "epoch_stats": {**st.get("epoch_stats", {}),
-                                **({str(epoch): stats} if stats else {})},
-            }
-        )
-        if len(entry["delta_epochs"]) >= self.compact_every:
-            entry = self._compact_to(
-                df.sparkSession, entry, budget=self.inline_compact_budget
-            )
-        return entry
+        return self._commit_epoch(df.sparkSession, st, epoch, outdir, stats)
 
     def commit_delta_ref(
         self, spark: SparkSession, epoch: int, ref_path: str, stats: dict | None = None,
@@ -810,15 +789,29 @@ class TargetTable:
         st = self.state()
         if self.has_epoch(epoch, st):
             return None
+        return self._commit_epoch(spark, st, epoch, ref_path, stats, ref=True)
+
+    def _commit_epoch(self, spark: SparkSession, st: dict, epoch: int, data_dir: str,
+                      stats: dict | None, ref: bool = False) -> dict:
+        """Journal one epoch whose apply-rows sit in `data_dir` (its own
+        delta dir, or a referenced staged slice when `ref`), then run the
+        inline compaction tick once enough deltas piled up."""
+        refs = {"delta_refs": {**st.get("delta_refs", {}), str(epoch): data_dir}}
         entry = self._commit(
             {
                 **st,
                 "version": st["version"] + 1,
                 "kind": "delta",
                 "delta_epochs": st["delta_epochs"] + [epoch],
-                "delta_refs": {**st.get("delta_refs", {}), str(epoch): ref_path},
+                **(refs if ref else {}),
+                # measured ONCE here by the writer; read_resolved's
+                # fast-path volume check reads the journal instead of
+                # walking the filesystem per read
                 "delta_bytes": {**st.get("delta_bytes", {}),
-                                str(epoch): self._dir_bytes(ref_path)},
+                                str(epoch): self._dir_bytes(data_dir)},
+                # resolved via applied_epochs so a legacy journal (no
+                # epoch_floor key) keeps its -inf floor instead of
+                # un-applying its folded watermark range
                 "epoch_floor": (lambda f: epoch if f is None else min(f, epoch))(
                     self.applied_epochs(st)[0]
                 ),
@@ -829,9 +822,7 @@ class TargetTable:
             }
         )
         if len(entry["delta_epochs"]) >= self.compact_every:
-            entry = self._compact_to(
-                spark, entry, budget=self.inline_compact_budget
-            )
+            entry = self._compact_to(spark, entry, budget=self.inline_compact_budget)
         return entry
 
     # -- compaction ------------------------------------------------------------

@@ -59,6 +59,25 @@ def rows_equal(oracle_rows: list[dict], engine_rows: list[dict]) -> list[str]:
     return diffs
 
 
+def jobs_during(spark, fn) -> int:
+    """Spark jobs launched by fn(), via the sequential job-id counter
+    (probe jobs bracket the run; their own 2 jobs are subtracted)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe() -> int:
+        sc.setJobGroup("job_probe", "job_probe")
+        spark.range(1).count()
+        ids = tracker.getJobIdsForGroup("job_probe")
+        sc.setJobGroup(None, None)
+        return max(ids)
+
+    before = probe()
+    fn()
+    after = probe()
+    return after - before - 1
+
+
 def assert_matches_oracle(spark, table, binlog_dir):
     state, reg = oracle.replay(f"{binlog_dir}/segment-*.parquet")
     expected = oracle.final_rows(state, reg)

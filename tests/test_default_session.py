@@ -65,3 +65,17 @@ def test_full_replay_under_default_dedup_policy(spark, small_binlog, workdir, sm
             spark, small_binlog, f"{workdir}/table_default_conf", stop_after=2,
         )
         assert table.read_resolved(spark).count() > 0
+
+
+def test_default_driver_heap_is_a_quarter_of_the_host():
+    """Unset CDC_SPARK_DRIVER_MEM sizes the pinned heap from the host:
+    a quarter of physical memory in whole GiB, clamped to 1..8g."""
+    from cdc_spark.session import driver_mem_for
+
+    gib = 2**30
+    assert driver_mem_for(int(15.7 * gib)) == "3g"
+    assert driver_mem_for(16 * gib) == "4g"
+    assert driver_mem_for(2 * gib) == "1g"
+    assert driver_mem_for(512 * 2**20) == "1g"
+    assert driver_mem_for(64 * gib) == "8g"
+    assert driver_mem_for(1024 * gib) == "8g"

@@ -408,3 +408,39 @@ def test_replay_failure_drains_prefetch(spark, workdir):
         replay(spark, d, f"{workdir}/table_drain", images="fetch")
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after <= before, (before, after)
+
+
+def test_lookahead_failure_warns_and_applies_synchronously(
+    spark, workdir, monkeypatch, caplog
+):
+    """A failed look-ahead prepare of epoch N+1 is advisory: it logs one
+    WARNING with its traceback, that epoch's apply then prepares it
+    synchronously, and the table still equals the fetch oracle."""
+    import logging
+    import threading
+
+    from cdc_spark.operators import fetch
+
+    cfg = GenConfig(n_events=3000, n_docs=200, events_per_epoch=1000,
+                    seed=17, ddl_schedule=())
+    d = f"{workdir}/binlog_lookahead_fail"
+    write_binlog_keys(cfg, d)
+    real = fetch.prepare_fetch_epoch
+    failed = []
+
+    def fail_first_lookahead(*args, **kwargs):
+        if threading.current_thread() is not threading.main_thread() and not failed:
+            failed.append(True)
+            raise RuntimeError("injected look-ahead failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(fetch, "prepare_fetch_epoch", fail_first_lookahead)
+    with caplog.at_level(logging.WARNING, logger="cdc_spark"):
+        table = replay(spark, d, f"{workdir}/t_lookahead_fail", images="fetch",
+                       lineage=False)
+    assert failed == [True]
+    warned = [r for r in caplog.records
+              if r.name.startswith("cdc_spark") and r.levelno >= logging.WARNING]
+    assert len(warned) == 1, [r.getMessage() for r in warned]
+    assert "injected look-ahead failure" in str(warned[0].exc_info[1])
+    _assert_fetch_matches_oracle(spark, table, d)

@@ -13,7 +13,7 @@ from cdc_spark.genlog import GenConfig, write_binlog
 from cdc_spark.sinks.target import TableRouter
 from cdc_spark.streaming.pipeline import replay_multi
 
-from conftest import rows_equal
+from conftest import jobs_during, rows_equal
 
 MT_SCHEDULE = (
     (0.15, "add_column", {"name": "quality", "type": "float"}, 0),
@@ -138,32 +138,13 @@ def test_multi_stream_blocks_later_epoch_behind_incomplete_one(spark, workdir, m
     _assert_router_matches_oracle(spark, router, full, mt_cfg.tables)
 
 
-def _jobs_during(spark, fn):
-    """Spark jobs launched by fn(), via the sequential job-id counter
-    (probe jobs bracket the run; their own 2 jobs are subtracted)."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def probe() -> int:
-        sc.setJobGroup("job_probe", "job_probe")
-        spark.range(1).count()
-        ids = tracker.getJobIdsForGroup("job_probe")
-        sc.setJobGroup(None, None)
-        return max(ids)
-
-    before = probe()
-    fn()
-    after = probe()
-    return after - before - 1
-
-
 def test_jobs_per_epoch_independent_of_table_count(spark, workdir):
     """Round-3 single-pass routing pin: applying one epoch runs the SAME
     number of Spark jobs for 2 routed tables as for 8 — the feed is
     never re-scanned per table (per-table commits are journal-only
     references into one staged write)."""
     from cdc_spark.sources.binlog import list_segments, read_changes
-    from cdc_spark.streaming.pipeline import apply_batch_multi
+    from cdc_spark.streaming.pipeline import apply_batch
 
     counts = {}
     for n_tables in (2, 8):
@@ -176,9 +157,8 @@ def test_jobs_per_epoch_independent_of_table_count(spark, workdir):
         )
         router = TableRouter(f"{workdir}/jobs_root_{n_tables}")
         batch = read_changes(spark, list_segments(d)[0])
-        counts[n_tables] = _jobs_during(
-            spark,
-            lambda: apply_batch_multi(spark, router, batch, 0, lineage=False),
+        counts[n_tables] = jobs_during(
+            spark, lambda: apply_batch(spark, router, batch, 0),
         )
         assert len(router.names()) == n_tables
     assert counts[2] == counts[8], counts

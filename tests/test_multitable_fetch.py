@@ -111,13 +111,13 @@ def test_multi_fetch_stages_feed_once(spark, workdir, mtk_binlog):
 
     from cdc_spark.sinks.target import TableRouter
     from cdc_spark.sources.binlog import list_segments, read_changes
-    from cdc_spark.streaming.pipeline import apply_batch_multi
+    from cdc_spark.streaming.pipeline import apply_batch
 
     root = f"{workdir}/mtk_stage_probe"
     router = TableRouter(root)
     segs = list_segments(mtk_binlog)
     batch = read_changes(spark, segs[0])
-    apply_batch_multi(spark, router, batch, 0, images="fetch", lineage=False)
+    apply_batch(spark, router, batch, 0, images="fetch")
     # the fetch stage dir was created (and swept after both commits)
     assert not os.path.isdir(
         os.path.join(root, "_mt_stage", "epoch=00000000.fetch")

@@ -133,6 +133,45 @@ def test_changelog_empty_and_expired(spark, workdir, small_binlog):
         table.read_changes_between(spark, v_first).collect()
 
 
+def test_legacy_journal_changelog_refuses_without_walking_the_floor(
+    spark, workdir, small_binlog
+):
+    """A legacy journal (no `epoch_floor` key) reads its folded floor as
+    -inf; a changelog window from the create version must still refuse
+    at once with "consumed by compaction" instead of walking 10^18
+    epochs. The read runs in a child process under a 2 GiB address-space
+    limit and a 60 s timeout: an implementation that lists the span
+    would otherwise grow until the host runs out of memory."""
+    import glob
+    import json
+    import subprocess
+    import sys
+
+    d = f"{workdir}/cl_legacy"
+    replay(spark, small_binlog, d, lineage=False, compact_every=2)
+    for p in glob.glob(f"{d}/_journal/v*.json"):
+        with open(p) as f:
+            entry = json.load(f)
+        entry.pop("epoch_floor", None)
+        with open(p, "w") as f:
+            json.dump(entry, f)
+    assert TargetTable(d).applied_epochs()[0] < -10**17  # legacy -inf floor
+    # the refusal comes before any Spark work, so no session is needed
+    code = (
+        "import resource, sys\n"
+        "resource.setrlimit(resource.RLIMIT_AS, (2 << 30, 2 << 30))\n"
+        "from cdc_spark.sinks.target import TargetTable\n"
+        "try:\n"
+        "    TargetTable(sys.argv[1]).read_changes_between(None, 0)\n"
+        "except FileNotFoundError as e:\n"
+        "    print('refused:', e)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code, d], cwd=_REPO,
+                         capture_output=True, text=True, timeout=60)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "refused:" in out.stdout and "consumed by compaction" in out.stdout
+
+
 def test_changes_cli_reports_version_zero(spark, workdir, small_binlog):
     """`job changes --to-version 0` names version 0 as the window end,
     not the head version (0 is a version, not "unset")."""
