@@ -59,10 +59,6 @@ def main(argv: list[str] | None = None) -> int:
         r.add_argument("--binlog", required=True)
         r.add_argument("--table", required=True)
         r.add_argument("--compact-every", type=int, default=16)
-        r.add_argument("--compact-budget", type=int, default=None,
-                       help="max dirty buckets an inline compaction tick "
-                       "may rewrite (rest carried; `compact` CLI is the "
-                       "full maintenance pass). Default: unbudgeted")
         r.add_argument("--wire", default="parquet", choices=["parquet", "avro"],
                        help="segment payload: typed parquet rows, or Avro "
                             "single-object frames (T6; see avro-encode)")
@@ -214,7 +210,7 @@ def main(argv: list[str] | None = None) -> int:
                 target = stream(spark, args.binlog, args.table, checkpoint_dir=args.checkpoint,
                                 max_files_per_trigger=args.max_files_per_trigger,
                                 wire=args.wire, multi=args.multi_table, images=args.images,
-                                compact_budget=args.compact_budget)
+                                compact_every=args.compact_every)
             elif args.multi_table:
                 target = replay_multi(
                     spark, args.binlog, args.table,
@@ -226,7 +222,7 @@ def main(argv: list[str] | None = None) -> int:
                     spark, args.binlog, args.table,
                     compact_every=args.compact_every, stats_out=epoch_stats,
                     wire=args.wire, lineage=not args.no_lineage,
-                    images=args.images, compact_budget=args.compact_budget,
+                    images=args.images,
                 )
             dt = round(time.monotonic() - t0, 2)
             if args.multi_table:

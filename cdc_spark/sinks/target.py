@@ -55,6 +55,7 @@ from __future__ import annotations
 
 import itertools
 import json
+import logging
 import os
 import shutil
 import uuid
@@ -73,6 +74,20 @@ BASE_FIELDS = [
 ]
 
 _NEG_INF = -(10**18)
+
+_LOG = logging.getLogger(__name__)
+
+
+def _remove(fn, path: str) -> None:
+    """Cleanup after the commit point: the commit stands whatever
+    happens here. A path already gone was taken by a concurrent remover;
+    any other failure leaks the path, so it is logged, never swallowed."""
+    try:
+        fn(path)
+    except FileNotFoundError:
+        pass
+    except OSError:
+        _LOG.warning("%s: could not remove; it stays on disk", path, exc_info=True)
 
 
 def norm_registry(reg: list[dict]) -> list[dict]:
@@ -120,19 +135,11 @@ class TargetTable:
         buckets: int = 32,
         resolve_join_max_bytes: int = 64 << 20,
         journal_keep: int = 64,
-        inline_compact_budget: int | None = None,
     ):
         self.path = path
         self.journal_dir = os.path.join(path, "_journal")
         self.compact_every = compact_every
         self.buckets = buckets
-        #: max dirty buckets an INLINE (commit-path) compaction tick may
-        #: rewrite; the rest of the delta rows are carried to the next
-        #: tick (see _compact_to). None = unbudgeted (default). The
-        #: `compact` CLI/maintenance entry point always runs the full
-        #: pass — the Iceberg split between commit-path and
-        #: rewrite_data_files maintenance.
-        self.inline_compact_budget = inline_compact_budget
         #: journal versions retained past compaction (Iceberg
         #: expireSnapshots analogue). Without retention the journal dir
         #: grows one file per commit FOREVER and `state()` lists it every
@@ -445,8 +452,9 @@ class TargetTable:
         )
 
     def _carry_dirs(self, st: dict) -> list[str]:
-        """Delta rows a BUDGETED compaction tick did not consume (phys
-        columns, written by _compact_to; consumed by a later tick)."""
+        """Legacy carry dirs: delta rows (phys columns) that a budgeted
+        compaction tick of an older engine left unconsumed. Read with the
+        deltas until the next compaction consumes them."""
         return self._require_dirs(list(st.get("carry_deltas", [])), "carry-delta")
 
     def _require_dirs(self, paths: list[str], kind: str) -> list[str]:
@@ -539,12 +547,6 @@ class TargetTable:
                 )
                 s = self._dir_bytes(p)
             total += s
-        carries = st.get("carry_deltas") or []
-        if carries:
-            cb = st.get("carry_bytes")
-            total += cb if cb is not None else sum(
-                self._dir_bytes(p) for p in carries
-            )
         return total
 
     def _fast_resolve_ok(self, st: dict) -> bool:
@@ -552,27 +554,11 @@ class TargetTable:
         delta row's lsn exceeds every base row's lsn (then a delta winner
         unconditionally supersedes its base row). Steady-state streaming
         always satisfies this; a late epoch delivered below the
-        compaction watermark, or an epoch committed without stats,
-        falls back to the full aggregate."""
-        if st.get("carry_deltas"):
-            # budget-carried rows CAN keep the fast path (VERDICT r4 #3):
-            # a carried row competes only with base rows of its OWN
-            # bucket (a key hashes to exactly one bucket), and carried
-            # buckets were NOT rewritten — so the per-bucket proof is
-            # carry_min(b) > base_max_by_bucket[b] for every carried
-            # bucket, both recorded by the budgeted tick. The global
-            # base_max_lsn (which includes the freshly-rewritten
-            # buckets) keeps guarding new delta epochs below. Legacy
-            # carries without the per-bucket records fall back.
-            bb = st.get("base_max_by_bucket")
-            cm = st.get("carry_bucket_min")
-            if not bb or not cm:
-                return False
-            gmax = st.get("base_max_lsn")
-            for b, lo in cm.items():
-                bmax = bb.get(b, gmax)
-                if lo is None or (bmax is not None and lo <= bmax):
-                    return False
+        compaction watermark, an epoch committed without stats, or a
+        legacy carry dir (no lsn bound is journaled for its rows) falls
+        back to the full aggregate."""
+        if self._carry_dirs(st):
+            return False
         if not st["delta_epochs"]:
             return True
         if st["base_version"]:
@@ -822,14 +808,12 @@ class TargetTable:
             }
         )
         if len(entry["delta_epochs"]) >= self.compact_every:
-            entry = self._compact_to(spark, entry, budget=self.inline_compact_budget)
+            entry = self._compact_to(spark, entry)
         return entry
 
     # -- compaction ------------------------------------------------------------
 
-    def _compact_to(
-        self, spark: SparkSession, st: dict, budget: int | None = None,
-    ) -> dict:
+    def _compact_to(self, spark: SparkSession, st: dict) -> dict:
         """Consume deltas into a new base version — DIRTY BUCKETS ONLY.
 
         The base is parquet-partitioned by `_bucket=pmod(xxhash64(doc_id),
@@ -841,19 +825,9 @@ class TargetTable:
         (from widens) are physically normalized away bucket-by-bucket as
         buckets get dirty — never as a synchronous whole-table job.
         A legacy (unpartitioned) base forces one full rewrite that adopts
-        the bucket layout and seeds `base_max_lsn`.
-
-        `budget` (inline ticks only; the maintenance `compact` CLI passes
-        None): when more than `budget` buckets are dirty, rewrite only
-        the `budget` DIRTIEST (by delta row count) and write the
-        unconsumed delta rows to a carry dir the next tick re-reads —
-        an epoch's inline apply latency is then bounded by O(budget
-        buckets + delta) instead of O(all dirty buckets), the Iceberg
-        property that commit-path work never scales with table dirtiness.
-        Carried buckets rank dirtiest next tick (their rows re-count),
-        so every bucket is consumed within ~⌈buckets/budget⌉ ticks and
-        carry volume stays bounded. While carries exist reads take the
-        full-aggregate path (_fast_resolve_ok)."""
+        the bucket layout and seeds `base_max_lsn`. Legacy carry dirs
+        are read with the deltas and consumed; the new entry drops their
+        journal keys, so GC removes them."""
         deltas = self.read_deltas(spark, st)
         base_dir = self._base_dir(st)
         bucketed = base_dir is not None and self._base_partitioned(base_dir)
@@ -865,37 +839,11 @@ class TargetTable:
         buckets = st.get("buckets", self.buckets)
         bcol = self._bucket_col(st)
         dirty: list[int] | None = None  # None → all buckets
-        carried_buckets: list[int] = []
-        carry_min_by_bucket: dict[str, int] = {}
         delta_max = None
-        full_agg: list = []
         if deltas is not None:
-            agg = deltas.groupBy(bcol.alias("_b")).agg(
-                F.max("last_lsn").alias("m"), F.min("last_lsn").alias("lo"),
-                F.count(F.lit(1)).alias("n")
-            ).collect()
-            full_agg = agg
+            agg = deltas.groupBy(bcol.alias("_b")).agg(F.max("last_lsn").alias("m")).collect()
             if bucketed and prev_max is not None:
                 dirty = sorted(r["_b"] for r in agg)
-                if budget is not None and len(dirty) > budget:
-                    sel = {
-                        r["_b"]
-                        for r in sorted(agg, key=lambda r: (-r["n"], r["_b"]))[:budget]
-                    }
-                    carried_buckets = sorted(set(dirty) - sel)
-                    # min carried lsn per bucket: the fast-path proof
-                    # that carried rows supersede their (un-rewritten)
-                    # buckets' base rows
-                    carry_min_by_bucket = {
-                        str(r["_b"]): r["lo"] for r in agg
-                        if r["_b"] not in sel
-                    }
-                    dirty = sorted(sel)
-                    deltas, carried = (
-                        deltas.filter(bcol.isin(dirty)),
-                        deltas.filter(bcol.isin(carried_buckets)),
-                    )
-                    agg = [r for r in agg if r["_b"] in sel]
             delta_max = max((r["m"] for r in agg), default=None)
 
         base = self.read_base(spark, st, keep_bucket=True)
@@ -907,15 +855,6 @@ class TargetTable:
             parts.append(deltas)
         new_base = st["version"] + 1
         outdir = os.path.join(self.path, "base", f"v{new_base:08d}")
-        carry_paths: list[str] = []
-        carry_bytes = 0
-        if carried_buckets:
-            carry_dir = os.path.join(self.path, "delta", f"carry-v{new_base:08d}")
-            carried.repartition(len(carried_buckets), bcol).write.mode(
-                "overwrite"
-            ).parquet(carry_dir)
-            carry_paths = [carry_dir]
-            carry_bytes = self._dir_bytes(carry_dir)
         if parts:
             merged = parts[0]
             for p in parts[1:]:
@@ -935,51 +874,18 @@ class TargetTable:
         if dirty is not None and base_dir:
             self._link_clean_buckets(base_dir, outdir, exclude=set(dirty))
         new_max = max((v for v in (prev_max, delta_max) if v is not None), default=None)
-        prev_by_bucket = st.get("base_max_by_bucket") or {}
-        new_by_bucket: dict[str, int] = {}
         if parts and (new_max is None or (prev_max is None and base is not None)):
-            # no journal-proven lsn bound for every carried row: legacy-base
-            # adoption (prev_max None while base rows exist — a late-delivered
-            # delta epoch can sit BELOW legacy base lsns, so delta_max alone
-            # would understate the base maximum and corrupt the broadcast
-            # fast-path invariant) or statless epochs. One PER-BUCKET
-            # aggregate over the rewritten data seeds both invariants
-            # (global + by-bucket). The prev_max-None path always
-            # full-rewrites (dirty stays None), so the new base is complete.
-            rows = (
-                self.read_base(spark, {**st, "base_version": new_base},
-                               keep_bucket=True)
-                .groupBy("_bucket").agg(F.max("last_lsn").alias("m"))
-                .collect()
+            # no journal-proven lsn bound for every row: legacy-base
+            # adoption (prev_max None while base rows exist — a
+            # late-delivered delta epoch can sit BELOW legacy base lsns,
+            # so delta_max alone would understate the base maximum and
+            # corrupt the broadcast fast-path invariant) or statless
+            # epochs. The prev_max-None path always full-rewrites (dirty
+            # stays None), so the new base is complete: take its max.
+            new_max = (
+                self.read_base(spark, {**st, "base_version": new_base})
+                .agg(F.max("last_lsn")).first()[0]
             )
-            new_by_bucket = {
-                str(int(r["_bucket"])): r["m"] for r in rows if r["m"] is not None
-            }
-            new_max = max(new_by_bucket.values(), default=None)
-        elif dirty is not None:
-            # incremental tick: rewritten buckets bump to max(prev bound,
-            # their delta max); clean/carried buckets keep their prior
-            # bound. A bucket missing from a legacy map falls back to
-            # the global prev_max — an over-estimate is sound (the proof
-            # only ever compares carry mins AGAINST these bounds).
-            new_by_bucket = {
-                str(b): prev_by_bucket.get(str(b), prev_max)
-                for b in range(buckets)
-            }
-            for r in agg:
-                b = str(r["_b"])
-                cur = new_by_bucket.get(b)
-                new_by_bucket[b] = r["m"] if cur is None else max(cur, r["m"])
-        elif parts and base is None:
-            # first compaction: the new base is purely delta rows
-            new_by_bucket = {
-                str(r["_b"]): r["m"] for r in full_agg if r["m"] is not None
-            }
-        elif parts:
-            # full rewrite with a journal-proven global bound but no
-            # bucket detail (e.g. an unpartitioned base with stats):
-            # the global max upper-bounds every bucket
-            new_by_bucket = {str(b): new_max for b in range(buckets)}
 
         # fold the contiguous applied prefix into the watermark so the
         # epochs list + stats stay O(epochs-since-last-gap), not O(all);
@@ -992,22 +898,20 @@ class TargetTable:
         sparse = sorted(set(st["epochs"]))
         while sparse and sparse[0] <= w + 1:
             w = max(w, sparse.pop(0))
+        # the legacy carry keys (`carry_*` and the per-bucket lsn map
+        # `*_by_bucket`) describe rows this rewrite consumed
+        kept = {k: v for k, v in st.items()
+                if not k.startswith("carry_") and not k.endswith("_by_bucket")}
         entry = self._commit(
             {
-                **st,
+                **kept,
                 "version": new_base,
                 "kind": "compact",
                 "base_version": new_base,
                 "delta_epochs": [],
                 "delta_refs": {},
                 "delta_bytes": {},
-                # a budgeted tick's unconsumed rows; [] on a full tick
-                # (any prior carries were re-read and consumed above)
-                "carry_deltas": carry_paths,
-                "carry_bucket_min": carry_min_by_bucket,
-                "carry_bytes": carry_bytes,
                 "base_max_lsn": new_max,
-                "base_max_by_bucket": new_by_bucket,
                 "epoch_watermark": w,
                 "epochs": sparse,
                 "epoch_stats": {
@@ -1041,8 +945,8 @@ class TargetTable:
                     shutil.copy2(os.path.join(src, f), os.path.join(dst, f))
 
     def compact(self, spark: SparkSession) -> dict:
-        """Full (unbudgeted) compaction — the maintenance entry point;
-        consumes every delta AND any budget-carried rows."""
+        """Compaction outside the commit path — the maintenance entry
+        point (the inline tick runs the same `_compact_to`)."""
         return self._compact_to(spark, self.state())
 
     def _prune_journal(self) -> None:
@@ -1056,10 +960,7 @@ class TargetTable:
             return
         vs = self._versions()
         for v in vs[: max(0, len(vs) - self.journal_keep)]:
-            try:
-                os.remove(os.path.join(self.journal_dir, f"v{v:08d}.json"))
-            except OSError:
-                pass
+            _remove(os.remove, os.path.join(self.journal_dir, f"v{v:08d}.json"))
 
     def _gc(self, st: dict) -> None:
         """Drop data dirs no longer reachable from the latest commit."""
@@ -1071,7 +972,7 @@ class TargetTable:
             for child in os.listdir(d):
                 p = os.path.abspath(os.path.join(d, child))
                 if p not in live:
-                    shutil.rmtree(p, ignore_errors=True)
+                    _remove(shutil.rmtree, p)
 
 
 class TableRouter:

@@ -4,22 +4,17 @@ The reference consumes Avro-encoded GoldenGate records and keeps a
 schema cache keyed by the writer schema's 64-bit fingerprint
 (source/oracle/Normalizer.java:97-117, common/AvroConverter.java:105-236
 — our decoder deliberately does NOT replicate convertAvroMap's
-empty-return bug noted in SURVEY §2 T6). Two decode paths here:
-
-- **JVM path** (`decode_avro_changes(..., impl="jvm")`): thin wrapper
-  over `pyspark.sql.avro.functions.from_avro` — the fast path on a real
-  cluster where the `spark-avro` package is loaded
-  (`--packages org.apache.spark:spark-avro_2.13:<ver>`). Fixed writer
-  schema per stream (the common deployment).
-- **Python path** (`impl="python"`): a pure-Python Avro *binary* decoder
-  (Avro spec encodings: zigzag varints, length-prefixed strings/bytes,
-  block-encoded arrays/maps, union indexes) run as an Arrow-batched
-  ``mapInPandas`` kernel — one Python invocation per Arrow batch, never
-  per Spark row. Supports Avro single-object encoding (``C3 01`` marker
-  + little-endian CRC-64-AVRO schema fingerprint) with a multi-version
-  writer-schema cache, i.e. the reference's fingerprint cache including
-  mid-stream writer-schema changes. The sandbox has no spark-avro jar,
-  so this path is the tested one; `impl="auto"` probes for the jar.
+empty-return bug noted in SURVEY §2 T6). One decoder: a pure-Python
+Avro *binary* decoder (Avro spec encodings: zigzag varints,
+length-prefixed strings/bytes, block-encoded arrays/maps, union indexes)
+run as an Arrow-batched ``mapInPandas`` kernel — one Python invocation
+per Arrow batch, never per Spark row. Values must use Avro single-object
+encoding (``C3 01`` marker + little-endian CRC-64-AVRO schema
+fingerprint); the multi-version writer-schema cache is the reference's
+fingerprint cache, mid-stream writer-schema changes included. Unframed
+bytes fail loudly. (`from_avro` needs the spark-avro package, which this
+build does not ship, and would decode framed values' marker bytes as
+data.)
 
 Everything implements the public Apache Avro specification (binary
 encoding, single-object encoding, CRC-64-AVRO, Parsing Canonical Form).
@@ -32,7 +27,6 @@ import json
 import struct
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from cdc_spark.schema import CHANGE_SCHEMA
 
@@ -352,52 +346,12 @@ def decode_single_object(data: bytes, cache: AvroSchemaCache) -> dict:
 _CHANGE_FIELDS = [f.name for f in CHANGE_SCHEMA.fields]
 
 
-def decode_avro_changes(
-    raw: DataFrame,
-    writer_schemas: list | None = None,
-    impl: str = "auto",
-    framed: bool | None = None,
-) -> DataFrame:
-    """Kafka-shaped (value: binary) → CHANGE_SCHEMA rows.
-
-    impl="jvm": `from_avro` (needs the spark-avro package; raw bytes,
-    no single-object framing, single writer schema — the common
-    fixed-schema topic). impl="python": Arrow-batched mapInPandas
-    kernel decoding single-object frames against the fingerprint cache
-    (handles mid-stream writer-schema versions). impl="auto" uses jvm
-    when the Avro data source is loadable AND the values are unframed.
-
-    `framed` declares whether values carry the single-object C3 01 +
-    fingerprint prefix. Framing decides correctness, not just speed:
-    `from_avro` on a framed value would decode the marker bytes as data
-    — Avro scalar decoding rarely fails structurally, so a framed topic
-    through the jvm path yields garbage rows, not an error. When left
-    None, auto-probes the first value on batch input; streaming input
-    assumes framed=True (the engine's own wire format — and the python
-    decoder fails LOUDLY on unframed bytes, the safe direction)."""
-    schemas = writer_schemas or [CHANGE_AVRO_SCHEMA]
-    if framed is None and (impl in ("auto", "jvm")) and not raw.isStreaming:
-        row = raw.select("value").filter(F.col("value").isNotNull()).first()
-        framed = row is None or bytes(row["value"])[:2] == _SO_MAGIC
-    if framed is None:
-        framed = True  # streaming, unprobed: assume the engine's wire
-    if impl == "auto":
-        impl = "jvm" if (not framed and _jvm_avro_available(raw.sparkSession)) else "python"
-    if impl == "jvm":
-        if framed:
-            raise ValueError(
-                "values carry the Avro single-object C3 01 framing; "
-                "from_avro would silently mis-decode them — use "
-                "impl='python' (or framed=False for a truly unframed topic)"
-            )
-        from pyspark.sql.avro.functions import from_avro
-
-        parsed = raw.select(
-            from_avro("value", json.dumps(schemas[0])).alias("c")
-        )
-        return parsed.select("c.*")
-
-    cache = AvroSchemaCache(schemas)
+def decode_avro_changes(raw: DataFrame, writer_schemas: list | None = None) -> DataFrame:
+    """Kafka-shaped (value: binary) → CHANGE_SCHEMA rows: an
+    Arrow-batched mapInPandas kernel decoding single-object frames
+    against the fingerprint cache of `writer_schemas` (handles
+    mid-stream writer-schema versions; unframed values raise)."""
+    cache = AvroSchemaCache(writer_schemas or [CHANGE_AVRO_SCHEMA])
 
     def decode_batches(batches):
         import pandas as pd
@@ -456,16 +410,6 @@ def encode_avro_changes(changes: DataFrame, schema=None) -> DataFrame:
     return changes.mapInPandas(encode_batches, "value binary")
 
 
-def _jvm_avro_available(spark) -> bool:
-    try:
-        spark._jvm.org.apache.spark.sql.avro.AvroDataToCatalyst  # noqa: B018
-        loader = spark._sc._jvm.Thread.currentThread().getContextClassLoader()
-        loader.loadClass("org.apache.spark.sql.avro.AvroDataToCatalyst")
-        return True
-    except Exception:
-        return False
-
-
 def kafka_avro_reader(
     spark,
     bootstrap_servers: str,
@@ -473,14 +417,11 @@ def kafka_avro_reader(
     writer_schemas: list | None = None,
     starting_offsets: str = "earliest",
     max_offsets_per_trigger: int | None = None,
-    framed: bool = True,
 ) -> DataFrame:
     """readStream over a Kafka topic of Avro-encoded change events —
     `sources.kafka.kafka_reader` with Avro value decoding (reference
-    GoldenGateKafka.java:112-240). `framed=True` (default — the
-    engine's own wire format) pins the python/fingerprint decode path;
-    pass framed=False only for a topic of raw un-prefixed Avro bodies,
-    which makes the jvm from_avro path eligible."""
+    GoldenGateKafka.java:112-240); values are single-object frames,
+    the engine's own wire format."""
     reader = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
@@ -489,4 +430,4 @@ def kafka_avro_reader(
     )
     if max_offsets_per_trigger:
         reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-    return decode_avro_changes(reader.load(), writer_schemas, framed=framed)
+    return decode_avro_changes(reader.load(), writer_schemas)

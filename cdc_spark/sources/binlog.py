@@ -49,7 +49,7 @@ def read_changes(
         from cdc_spark.sources.avro import decode_avro_changes
 
         raw = spark.read.schema("value binary").parquet(*paths)
-        return decode_avro_changes(raw, impl="python")
+        return decode_avro_changes(raw)
     return spark.read.schema(CHANGE_SCHEMA).parquet(*paths)
 
 
@@ -70,7 +70,7 @@ def stream_reader(
         reader = spark.readStream.schema("value binary")
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return decode_avro_changes(reader.parquet(binlog_dir), impl="python")
+        return decode_avro_changes(reader.parquet(binlog_dir))
     reader = spark.readStream.schema(CHANGE_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

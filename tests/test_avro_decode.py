@@ -1,8 +1,6 @@
 """Avro value decoding (T6): single-object-encoded change events
 round-trip through the Arrow-batched decoder into CHANGE_SCHEMA, with a
-fingerprint64 writer-schema cache handling mid-stream schema versions.
-(The JVM from_avro path needs the spark-avro package, absent in the
-sandbox; decode_avro_changes(impl='auto') selects the python kernel.)"""
+fingerprint64 writer-schema cache handling mid-stream schema versions."""
 
 from __future__ import annotations
 
@@ -52,7 +50,7 @@ def test_single_object_roundtrip_matches_parquet_feed(spark, small_binlog):
     original = read_changes(spark, seg)
     rows = [r.asDict(recursive=True) for r in original.collect()]
     wire = _wire_df(spark, rows, CHANGE_AVRO_SCHEMA)
-    decoded = decode_avro_changes(wire, impl="python")
+    decoded = decode_avro_changes(wire)
     # same fields/types (parquet reads as all-nullable, so compare shape)
     assert [(f.name, f.dataType) for f in decoded.schema.fields] == [
         (f.name, f.dataType) for f in original.schema.fields
@@ -78,7 +76,7 @@ def test_mixed_writer_schemas_resolve_via_fingerprint_cache(spark, small_binlog)
         + [(bytearray(encode_single_object(_V1_SCHEMA, r)),) for r in v1_rows],
         "value binary",
     )
-    decoded = decode_avro_changes(wire, [CHANGE_AVRO_SCHEMA, _V1_SCHEMA], impl="python")
+    decoded = decode_avro_changes(wire, [CHANGE_AVRO_SCHEMA, _V1_SCHEMA])
     got = {r["lsn"]: r.asDict(recursive=True) for r in decoded.collect()}
     for r in rows[1::2]:
         assert got[r["lsn"]] == r

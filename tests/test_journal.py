@@ -200,3 +200,87 @@ def test_journal_pruned_at_compaction(spark, tmp_path):
     # a DDL inside the retained window still resolves
     t.apply_ddl(spark, "drop_column", json.dumps({"name": "q"}), "12:900")
     assert [c["target"] for c in t.registry_before_ddl("12:900")] == ["q"]
+
+
+def test_missing_journal_referenced_delta_dir_fails_loudly(spark, tmp_path):
+    """A journal-referenced dir missing on disk must fail the read:
+    skipping it would return state missing a committed epoch, and the
+    next compaction would fold that loss into the base forever."""
+    import os
+    import shutil
+
+    import pytest
+
+    t = TargetTable(str(tmp_path / "t"), compact_every=100)
+    t.create_if_absent()
+    t.commit_delta(_delta(spark, t, doc="a", lsn=1), epoch=0)
+    t.commit_delta(_delta(spark, t, doc="b", lsn=2), epoch=1)
+    # lose a committed epoch dir (bad sweep / manual cleanup)
+    shutil.rmtree(os.path.join(t.path, "delta", "epoch=00000001"))
+    with pytest.raises(FileNotFoundError, match="committed data is missing"):
+        t.read_resolved(spark).collect()
+
+
+def test_missing_ref_delta_dir_fails_loudly(spark, tmp_path):
+    import shutil
+
+    import pytest
+
+    from cdc_spark.schema import APPLY_SCHEMA
+
+    t = TargetTable(str(tmp_path / "t"), compact_every=100)
+    t.create_if_absent()
+    # journal-only ref commit pointing at a staged slice, then lose it
+    stage = tmp_path / "stage" / "epoch=00000000" / "table=t"
+    stage.mkdir(parents=True)
+    spark.createDataFrame(
+        [(1, 0, "a", False, [1], 1, "s", {})], schema=APPLY_SCHEMA,
+    ).write.mode("overwrite").parquet(str(stage))
+    t.commit_delta_ref(spark, 0, str(stage),
+                       stats={"n_events": 1, "min_lsn": 1, "max_lsn": 1})
+    shutil.rmtree(str(stage))
+    with pytest.raises(FileNotFoundError, match="committed data is missing"):
+        t.read_resolved(spark).collect()
+
+
+def test_cleanup_failures_warn_and_commit_stands(spark, tmp_path, monkeypatch, caplog):
+    """Journal expiry and data-dir GC run after the commit point. A path
+    a concurrent remover already took stays quiet; any other failure
+    leaks the path, so it is logged at WARNING with its traceback and
+    the compaction still commits."""
+    import logging
+    import os
+    import shutil
+
+    t = TargetTable(str(tmp_path / "t"), compact_every=100, journal_keep=2)
+    t.create_if_absent()
+    t.commit_delta(_delta(spark, t, doc="a", lsn=1), epoch=0)
+    t.commit_delta(_delta(spark, t, doc="b", lsn=2), epoch=1)
+    real_remove, real_rmtree = os.remove, shutil.rmtree
+
+    def failing(real, exc):
+        def fn(path, *a, **k):
+            if str(path).startswith(t.path) and not k.get("ignore_errors"):
+                raise exc(13, "injected", path)
+            return real(path, *a, **k)
+        return fn
+
+    caplog.set_level(logging.WARNING, logger="cdc_spark.sinks.target")
+    monkeypatch.setattr(os, "remove", failing(real_remove, PermissionError))
+    monkeypatch.setattr(shutil, "rmtree", failing(real_rmtree, PermissionError))
+    entry = t.compact(spark)
+    assert t.state()["version"] == entry["version"] and entry["kind"] == "compact"
+    assert {r["doc_id"] for r in t.read_resolved(spark).collect()} == {"a", "b"}
+    warned = [r for r in caplog.records if r.name == "cdc_spark.sinks.target"]
+    leaked = {"epoch=00000000", "epoch=00000001", "v00000000.json", "v00000001.json"}
+    assert {os.path.basename(r.getMessage().split(":")[0]) for r in warned} == leaked
+    assert all(r.levelno == logging.WARNING and r.exc_info for r in warned)
+    assert os.path.isdir(os.path.join(t.path, "delta", "epoch=00000000"))
+
+    # a concurrent remover got there first: nothing to report
+    caplog.clear()
+    monkeypatch.setattr(os, "remove", failing(real_remove, FileNotFoundError))
+    monkeypatch.setattr(shutil, "rmtree", failing(real_rmtree, FileNotFoundError))
+    t.commit_delta(_delta(spark, t, doc="c", lsn=3), epoch=2)
+    t.compact(spark)
+    assert not [r for r in caplog.records if r.name == "cdc_spark.sinks.target"]

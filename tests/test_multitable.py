@@ -218,3 +218,33 @@ def test_prestage_failure_warns_and_falls_back(
     assert len(warned) == 1, [r.getMessage() for r in warned]
     assert "injected pre-stage failure" in str(warned[0].exc_info[1])
     _assert_router_matches_oracle(spark, router, mt_binlog, mt_cfg.tables)
+
+
+def test_verify_multi_table_does_not_create_missing_table(spark, workdir):
+    """verify --multi-table on a root missing one routed table must
+    report the miss as diffs, NOT create a journal inside the target."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    d = f"{workdir}/binlog_vmt"
+    write_binlog(
+        GenConfig(n_events=2000, n_docs=100, events_per_epoch=1000, seed=7,
+                  tables=("a.t", "b.t")),
+        d,
+    )
+    root = f"{workdir}/vmt_root"
+    replay_multi(spark, d, root, lineage=False)
+    # simulate a table the engine never routed
+    missing_path = TableRouter(root).path_of("b.t")
+    shutil.rmtree(missing_path)
+    # subprocess: job.main stops its session on exit, which must not
+    # kill this test session's shared SparkSession
+    proc = subprocess.run(
+        [sys.executable, "-m", "cdc_spark.job", "verify", "--binlog", d,
+         "--table", root, "--multi-table", "--master", "local[2]"],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 1, proc.stdout + proc.stderr  # diffs reported
+    assert not os.path.isdir(missing_path), "verifier must not create the table"

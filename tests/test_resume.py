@@ -215,3 +215,19 @@ def test_parked_complete_epoch_is_not_lost(spark, workdir):
     assert_matches_oracle(spark, table, full)
     staging = f"{tdir}/_staging"
     assert not os.path.isdir(staging) or not os.listdir(staging)
+
+
+def test_stream_honours_compact_every(spark, workdir):
+    """`stream(compact_every=N)` (and `job stream --compact-every N`)
+    sets the inline compaction cadence: a 4-epoch feed at N=2 commits a
+    compaction, and the table still matches the oracle."""
+    from cdc_spark.genlog import GenConfig, write_binlog
+    from cdc_spark.streaming.pipeline import stream
+
+    d = f"{workdir}/binlog_stream_cadence"
+    write_binlog(GenConfig(n_events=4000, n_docs=400, events_per_epoch=1000, seed=31), d)
+    table = stream(spark, d, f"{workdir}/t_stream_cadence",
+                   checkpoint_dir=f"{workdir}/ckpt_stream_cadence", compact_every=2)
+    st = table.state()
+    assert st["epochs_applied"] == 4 and st["base_version"] > 0, st
+    assert_matches_oracle(spark, table, d)

@@ -84,3 +84,23 @@ def test_watermark_drops_late_row_and_emits_windows_once(spark, tmp_path):
     # value-100 row was dropped. (hour-2's window is still open when the
     # availableNow stream drains, so it is not emitted in append mode.)
     assert got == {(h0, "a"): (2, 3.0)}
+
+
+def test_windowed_ltz_start_is_instant(spark):
+    """window_start_s must be the epoch instant for TIMESTAMP (LTZ)
+    input regardless of the session timezone."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [("2024-03-01 10:15:00",), ("2024-03-01 10:45:00",)], "s string"
+    ).select(F.to_timestamp("s").alias("ts"), F.lit("x").alias("event_type"))
+    assert df.schema["ts"].dataType.typeName() == "timestamp"
+    old = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = windowed_event_stats(df, value_col=None).first()["window_start_s"]
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+        tokyo = windowed_event_stats(df, value_col=None).first()["window_start_s"]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert utc == tokyo
