@@ -10,7 +10,11 @@ and harness code calls :func:`release_persisted` after each action.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_LOG = logging.getLogger(__name__)
 
 _PERSISTED: list[DataFrame] = []
 
@@ -26,7 +30,9 @@ def release_persisted() -> int:
     """Unpersist every tracked cache; returns how many were released.
 
     Safe to call at any time — releasing a cache only drops the stored
-    blocks; a still-referenced plan recomputes instead of failing.
+    blocks; a still-referenced plan recomputes instead of failing. A
+    release that fails (e.g. the session already stopped) logs at
+    WARNING with its traceback and the rest are still released.
     """
     n = 0
     while _PERSISTED:
@@ -35,5 +41,5 @@ def release_persisted() -> int:
             df.unpersist()
             n += 1
         except Exception:
-            pass  # session already stopped — nothing to release
+            _LOG.warning("releasing a tracked cache failed", exc_info=True)
     return n

@@ -210,7 +210,7 @@ def main(argv: list[str] | None = None) -> int:
                 target = stream(spark, args.binlog, args.table, checkpoint_dir=args.checkpoint,
                                 max_files_per_trigger=args.max_files_per_trigger,
                                 wire=args.wire, multi=args.multi_table, images=args.images,
-                                compact_every=args.compact_every)
+                                compact_every=args.compact_every, stats_out=epoch_stats)
             elif args.multi_table:
                 target = replay_multi(
                     spark, args.binlog, args.table,

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_spark.plans.template import template
+
 
 def lww_dedupe(
     df: DataFrame,
@@ -33,13 +35,19 @@ def lww_dedupe(
     Ties broken by `deleted` (delete wins — only possible for the D half
     of a PK-change split, which shares the source event's lsn with its I
     half but always targets a *different* key, so ties cannot occur in
-    valid feeds; the tiebreak just makes the operator total)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    cols = df.columns
-    ordering = F.struct(F.col(order), F.col("deleted")) if "deleted" in cols else F.col(order)
-    return (
-        df.groupBy(*keys)
-        .agg(F.max_by(F.struct(*[c for c in cols if c not in keys]), ordering).alias("_r"))
-        .select(*keys, "_r.*")
-        .select(*cols)
-    )
+    valid feeds; the tiebreak just makes the operator total).
+
+    One aggregate and one output select in `df`'s column order, both a
+    plan template keyed on (keys, columns, order)."""
+    keys = (key,) if isinstance(key, str) else tuple(key)
+    cols = tuple(df.columns)
+
+    def build():
+        ordering = (F.struct(F.col(order), F.col("deleted")) if "deleted" in cols
+                    else F.col(order))
+        won = F.max_by(F.struct(*[F.col(c) for c in cols if c not in keys]), ordering)
+        out = [F.col(c) if c in keys else F.col("_r").getField(c).alias(c) for c in cols]
+        return [F.col(k) for k in keys], won.alias("_r"), out
+
+    group, agg, out = template(("lww_dedupe", keys, cols, order), build)
+    return df.groupBy(*group).agg(agg).select(*out)

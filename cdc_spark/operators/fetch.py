@@ -55,12 +55,13 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_spark.caching import track_persist
-from cdc_spark.sinks.target import norm_registry
+from cdc_spark.plans.template import template
+from cdc_spark.sinks.target import norm_registry, registry_key
 from cdc_spark.schema import SPARK_TYPE
 
 _LOG = logging.getLogger(__name__)
@@ -126,6 +127,11 @@ FETCH_EVENT_SCHEMA = T.StructType(
 #: FETCH_EVENT_SCHEMA field names, in order
 _NAMES = [f.name for f in FETCH_EVENT_SCHEMA.fields]
 
+#: resolve_cross_key's queried key → chain component map
+_COMP_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.StringType()), T.StructField("_comp", T.IntegerType())]
+)
+
 WINNER_SCHEMA = T.StructType(
     [
         T.StructField("lsn", T.LongType()),
@@ -146,20 +152,15 @@ WINNER_SCHEMA = T.StructType(
 _EMPTY_MAP = "cast(map() as map<string,string>)"
 
 
-def normalize_fetch(changes: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """CHANGE_SCHEMA rows (key-only wire) → setter-flagged fetch events.
-
-    set_tokens/set_source mark fields the event SUPPLIES; reset marks a
-    row-image restart (I, or the I-half of a PK-change split, whose
-    image base is the OLD key — base_key). `keep` carries extra
-    top-level columns through (the multi-table router keeps `table` so
-    one staging job can partition the whole epoch's events)."""
-    dml = changes.filter(F.col("op_type").isin("I", "U", "D"))
-    masked = lambda f: (F.col("op_type") == "U") & F.array_contains(  # noqa: E731
+def _fetch_events() -> Column:
+    """One change row's setter-flagged fetch events: null (no rows) for
+    anything but I/U/D."""
+    op = F.col("op_type")
+    masked = lambda f: (op == "U") & F.array_contains(  # noqa: E731
         F.coalesce(F.col("missing_mask"), F.array().cast("array<string>")), f
     )
     pk_changed = (
-        (F.col("op_type") == "U")
+        (op == "U")
         & F.col("before.doc_id").isNotNull()
         & (F.col("before.doc_id") != F.col("after.doc_id"))
     )
@@ -189,16 +190,37 @@ def normalize_fetch(changes: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame
         set_tok.alias("set_tokens"), set_src.alias("set_source"),
         # an INSERT restarts the row image; a PK-change's I-half restarts
         # it FROM the old key's image
-        ((F.col("op_type") == "I") | pk_changed).alias("reset"),
+        ((op == "I") | pk_changed).alias("reset"),
         F.when(pk_changed, F.col("before.doc_id")).alias("base_key"),
     )
-    events = (
-        F.when(F.col("op_type") == "D", F.array(delete_evt(F.col("before.doc_id"))))
+    return (
+        F.when(op == "D", F.array(delete_evt(F.col("before.doc_id"))))
         .when(pk_changed, F.array(delete_evt(F.col("before.doc_id")), upsert))
-        .otherwise(F.array(upsert))
+        .when(op.isin("I", "U"), F.array(upsert))
     )
-    kept = [F.col(c) for c in keep]
-    return dml.select(*kept, F.explode(events).alias("e")).select(*keep, "e.*")
+
+
+def normalize_fetch(changes: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """CHANGE_SCHEMA rows (key-only wire) → setter-flagged fetch events.
+
+    set_tokens/set_source mark fields the event SUPPLIES; reset marks a
+    row-image restart (I, or the I-half of a PK-change split, whose
+    image base is the OLD key — base_key). `keep` carries extra
+    top-level columns through (the multi-table router keeps `table` so
+    one staging job can partition the whole epoch's events). One
+    `select(*keep, inline(events))`, a plan template per `keep`."""
+    keep = tuple(keep)
+    cols = template(("normalize_fetch", keep),
+                    lambda: [*map(F.col, keep), F.inline(_fetch_events())])
+    return changes.select(*cols)
+
+
+def _is_pending() -> Column:
+    return F.col("reset") & F.col("base_key").isNotNull()
+
+
+def _needs_state() -> Column:
+    return F.col("need_tokens") | F.col("need_source") | F.col("need_extra")
 
 
 class _Marker:
@@ -506,10 +528,11 @@ def resolve_cross_key(
     nothing here."""
     if n_pk_change == 0:
         return events
-    is_pending = F.col("reset") & F.col("base_key").isNotNull()
+    is_pending, not_pending, edge_cols = template("resolve_cross_key.edges", lambda: (
+        _is_pending(), ~_is_pending(), [F.col("doc_id"), F.col("base_key")]))
     edges = (
         events.filter(is_pending)
-        .select("doc_id", "base_key")
+        .select(*edge_cols)
         .limit(_PENDING_HARD_MAX + 1)
         .collect()
     )
@@ -562,40 +585,39 @@ def resolve_cross_key(
     queried = sorted(queried_set)
     roots: dict[str, int] = {}
     comp_df = spark.createDataFrame(
-        [(k, roots.setdefault(find(k), len(roots))) for k in queried],
-        "doc_id string, _comp int",
+        [(k, roots.setdefault(find(k), len(roots))) for k in queried], _COMP_SCHEMA,
     )
 
-    base = events.filter(~is_pending)
-    pend = events.filter(is_pending)
-    kind0 = F.lit(0).cast("int").alias("kind")
-    no_orig = F.lit(None).cast("string").alias("_orig")
-    stream = (
-        base.select(*_NAMES, kind0, no_orig)
-        .unionByName(
-            pend.select(*_NAMES, F.lit(1).cast("int").alias("kind"), no_orig)
-        )
-        .unionByName(
-            pend.select(
-                F.col("base_key").alias("doc_id"),
-                *[F.col(n) for n in _NAMES if n != "doc_id"],
-                F.lit(2).cast("int").alias("kind"),
-                F.col("doc_id").alias("_orig"),
-            ).select(*_NAMES, "kind", "_orig")
-        )
-        # inner broadcast join = queried-key filter + component tag in one
-        .join(F.broadcast(comp_df), "doc_id")
-    )
+    rows, comp = template("resolve_cross_key.stream", lambda: (
+        _resolve_stream(), F.col("_comp")))
+    # inner broadcast join = queried-key filter + component tag in one
+    stream = events.select(rows).join(F.broadcast(comp_df), "doc_id")
     n_parts = max(1, min(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         -(-len(queried) // _QUERIED_PER_PART),
     ))
-    resolved_events = stream.repartition(n_parts, F.col("_comp")).mapInPandas(
+    resolved_events = stream.repartition(n_parts, comp).mapInPandas(
         _chain_resolve_kernel(drops), FETCH_EVENT_SCHEMA
     )
     # structural filter: EVERY cross-key reset row resolves in the pass,
     # so drop that shape wholesale and union the literal twins back in
-    return base.unionByName(resolved_events)
+    return events.filter(not_pending).unionByName(resolved_events)
+
+
+def _resolve_stream() -> Column:
+    """resolve_cross_key's stream rows of one event: the event itself
+    (kind 0), or for a pending its placeholder (kind 1) plus its image
+    query re-keyed to its base key (kind 2, `_orig` = its own key)."""
+
+    def row(kind: int, doc_id: str = "doc_id", orig: Column | None = None) -> Column:
+        fields = [F.col(doc_id if n == "doc_id" else n).alias(n) for n in _NAMES]
+        orig = F.lit(None).cast("string") if orig is None else orig
+        return F.struct(*fields, F.lit(kind).cast("int").alias("kind"), orig.alias("_orig"))
+
+    return F.inline(
+        F.when(_is_pending(), F.array(row(1), row(2, "base_key", F.col("doc_id"))))
+        .otherwise(F.array(row(0)))
+    )
 
 
 def _make_resolved(p: dict, a: dict) -> dict:
@@ -681,11 +703,12 @@ def fetch_winners(
             out_rows.append(_winner_of(ch, drops))
         yield pd.DataFrame(out_rows, columns=[f.name for f in WINNER_SCHEMA.fields])
 
+    doc_id = template("doc_id", lambda: F.col("doc_id"))
     if n_events:
         n_parts = max(1, -(-n_events // _EVENTS_PER_FOLD_PART))
-        part = events.repartition(n_parts, F.col("doc_id"))
+        part = events.repartition(n_parts, doc_id)
     else:
-        part = events.repartition(F.col("doc_id"))
+        part = events.repartition(doc_id)
     return part.mapInPandas(run_partition, WINNER_SCHEMA)
 
 
@@ -1021,12 +1044,9 @@ def fetch_delta(
     epoch's DML count works: needy keys ⊆ winner keys ⊆ DML events) —
     a bound under `_IMAGE_BROADCAST_CAP` proves both broadcasts safe
     without counting anything."""
-    reg = norm_registry(registry)
-    needy = (
-        winners.filter(F.col("need_tokens") | F.col("need_source") | F.col("need_extra"))
-        .select(F.col("state_key").alias("doc_id"))
-        .distinct()
-    )
+    needs, needy_key, semi_on, ssub_cols, img_on, sel = template(
+        ("fetch_delta", registry_key(registry)), lambda: _fetch_delta_selects(registry))
+    needy = winners.filter(needs).select(needy_key).distinct()
     if n_needy is None:
         if needy_bound is not None and needy_bound <= _IMAGE_BROADCAST_CAP:
             n_needy = needy_bound
@@ -1034,14 +1054,23 @@ def fetch_delta(
             n_needy = needy.count()
     bc_semi = F.broadcast if n_needy <= _SEMI_BROADCAST_CAP else (lambda x: x)
     bc_img = F.broadcast if n_needy <= _IMAGE_BROADCAST_CAP else (lambda x: x)
-    ssub = state.join(bc_semi(needy), "doc_id", "left_semi").select(
+    ssub = state.join(bc_semi(needy), semi_on, "left_semi").select(*ssub_cols)
+    return winners.join(bc_img(ssub), img_on, "left").select(*sel)
+
+
+def _fetch_delta_selects(registry: list[dict]):
+    """fetch_delta's plan template under one registry: the needy-winner
+    filter and key, the state semi-join condition, the pruned state
+    image, the image join condition and the typed merge into phys delta
+    columns."""
+    reg = norm_registry(registry)
+    ssub = [
         F.col("doc_id").alias("_sk"),
         F.col("tokens").alias("_s_tokens"),
         F.col("n_tok").alias("_s_n_tok"),
         F.col("source").alias("_s_source"),
         *[F.col(c["target"]).alias(f"_s_{c['phys']}") for c in reg],
-    )
-    j = winners.join(bc_img(ssub), winners["state_key"] == ssub["_sk"], "left")
+    ]
     sel = [
         F.col("doc_id"),
         F.when(F.col("need_tokens"), F.col("_s_tokens")).otherwise(F.col("tokens")).alias("tokens"),
@@ -1058,7 +1087,9 @@ def fetch_delta(
         ).otherwise(v_f)
         sel.append(merged.alias(c["phys"]))
     sel += [F.col("lsn").alias("last_lsn"), F.col("deleted")]
-    return j.select(*sel)
+    return (_needs_state(), F.col("state_key").alias("_nk"),
+            F.col("doc_id") == F.col("_nk"), ssub,
+            F.col("state_key") == F.col("_sk"), sel)
 
 
 def build_fetch_delta(
@@ -1155,12 +1186,9 @@ def prepare_fetch_epoch(
     winners = None
     try:
         winners = _winners(spark, events, drops, n_pk_change, n_events).persist()
-        n_needy = (
-            winners.filter(
-                F.col("need_tokens") | F.col("need_source") | F.col("need_extra")
-            )
-            .select("state_key").distinct().count()
-        )
+        needs, key = template("prepare_fetch_epoch", lambda: (
+            _needs_state(), F.col("state_key")))
+        n_needy = winners.filter(needs).select(key).distinct().count()
     except BaseException:
         # a raise between persist() and return would pin the caches for
         # the session's lifetime (callers only release what we return)

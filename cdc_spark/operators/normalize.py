@@ -9,12 +9,16 @@ Re-expresses the reference's Normalizer (source/oracle/Normalizer.java):
   does this row-at-a-time in Java).
 - T8 PK-change split (Normalizer.java:180-207,219-237): an update whose
   before/after doc_id differ expands to D(old)+I(new) — here
-  ``explode(array(...))`` guarded by ``when(pk_changed, ...)``; no
+  ``inline(array(...))`` guarded by ``when(pk_changed, ...)``; no
   per-row Python (reference uses flatMap, GoldenGateKafka.java:233-239).
-- T10 heartbeat/DDL drop (Normalizer.java:68-72): a plain filter.
+- T10 heartbeat/DDL drop (Normalizer.java:68-72): a non-DML row maps to
+  a null event array, which ``inline`` drops.
 
 Every step is a column expression, so the whole pass stays in
-whole-stage codegen with no Python worker in the loop.
+whole-stage codegen with no Python worker in the loop. The whole pass is
+ONE ``select(*keep, inline(events))`` whose Column tree is a plan
+template (cdc_spark/plans/template.py): built once per session and
+`keep`, not once per epoch.
 
 Output schema: cdc_spark.schema.APPLY_SCHEMA
 (lsn, epoch, doc_id, deleted, tokens, n_tok, source, extra).
@@ -24,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from cdc_spark.plans.template import template
 
 _EMPTY_MAP = "cast(map() as map<string,string>)"
 
@@ -84,6 +90,25 @@ def _delete_struct(doc_id: Column) -> Column:
     )
 
 
+def _events() -> Column:
+    """One row's apply-events: a tombstone for D, tombstone + upsert for
+    a PK-changing U, an upsert for I/U, null (no rows) for anything
+    else."""
+    tokens, n_tok = _masked("tokens"), _masked("n_tok", mask_name="tokens")
+    upsert = _upsert_struct(tokens, n_tok, _masked("source"), _merged_extra())
+    op = F.col("op_type")
+    pk_changed = (
+        (op == "U")
+        & F.col("before.doc_id").isNotNull()
+        & (F.col("before.doc_id") != F.col("after.doc_id"))
+    )
+    return (
+        F.when(op == "D", F.array(_delete_struct(F.col("before.doc_id"))))
+        .when(pk_changed, F.array(_delete_struct(F.col("before.doc_id")), upsert))
+        .when(op.isin("I", "U"), F.array(upsert))
+    )
+
+
 def normalize(changes: DataFrame, keep: tuple = ()) -> DataFrame:
     """Raw change feed (CHANGE_SCHEMA) → apply-events (APPLY_SCHEMA).
 
@@ -93,21 +118,7 @@ def normalize(changes: DataFrame, keep: tuple = ()) -> DataFrame:
     `keep` names top-level input columns to carry through unchanged
     (the multi-table router keeps `table` for routing).
     """
-    dml = changes.filter(F.col("op_type").isin("I", "U", "D"))
-    tokens, n_tok = _masked("tokens"), _masked("n_tok", mask_name="tokens")
-    source, extra = _masked("source"), _merged_extra()
-
-    pk_changed = (
-        (F.col("op_type") == "U")
-        & F.col("before.doc_id").isNotNull()
-        & (F.col("before.doc_id") != F.col("after.doc_id"))
-    )
-    upsert = _upsert_struct(tokens, n_tok, source, extra)
-    events = (
-        F.when(F.col("op_type") == "D", F.array(_delete_struct(F.col("before.doc_id"))))
-        .when(pk_changed, F.array(_delete_struct(F.col("before.doc_id")), upsert))
-        .otherwise(F.array(upsert))
-    )
-    return dml.select(*[F.col(k) for k in keep], F.explode(events).alias("e")).select(
-        *keep, "e.*"
-    )
+    keep = tuple(keep)
+    cols = template(("normalize", keep),
+                    lambda: [*map(F.col, keep), F.inline(_events())])
+    return changes.select(*cols)

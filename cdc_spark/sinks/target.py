@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdc_spark.plans.template import template
 from cdc_spark.schema import APPLY_SCHEMA, SPARK_TYPE, WIDENINGS
 
 BASE_FIELDS = [
@@ -97,6 +98,12 @@ def norm_registry(reg: list[dict]) -> list[dict]:
     return [{**c, "phys": c.get("phys", c["target"])} for c in reg]
 
 
+def registry_key(registry: list[dict]) -> str:
+    """The registry's fingerprint: the plan-template key of every
+    projection that depends on it."""
+    return json.dumps(norm_registry(registry), sort_keys=True)
+
+
 def project_to_table(events: DataFrame, registry: list[dict]) -> DataFrame:
     """Apply-events (APPLY_SCHEMA) → physical table columns under the
     given registry.
@@ -109,20 +116,18 @@ def project_to_table(events: DataFrame, registry: list[dict]) -> DataFrame:
     events under any later registry yields the same values for the
     columns that registry names — which is what lets ref-deltas (stored
     as raw apply-events) defer projection to read/compaction time."""
-    sel = [
-        F.col("doc_id"),
-        F.col("tokens"),
-        F.col("n_tok"),
-        F.col("source"),
-    ]
-    for c in norm_registry(registry):
-        val = F.col("extra").getItem(c["source_key"]).cast(SPARK_TYPE[c["type"]])
-        add_lsn = c.get("add_lsn", -1)
-        if add_lsn > 0:
-            val = F.when(F.col("lsn") > F.lit(add_lsn), val)
-        sel.append(val.alias(c["phys"]))
-    sel += [F.col("lsn").alias("last_lsn"), F.col("deleted")]
-    return events.select(*sel)
+
+    def build():
+        sel = [F.col(n) for n, _ in BASE_FIELDS]
+        for c in norm_registry(registry):
+            val = F.col("extra").getItem(c["source_key"]).cast(SPARK_TYPE[c["type"]])
+            add_lsn = c.get("add_lsn", -1)
+            if add_lsn > 0:
+                val = F.when(F.col("lsn") > F.lit(add_lsn), val)
+            sel.append(val.alias(c["phys"]))
+        return sel + [F.col("lsn").alias("last_lsn"), F.col("deleted")]
+
+    return events.select(*template(("project_to_table", registry_key(registry)), build))
 
 
 class TargetTable:
@@ -576,20 +581,26 @@ class TargetTable:
     def _lww(df: DataFrame) -> DataFrame:
         """One hash aggregate (max_by over (last_lsn, deleted)) — map-side
         partial aggregation keeps hot doc_ids from skewing the shuffle."""
-        cols = [c for c in df.columns if c != "doc_id"]
-        return (
-            df.groupBy("doc_id")
-            .agg(F.max_by(F.struct(*cols), F.struct("last_lsn", "deleted")).alias("_r"))
-            .select("doc_id", "_r.*")
-        )
+        cols = tuple(c for c in df.columns if c != "doc_id")
+
+        def build():
+            won = F.max_by(F.struct(*map(F.col, cols)), F.struct("last_lsn", "deleted"))
+            return (F.col("doc_id"), won.alias("_r"),
+                    [F.col("doc_id"), *(F.col("_r").getField(c).alias(c) for c in cols)])
+
+        key, agg, out = template(("target._lww", cols), build)
+        return df.groupBy(key).agg(agg).select(*out)
 
     def _to_logical(self, df: DataFrame, registry: list[dict]) -> DataFrame:
         """phys column names → logical target names (live rows only)."""
-        reg = norm_registry(registry)
-        sel = [F.col(n) for n, _ in BASE_FIELDS]
-        sel += [F.col(c["phys"]).alias(c["target"]) for c in reg]
-        sel.append(F.col("last_lsn"))
-        return df.filter(~F.col("deleted")).select(*sel)
+
+        def build():
+            sel = [F.col(n) for n, _ in BASE_FIELDS]
+            sel += [F.col(c["phys"]).alias(c["target"]) for c in norm_registry(registry)]
+            return ~F.col("deleted"), [*sel, F.col("last_lsn")]
+
+        live, sel = template(("target._to_logical", registry_key(registry)), build)
+        return df.filter(live).select(*sel)
 
     def read_resolved(
         self, spark: SparkSession, state: dict | None = None,
@@ -623,7 +634,8 @@ class TargetTable:
             resolved = self._lww(deltas)
         elif self._fast_resolve_ok(st):
             winners = self._lww(deltas)
-            kept = base.join(F.broadcast(winners.select("doc_id")), "doc_id", "left_anti")
+            key = template("doc_id", lambda: F.col("doc_id"))
+            kept = base.join(F.broadcast(winners.select(key)), "doc_id", "left_anti")
             resolved = kept.unionByName(winners)
         else:
             resolved = self._lww(base.unionByName(deltas))

@@ -12,6 +12,8 @@ apply CDCKudu.java:352-384) but set-based instead of row-at-a-time:
 2. ONE pruned probe aggregate per epoch → each route's redelivery
    fingerprint, op counts and DDL events (single-table carry without
    lineage: a pushdown-pruned DDL probe + Observation metrics instead).
+   `replay` runs a single table's probe on its look-ahead thread while
+   the previous epoch commits.
 3. checks: unknown ops, redelivered contents, then DDL applied to table
    metadata FIRST — the two-phase replacement for the reference's
    DDL-before-DML sort barrier (CTSQLServer.java:108-114), idempotent by
@@ -42,6 +44,7 @@ from cdc_spark.caching import release_persisted
 from cdc_spark.operators import fetch
 from cdc_spark.operators.dedupe import lww_dedupe
 from cdc_spark.operators.normalize import normalize
+from cdc_spark.plans.template import template
 from cdc_spark.sinks.target import (
     TableRouter, TargetTable, norm_registry, project_to_table,
 )
@@ -84,27 +87,32 @@ def _probe(
     doc_id differ), which lets the fetch tail skip the cross-key resolve
     on the common no-PK-change epoch; opt-in because it widens the scan
     by the two nested doc_id leaves."""
-    op = F.col("op_type")
-    keys = [F.col("table")] if routed else []
-    if by_partition:
-        keys.append(F.spark_partition_id().alias("partition_id"))
-    pkc = [
-        F.count(F.when(
-            (op == "U") & F.col("before.doc_id").isNotNull()
-            & (F.col("before.doc_id") != F.col("after.doc_id")), 1,
-        )).alias("n_pk_change")
-    ] if pk_change else []
-    return [r.asDict() for r in batch.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("lsn").alias("min_lsn"),
-        F.max("lsn").alias("max_lsn"),
-        *(F.count(F.when(op == o, 1)).alias(c) for o, c in _OPS),
-        F.count(F.when(_unknown_op(), 1)).alias("n_unknown"),
-        *pkc,
-        F.collect_list(
-            F.when(op == "DDL", F.struct("lsn", "ddl_kind", "ddl_payload"))
-        ).alias("ddl_events"),
-    ).collect()]
+
+    def build():
+        op = F.col("op_type")
+        keys = [F.col("table")] if routed else []
+        if by_partition:
+            keys.append(F.spark_partition_id().alias("partition_id"))
+        pkc = [
+            F.count(F.when(
+                (op == "U") & F.col("before.doc_id").isNotNull()
+                & (F.col("before.doc_id") != F.col("after.doc_id")), 1,
+            )).alias("n_pk_change")
+        ] if pk_change else []
+        return keys, [
+            F.count(F.lit(1)).alias("n"),
+            F.min("lsn").alias("min_lsn"),
+            F.max("lsn").alias("max_lsn"),
+            *(F.count(F.when(op == o, 1)).alias(c) for o, c in _OPS),
+            F.count(F.when(_unknown_op(), 1)).alias("n_unknown"),
+            *pkc,
+            F.collect_list(
+                F.when(op == "DDL", F.struct("lsn", "ddl_kind", "ddl_payload"))
+            ).alias("ddl_events"),
+        ]
+
+    keys, aggs = template(("_probe", routed, by_partition, pk_change), build)
+    return [r.asDict() for r in batch.groupBy(*keys).agg(*aggs).collect()]
 
 
 def _ddl_probe(batch: DataFrame, epoch: int) -> list[dict]:
@@ -115,14 +123,11 @@ def _ddl_probe(batch: DataFrame, epoch: int) -> list[dict]:
     engine claims it refused). The collect is bounded: DDL volume is
     tiny by design, so a feed exceeding the cap is hostile/corrupt and
     must not OOM the driver. Returns one probe-shaped row."""
-    rows = (
-        batch.filter(
-            F.col("op_type").isNull() | ~F.col("op_type").isin("I", "U", "D", "H")
-        )
-        .select("lsn", "op_type", "ddl_kind", "ddl_payload")
-        .limit(_DDL_PROBE_MAX + 1)
-        .collect()
-    )
+    cond, cols = template("_ddl_probe", lambda: (
+        F.col("op_type").isNull() | ~F.col("op_type").isin("I", "U", "D", "H"),
+        [F.col(c) for c in ("lsn", "op_type", "ddl_kind", "ddl_payload")],
+    ))
+    rows = batch.filter(cond).select(*cols).limit(_DDL_PROBE_MAX + 1).collect()
     if len(rows) > _DDL_PROBE_MAX:
         raise ValueError(
             f"epoch {epoch}: more than {_DDL_PROBE_MAX} DDL/unknown-op "
@@ -131,6 +136,16 @@ def _ddl_probe(batch: DataFrame, epoch: int) -> list[dict]:
         )
     ddl = [r for r in rows if r["op_type"] == "DDL"]
     return [{"n_unknown": len(rows) - len(ddl), "ddl_events": ddl}]
+
+
+def _observed_metrics() -> list[Column]:
+    """The Observation metrics folded into the single-table carry write."""
+    return template("_observed_metrics", lambda: [
+        F.count(F.lit(1)).alias("n"),
+        F.min("lsn").alias("min_lsn"), F.max("lsn").alias("max_lsn"),
+        F.count(F.when(_unknown_op(), 1)).alias("n_unknown"),
+        F.count(F.when(F.col("op_type") == "H", 1)).alias("n_heartbeat"),
+    ])
 
 
 def _fold(rows: list[dict]) -> dict:
@@ -173,12 +188,14 @@ def apply_batch(
     unsupplied fields are fetched from earlier same-epoch events or the
     table's own resolved state (operators/fetch.py).
 
-    `prepared` (single-table fetch only): this epoch's look-ahead result
-    from `replay` — the probe rows plus, unless `fallback` is set
-    because the epoch has DDL/unknown ops, the already-materialized
-    winners and their exact needy-key count, computed while the
-    PREVIOUS epoch was still committing (fetch.prepare_fetch_epoch).
-    The caller owns (and releases) `prepared["persisted"]`."""
+    `prepared` (single table only): this epoch's look-ahead result from
+    `replay`, computed while the PREVIOUS epoch was still committing —
+    the probe rows (the feed alone decides them, so the DDL barrier
+    still runs here, after that commit) plus, in fetch mode and unless
+    `fallback` is set because the epoch has DDL/unknown ops, the
+    already-materialized winners and their exact needy-key count
+    (fetch.prepare_fetch_epoch). The caller owns (and releases)
+    `prepared["persisted"]`."""
     if images not in ("carry", "fetch"):
         raise ValueError(f"unknown images mode {images!r}")
     t0 = time.monotonic()
@@ -194,10 +211,10 @@ def apply_batch(
     # images into the columnar cache (measured 5.8s persist vs <1s
     # pruned scans per 250k-event epoch) ------------------------------
     observed = single and not fetching and lineage_dir is None and not done
-    if observed:
-        rows = _ddl_probe(batch, epoch)
-    elif prepared is not None:
+    if prepared is not None:
         rows = prepared["probe"]  # the look-ahead already paid this scan
+    elif observed:
+        rows = _ddl_probe(batch, epoch)
     else:
         rows = _probe(batch, routed=not single,
                       by_partition=lineage_dir is not None, pk_change=fetching)
@@ -294,12 +311,7 @@ def apply_batch(
                 # throughput term for small micro-batches (BENCH.md
                 # epoch-size sensitivity table)
                 obs = Observation(f"epoch-{epoch}")
-                src = batch.observe(
-                    obs, F.count(F.lit(1)).alias("n"),
-                    F.min("lsn").alias("min_lsn"), F.max("lsn").alias("max_lsn"),
-                    F.count(F.when(_unknown_op(), 1)).alias("n_unknown"),
-                    F.count(F.when(F.col("op_type") == "H", 1)).alias("n_heartbeat"),
-                )
+                src = batch.observe(obs, *_observed_metrics())
 
                 def observed_stats() -> dict:
                     metrics.update(obs.get)  # set once the write finished
@@ -532,19 +544,21 @@ def _replay_epochs(spark: SparkSession, target: TargetTable | TableRouter,
 
     def ahead(e: int):
         try:
-            return look(e, read_changes(spark, by_epoch[e], wire=wire))
+            batch = read_changes(spark, by_epoch[e], wire=wire)
+            return batch, look(e, batch)
         except Exception:
             _LOG.warning("look-ahead of epoch %d failed; its apply does the "
                          "work synchronously", e, exc_info=True)
-            return None
+            return None, None
 
     done = 0
     fut = None
     try:
         for i, epoch in enumerate(eps):
-            prepared = fut.result() if fut is not None else None
+            batch, prepared = fut.result() if fut is not None else (None, None)
             fut = None
-            batch = read_changes(spark, by_epoch[epoch], wire=wire)
+            if batch is None:
+                batch = read_changes(spark, by_epoch[epoch], wire=wire)
             if (
                 pool is not None
                 and i + 1 < len(eps)
@@ -564,7 +578,7 @@ def _replay_epochs(spark: SparkSession, target: TargetTable | TableRouter,
                 break
     finally:
         if fut is not None:  # drain an orphaned look-ahead (raise/stop)
-            _release(fut.result())
+            _release(fut.result()[1])
         if pool is not None:
             pool.shutdown(wait=False)
     return target
@@ -628,12 +642,21 @@ def replay(
     this hides are the measured limiter of fetch-path N→4N scaling
     (BENCH_scaling_fetch_uniform_r4.md). The final table is
     byte-identical to the sequential path (same epoch order, same
-    commits — only plan construction overlaps). Carry epochs have no
-    look-ahead."""
+    commits — only plan construction overlaps).
+
+    CARRY LOOK-AHEAD: a carry epoch's look-ahead runs only its probe job
+    (`_ddl_probe`, or the per-partition `_probe` with lineage), hiding
+    it under the previous epoch's write and commit; the apply still
+    runs the DDL barrier, the unknown-op refusal and the DML tail in
+    epoch order."""
     table = TargetTable(table_path, compact_every=compact_every)
     table.create_if_absent()
 
-    def look(_e: int, batch: DataFrame) -> dict:
+    def look(e: int, batch: DataFrame) -> dict:
+        if images == "carry":
+            rows = (_probe(batch, routed=False, by_partition=True, pk_change=False)
+                    if lineage else _ddl_probe(batch, e))
+            return {"probe": rows, "persisted": []}
         rows = _probe(batch, routed=False, by_partition=lineage, pk_change=True)
         f = _fold(rows)
         if f["n_unknown"] or f["n_ddl"]:
@@ -646,8 +669,7 @@ def replay(
         )}
 
     return _replay_epochs(
-        spark, table, binlog_dir, wire, stop_after,
-        look if images == "fetch" else None, stats_out,
+        spark, table, binlog_dir, wire, stop_after, look, stats_out,
         lineage_dir=os.path.join(table_path, "_lineage") if lineage else None,
         images=images,
     )
@@ -775,6 +797,7 @@ def stream(
     multi: bool = False,
     images: str = "carry",
     compact_every: int = 16,
+    stats_out: list | None = None,
 ):
     """Structured Streaming driver: readStream over the segment directory,
     foreachBatch → the same apply_batch (reference: DStream pipeline,
@@ -791,7 +814,8 @@ def stream(
     reference dodges this only by forcing a single totally-ordered
     partition, GoldenGateKafka.java:242-259). `multi=True` routes into a
     TableRouter, whose apply verifies redelivered contents per table, so
-    its gate treats every epoch as unapplied."""
+    its gate treats every epoch as unapplied. `stats_out` collects each
+    apply_batch result dict, as for `replay`."""
     if multi:
         target = TableRouter(table_path, compact_every=compact_every)
     else:
@@ -819,10 +843,12 @@ def stream(
             # applied epochs still go through apply_batch: it no-ops on a
             # true redelivery but fails loudly if this delivery's contents
             # differ from what committed
-            apply_batch(
+            res = apply_batch(
                 spark, target, cur, e, lineage_dir=lineage_dir,
                 verify_redelivery=True, images=images,
             )
+            if stats_out is not None:
+                stats_out.append(res)
             if not multi:
                 sparse.add(e)
                 latest = e if latest is None else max(latest, e)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import threading
 
 import pytest
 
@@ -76,6 +77,28 @@ def jobs_during(spark, fn) -> int:
     fn()
     after = probe()
     return after - before - 1
+
+
+def py4j_calls_during(spark, fn) -> int:
+    """Py4J round trips the driver makes while fn() runs, counted by
+    wrapping the gateway client's send_command (calls from every thread,
+    the look-ahead worker's and py4j's own object releases included)."""
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    n = [0]
+    lock = threading.Lock()
+
+    def counted(*args, **kwargs):
+        with lock:
+            n[0] += 1
+        return real(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        fn()
+    finally:
+        client.send_command = real
+    return n[0]
 
 
 def assert_matches_oracle(spark, table, binlog_dir):

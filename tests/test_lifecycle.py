@@ -102,3 +102,79 @@ def test_lifecycle_cell_matches_oracle_within_job_budget(
         assert all(j <= b for j, b in zip(jobs, before)), (jobs, before)
     if lineage_dir is not None:
         assert len(os.listdir(lineage_dir)) == len(jobs)
+
+
+def test_carry_lookahead_failure_warns_and_applies_synchronously(
+    spark, workdir, feeds, monkeypatch, caplog
+):
+    """A carry look-ahead whose probe of epoch N+1 fails is advisory:
+    one WARNING with its traceback, that epoch's apply probes
+    synchronously, and the table still equals the oracle."""
+    import logging
+    import threading
+
+    from cdc_spark.streaming import pipeline
+
+    feed = feeds["single", "carry"]
+    real = pipeline._ddl_probe
+    failed = []
+
+    def fail_first_lookahead(*args, **kwargs):
+        if threading.current_thread() is not threading.main_thread() and not failed:
+            failed.append(True)
+            raise RuntimeError("injected look-ahead failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "_ddl_probe", fail_first_lookahead)
+    with caplog.at_level(logging.WARNING, logger="cdc_spark"):
+        table = pipeline.replay(spark, feed, f"{workdir}/lifecycle_lookahead_fail",
+                                lineage=False)
+    assert failed == [True]
+    warned = [r for r in caplog.records
+              if r.name.startswith("cdc_spark") and r.levelno >= logging.WARNING]
+    assert len(warned) == 1, [r.getMessage() for r in warned]
+    assert "injected look-ahead failure" in str(warned[0].exc_info[1])
+    got = [r.asDict() for r in table.read_resolved(spark).collect()]
+    diffs = rows_equal(_expected("single", feed, "carry")[None], got)
+    assert not diffs, f"{len(diffs)} diffs, first 5: {diffs[:5]}"
+
+
+def test_carry_lookahead_unknown_op_refuses_after_previous_commit(
+    spark, workdir, monkeypatch
+):
+    """Epoch 1 carries an unknown op. The look-ahead probes it while
+    epoch 0 applies, but the refusal comes from epoch 1's own apply:
+    epoch 0 is committed, epoch 1 (its DDL included) is not, and the
+    apply reuses the look-ahead's probe instead of scanning again."""
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdc_spark.streaming import pipeline
+
+    feed = f"{workdir}/lifecycle_unknown_op"
+    write_binlog(GenConfig(n_events=3000, n_docs=300, events_per_epoch=1000,
+                           seed=63), feed)
+    path = list_segments(feed)[1][0]
+    seg = pq.read_table(path)
+    ops = seg.column("op_type").to_pylist()
+    ops[next(i for i, o in enumerate(ops) if o in ("I", "U", "D"))] = "X"
+    i = seg.schema.get_field_index("op_type")
+    pq.write_table(seg.set_column(i, seg.schema.field(i), pa.array(ops, pa.string())), path)
+
+    real = pipeline._ddl_probe
+    probes = []
+
+    def record(batch, epoch):
+        probes.append((epoch, threading.current_thread() is threading.main_thread()))
+        return real(batch, epoch)
+
+    monkeypatch.setattr(pipeline, "_ddl_probe", record)
+    root = f"{workdir}/lifecycle_t_unknown_op"
+    with pytest.raises(ValueError, match="epoch 1: 1 events with unknown op_type"):
+        pipeline.replay(spark, feed, root, lineage=False)
+    assert (1, False) in probes and (1, True) not in probes, probes
+    st = TargetTable(root).state()
+    assert st["epochs"] == [0], st["epochs"]
+    assert not any(d.startswith("1:") for d in st["applied_ddl"]), st["applied_ddl"]

@@ -231,3 +231,32 @@ def test_stream_honours_compact_every(spark, workdir):
     st = table.state()
     assert st["epochs_applied"] == 4 and st["base_version"] > 0, st
     assert_matches_oracle(spark, table, d)
+
+
+def test_stream_cli_reports_per_epoch_stats(workdir):
+    """`job stream` prints one `epoch_seconds` and one `epoch_events`
+    entry per applied epoch, as `job replay` does."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from cdc_spark.genlog import GenConfig, write_binlog
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    d = f"{workdir}/binlog_stream_cli_stats"
+    write_binlog(GenConfig(n_events=4000, n_docs=400, events_per_epoch=1000, seed=33), d)
+    # subprocess: job.main stops its session on exit, which must not
+    # take the shared test session down with it
+    res = subprocess.run(
+        [sys.executable, "-m", "cdc_spark.job", "stream", "--binlog", d,
+         "--table", f"{workdir}/t_stream_cli_stats",
+         "--checkpoint", f"{workdir}/ckpt_stream_cli_stats", "--master", "local[2]"],
+        capture_output=True, text=True, cwd=repo, timeout=600,
+        env={**os.environ, "CDC_SPARK_DRIVER_MEM": "1g"},
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert out["epochs_applied"] == 4, out
+    assert len(out["epoch_seconds"]) == 4 and len(out["epoch_events"]) == 4, out
+    assert sum(out["epoch_events"]) > 0, out
