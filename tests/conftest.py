@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import gc
 import shutil
 import tempfile
 import threading
+import time
 
 import pytest
 
@@ -82,8 +84,15 @@ def jobs_during(spark, fn) -> int:
 def py4j_calls_during(spark, fn) -> int:
     """Py4J round trips the driver makes while fn() runs, counted by
     wrapping the gateway client's send_command (calls from every thread,
-    the look-ahead worker's and py4j's own object releases included)."""
+    the look-ahead worker's and py4j's own object releases included).
+    Releases of objects dropped before fn() are flushed first: py4j
+    queues them for a worker thread that sends them up to a second
+    later."""
     client = spark.sparkContext._gateway._gateway_client
+    gc.collect()
+    deadline = time.monotonic() + 30
+    while getattr(client, "finalizer_deque", None) and time.monotonic() < deadline:
+        time.sleep(0.05)
     real = client.send_command
     n = [0]
     lock = threading.Lock()

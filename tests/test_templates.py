@@ -19,7 +19,7 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: steady-state Py4J calls per epoch of a warm replay. On these feeds
 #: (4 cores) Columns built per call measured 2,568-2,586 (carry) and
-#: 3,968-4,016 (fetch); templates measure 217-247 and 450-572.
+#: 3,968-4,016 (fetch); templates measure 198-247 and 450-572.
 BUDGET = {"carry": 400, "fetch": 600}
 #: perfbench's fetch_keys schedule: every DDL in the first epoch, so the
 #: later epochs take the look-ahead path
