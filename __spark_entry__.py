@@ -918,7 +918,7 @@ def _q_fetch_replay_final(spark, sf):
 def _q_hot_key_fetch_final(spark, sf):
     """Engine drive of the DOMINANT-TIMELINE regime (round 5): a
     zipf-2.2 key-only feed whose top key holds ~2/3 of the epoch trips
-    `fetch_winners_auto`'s sampled dispatch (top-share ≥0.30 at ≥250k
+    the sampled dispatch in `fetch._winners` (top-share ≥0.30 at ≥250k
     DML events) into the parallel-prefix tree fold — the driver-visible
     pin that the TREE path, through the unmodified production replay,
     reproduces the fetch-mode oracle (the other fetch entries stay

@@ -35,10 +35,6 @@ def word_occurrences(text: Column, word: str) -> Column:
     return F.size(F.filter(word_array(text), lambda w: w == F.lit(word)))
 
 
-def stopword_count(text: Column, words: tuple[str, ...]) -> Column:
-    return F.size(F.filter(word_array(text), lambda t: _in(t, words)))
-
-
 def _in(tok: Column, words: tuple[str, ...]) -> Column:
     out = F.lit(False)
     for w in words:

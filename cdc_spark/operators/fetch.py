@@ -30,11 +30,11 @@ Dataflow (per epoch):
    batching instead of a per-key UDF, whose per-group pandas overhead
    dominates at 10^5 keys/epoch). Emits each key's winning image plus
    need-from-state flags. (Per-key order is a sequential fold, so hot
-   keys cannot salt here — but `fetch_winners_auto` dispatches a
+   keys cannot salt here — but the dispatch in `_winners` sends a
    DOMINANT timeline (sampled top-key share ≥30%) to the parallel-
    prefix tree fold `fetch_winners_tree`, which composes segmented
    partial transitions instead of serializing the hot key in one
-   task.)
+   task. Both folds run the one `_fold_kernel` loop.)
 4. `fetch_delta` — winners needing pre-epoch state LEFT-join the
    resolved table filtered through a broadcast semi-join of the needy
    keys: the 100-TB table streams, never shuffles, exactly like the
@@ -54,6 +54,8 @@ memory) fails loudly rather than OOMing the driver.
 from __future__ import annotations
 
 import logging
+from functools import reduce
+from itertools import groupby
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -232,16 +234,20 @@ class _Marker:
         self.origin = origin
 
 
+#: the WINNER_SCHEMA fields of a key whose last event deletes it
+_DELETED = {
+    "deleted": True, "tokens": None, "n_tok": None, "source": None,
+    "extra": {}, "need_tokens": False, "need_source": False,
+    "need_extra": False, "state_key": None,
+}
+
+
 def _winner_of(ch: dict, drops: list[tuple[int, str]]) -> dict:
-    """Final winner row for a replayed chain (shared by both kernels)."""
+    """Final winner row of a chain replayed by the sequential fold."""
     last = ch["last"]
     if last["deleted"]:
-        return {
-            "lsn": last["lsn"], "epoch": last["epoch"], "doc_id": last["doc_id"],
-            "deleted": True, "tokens": None, "n_tok": None, "source": None,
-            "extra": {}, "need_tokens": False, "need_source": False,
-            "need_extra": False, "state_key": None,
-        }
+        return {"lsn": last["lsn"], "epoch": last["epoch"],
+                "doc_id": last["doc_id"], **_DELETED}
     tv, sv = ch["tokens"], ch["source"]
     need_t = isinstance(tv, _Marker)
     need_s = isinstance(sv, _Marker)
@@ -413,6 +419,35 @@ def _fold_one_key(
     return out
 
 
+def _rows(batches, schema: T.StructType, order: list[str] | None = None):
+    """A mapInPandas partition's rows as dicts, merge-sorted by `order`
+    when given — THE Arrow-row decoder of every fetch kernel. `schema`'s
+    arrays become lists, maps (pair lists from Arrow) dicts, booleans bool."""
+    import pandas as pd
+
+    pdfs = [p for p in batches if not p.empty]
+    if not pdfs:
+        return
+    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+    if order:
+        pdf = pdf.sort_values(order, kind="mergesort")
+    lists = [f.name for f in schema.fields if isinstance(f.dataType, T.ArrayType)]
+    maps = [f.name for f in schema.fields if isinstance(f.dataType, T.MapType)]
+    bools = [f.name for f in schema.fields if isinstance(f.dataType, T.BooleanType)]
+    cols = list(pdf.columns)
+    for tup in pdf.itertuples(index=False):
+        r = dict(zip(cols, tup))
+        for c in lists:
+            if r[c] is not None:
+                r[c] = list(r[c])
+        for c in maps:
+            if r[c] is not None and not isinstance(r[c], dict):
+                r[c] = dict(r[c])
+        for c in bools:
+            r[c] = bool(r[c])
+        yield r
+
+
 def _chain_resolve_kernel(drops: list[tuple[int, str]]):
     """Partition kernel resolving ENTIRE cross-key chains locally.
 
@@ -430,23 +465,9 @@ def _chain_resolve_kernel(drops: list[tuple[int, str]]):
     import pandas as pd
 
     def run_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if pdf.empty:
-            return
-        cols = list(pdf.columns)
         timelines: dict[str, list[dict]] = {}
         queries: dict[str, list[dict]] = {}
-        for tup in pdf.itertuples(index=False):
-            ev = dict(zip(cols, tup))
-            if ev["tokens"] is not None:
-                ev["tokens"] = list(ev["tokens"])
-            if ev["extra"] is not None and not isinstance(ev["extra"], dict):
-                ev["extra"] = dict(ev["extra"])
-            for b in ("deleted", "reset", "set_tokens", "set_source"):
-                ev[b] = bool(ev[b])
+        for ev in _rows(batches, FETCH_EVENT_SCHEMA):
             if int(ev["kind"]) == 2:
                 queries.setdefault(ev["doc_id"], []).append(ev)
             else:
@@ -640,6 +661,38 @@ def _make_resolved(p: dict, a: dict) -> dict:
     return out
 
 
+def _fold_parts(n_events: int | None) -> int:
+    """Both folds' exchange width: ceil(n_events/_EVENTS_PER_FOLD_PART), 1 without a count."""
+    return max(1, -(-(n_events or 0) // _EVENTS_PER_FOLD_PART))
+
+
+def _fold_kernel(drops: list[tuple[int, str]], segments: bool):
+    """THE per-key fold loop of both winner folds: rows sorted by
+    (doc_id, chunk, lsn), a missing chunk counting as 0, replay through
+    `_chain_apply` as one fresh chain per (doc_id, chunk). `segments`
+    emits each chain's net transition and whether it restarted
+    (fetch_winners_tree stage A); otherwise each key's winner row."""
+    import pandas as pd
+
+    schema = _TRANSITION_SCHEMA if segments else WINNER_SCHEMA
+    order = ["doc_id", "chunk", "lsn"] if segments else ["doc_id", "lsn"]
+
+    def run_partition(batches):
+        out = []
+        for (key, chunk), evs in groupby(_rows(batches, FETCH_EVENT_SCHEMA, order),
+                                         lambda e: (e["doc_id"], e.get("chunk", 0))):
+            ch, restarted = _new_chain(key), False
+            for ev in evs:
+                restarted = restarted or ev["deleted"] or ev["reset"]
+                _chain_apply(ch, ev)
+            out.append(_chain_to_transition(key, chunk, ch, restarted) if segments
+                       else _winner_of(ch, drops))
+        if out:
+            yield pd.DataFrame(out, columns=schema.fieldNames())
+
+    return run_partition
+
+
 def fetch_winners(
     events: DataFrame, drops: list[tuple[int, str]],
     n_events: int | None = None,
@@ -662,54 +715,17 @@ def fetch_winners(
     Python-worker round trips. AQE cannot do this here — coalescing
     skips user repartitions and a REBALANCE hint may split one key's
     timeline across tasks, which the fold cannot tolerate. Without the
-    count, the session shuffle default applies.
+    count, one partition.
 
     n_events is a SIZING HEURISTIC, not an exact row count: callers pass
     the raw feed's DML count, which over-counts by heartbeats/DDL in the
     multi-table path and under-counts PK-change splits (each explodes to
     two events) plus resolved twins — small constant factors that only
     nudge the partition count, never correctness."""
-    import pandas as pd
-
-    def run_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values(["doc_id", "lsn"], kind="mergesort")
-        out_rows = []
-        ch = None
-        cur_key = None
-        cols = list(pdf.columns)
-        for tup in pdf.itertuples(index=False):
-            ev = dict(zip(cols, tup))
-            if ev["tokens"] is not None:
-                ev["tokens"] = list(ev["tokens"])
-            if ev["extra"] is not None and not isinstance(ev["extra"], dict):
-                ev["extra"] = dict(ev["extra"])
-            ev["deleted"] = bool(ev["deleted"])
-            ev["reset"] = bool(ev["reset"])
-            ev["set_tokens"] = bool(ev["set_tokens"])
-            ev["set_source"] = bool(ev["set_source"])
-            if ev["doc_id"] != cur_key:
-                if ch is not None:
-                    out_rows.append(_winner_of(ch, drops))
-                cur_key = ev["doc_id"]
-                ch = _new_chain(cur_key)
-            _chain_apply(ch, ev)
-        if ch is not None:
-            out_rows.append(_winner_of(ch, drops))
-        yield pd.DataFrame(out_rows, columns=[f.name for f in WINNER_SCHEMA.fields])
-
     doc_id = template("doc_id", lambda: F.col("doc_id"))
-    if n_events:
-        n_parts = max(1, -(-n_events // _EVENTS_PER_FOLD_PART))
-        part = events.repartition(n_parts, doc_id)
-    else:
-        part = events.repartition(doc_id)
-    return part.mapInPandas(run_partition, WINNER_SCHEMA)
+    return events.repartition(_fold_parts(n_events), doc_id).mapInPandas(
+        _fold_kernel(drops, segments=False), WINNER_SCHEMA
+    )
 
 
 #: serialized segment transition (fetch_winners_tree kernel A → B): the
@@ -721,7 +737,7 @@ _TRANSITION_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
         # long, not int: lsns can be byte offsets (WAL positions) far
-        # above chunk_width*2^31 — an int32 chunk would wrap negative
+        # above the chunk width × 2^31 — an int32 chunk would wrap negative
         # and compose later lsn ranges BEFORE earlier ones
         T.StructField("chunk", T.LongType()),
         T.StructField("restarted", T.BooleanType()),
@@ -782,13 +798,8 @@ def _compose_transitions(a: dict, b: dict) -> dict:
 
 def _transition_winner(t: dict, drops: list[tuple[int, str]]) -> dict:
     if t["last_deleted"]:
-        return {
-            "lsn": t["last_lsn"], "epoch": t["last_epoch"],
-            "doc_id": t["doc_id"], "deleted": True, "tokens": None,
-            "n_tok": None, "source": None, "extra": {},
-            "need_tokens": False, "need_source": False,
-            "need_extra": False, "state_key": None,
-        }
+        return {"lsn": t["last_lsn"], "epoch": t["last_epoch"],
+                "doc_id": t["doc_id"], **_DELETED}
     fold = {k: (t["fold_l"][k], v) for k, v in t["fold_v"].items()}
     return {
         "lsn": t["last_lsn"], "epoch": t["last_epoch"], "doc_id": t["doc_id"],
@@ -801,44 +812,32 @@ def _transition_winner(t: dict, drops: list[tuple[int, str]]) -> dict:
     }
 
 
-def sample_hot_keys(
-    events: DataFrame, n_events: int, share: float = 0.02,
-    sample_rows: int = 50_000, seed: int = 7,
-) -> list[str]:
-    """Keys whose estimated timeline share exceeds `share` of the epoch
-    (one job over a bounded sample) — the split set for
-    fetch_winners_tree. At Zipf-1.2 skew the top key alone holds ~18%
-    of events; everything below `share` folds fine in one task.
-    Delegates to sample_key_profile so both dispatch paths share ONE
-    sampling definition (fraction/threshold/seed)."""
-    return sample_key_profile(events, n_events, share=share,
-                              sample_rows=sample_rows, seed=seed)[0]
-
-
-#: fetch_winners_auto dispatch gates (interleaved best-of-3 A/B at 8
-#: pinned cores, BENCH.md «tree fold»): below ~250k events the serial
-#: fold costs a few seconds at worst and the profile job + extra
-#: shuffle eat the win; the tree fold starts winning between a 20%
-#: top-key share (wash: 4.25 s seq vs 4.38 s tree at 1M events) and a
-#: 38% share (1.34×: 5.21 vs 3.88 s), so dispatch at ≥30%.
+#: `_winners` dispatch gates (interleaved best-of-3 A/B at 8 pinned
+#: cores, BENCH.md «tree fold»): below ~250k events the serial fold
+#: costs a few seconds at worst and the profile job + extra shuffle eat
+#: the win; the tree fold starts winning between a 20% top-key share
+#: (wash: 4.25 s seq vs 4.38 s tree at 1M events) and a 38% share
+#: (1.34×: 5.21 vs 3.88 s), so dispatch at ≥30%.
 _TREE_MIN_EVENTS = 250_000
 _TREE_TOP_SHARE = 0.30
 
+#: key profile: a seeded sample of about _SAMPLE_ROWS rows; a key above
+#: _HOT_SHARE of it is hot (the top key alone holds ~18% at Zipf-1.2
+#: skew; everything below 2% folds fine in one task)
+_SAMPLE_ROWS, _SAMPLE_SEED, _HOT_SHARE = 50_000, 7, 0.02
+#: narrowest lsn chunk a hot key's timeline is split into
+_MIN_CHUNK = 4096
 
-def sample_key_profile(
-    events: DataFrame, n_events: int, share: float = 0.02,
-    sample_rows: int = 50_000, seed: int = 7,
-) -> tuple[list[str], float]:
-    """(hot keys above `share`, estimated top-key share) from ONE
-    bounded-sample job — the dispatch signal for fetch_winners_auto.
+
+def sample_key_profile(events: DataFrame, n_events: int) -> tuple[list[str], float]:
+    """(hot keys, estimated top-key share) from ONE bounded-sample job —
+    `_winners`' dispatch signal and fetch_winners_tree's split set.
     collect_list skips the when()'s nulls, so the single aggregate row
     carries the sampled total, the max timeline, and the hot set."""
-    if not n_events:
-        return [], 0.0
-    frac = min(1.0, sample_rows / float(n_events))
-    thr = max(4.0, share * n_events * frac)
+    frac = min(1.0, _SAMPLE_ROWS / float(n_events))
+    thr = max(4.0, _HOT_SHARE * n_events * frac)
     r = (
-        events.sample(fraction=frac, seed=seed)
+        events.sample(fraction=frac, seed=_SAMPLE_SEED)
         .groupBy("doc_id").count()
         .agg(
             F.sum("count").alias("n"),
@@ -854,53 +853,8 @@ def sample_key_profile(
     return list(r["hot"]), float(r["top"]) / float(r["n"])
 
 
-def fetch_winners_auto(
-    events: DataFrame,
-    drops: list[tuple[int, str]],
-    n_events: int | None = None,
-    min_events: int | None = None,
-    top_share: float | None = None,
-    profile: tuple[list[str], float] | None = None,
-) -> DataFrame:
-    """Winner fold with measured dispatch: a sampled key profile
-    decides between the sequential per-key kernel (`fetch_winners`) and
-    the parallel-prefix tree fold (`fetch_winners_tree`) — the tree
-    only wins when one timeline dominates the epoch (crossover data in
-    BENCH.md; both kernels are test-pinned row-equal). Small epochs
-    skip the profile job outright.
-
-    `profile`: pass `sample_key_profile(...)` of the PRE-resolve frame
-    when the caller holds one persisted (or cheaply re-readable) —
-    sampling `events` here would recompute the whole resolve lineage
-    for one tiny aggregate (measured 6.8 s vs 0.63 s on a 500k-event
-    epoch; resolved PK-change twins shift the key shares only second-
-    order, same hot set either way). In the pipelined replay the
-    profile runs on the prefetch thread, off the commit critical
-    path."""
-    lo = _TREE_MIN_EVENTS if min_events is None else min_events
-    bar = _TREE_TOP_SHARE if top_share is None else top_share
-    if not n_events or n_events < lo:
-        return fetch_winners(events, drops, n_events=n_events)
-    hot, top = profile if profile is not None else sample_key_profile(
-        events, n_events
-    )
-    if hot and top >= bar:
-        _LOG.info(
-            "winner fold dispatch: tree (top-key share %.2f >= %.2f, "
-            "%d hot keys, %d events)", top, bar, len(hot), n_events,
-        )
-        return fetch_winners_tree(events, drops, n_events=n_events,
-                                  hot_keys=hot)
-    return fetch_winners(events, drops, n_events=n_events)
-
-
-def fetch_winners_tree(
-    events: DataFrame,
-    drops: list[tuple[int, str]],
-    n_events: int | None = None,
-    hot_keys: list[str] | None = None,
-    chunk_width: int | None = None,
-) -> DataFrame:
+def fetch_winners_tree(events: DataFrame, drops: list[tuple[int, str]],
+                       n_events: int, hot_keys: list[str]) -> DataFrame:
     """Parallel-prefix twin of `fetch_winners` (VERDICT r4 #6): hot
     keys' timelines fold as SEGMENTED partial transitions composed in
     chunk order, breaking the "hottest key serializes one task" bound
@@ -911,101 +865,39 @@ def fetch_winners_tree(
     folded from a fresh chain IS its net transition, with Markers
     meaning "inherit" — from the previous segment mid-timeline, from
     pre-epoch state at the head (exactly `_winner_of`'s need flags).
-    Kernel A folds (key, lsn-chunk) slices into transition rows (hot
-    keys only get real chunks; everyone else is chunk 0); kernel B
-    re-shuffles the TINY transition set by key and composes. Cost vs
-    the sequential kernel: the same event shuffle + one extra
-    O(keys + hot×chunks) shuffle + the sampling job that finds the hot
-    set — only worth paying when one timeline dominates the epoch.
-    Row-equality with `fetch_winners` is test-pinned;
-    `fetch_winners_auto` dispatches here when a sampled key profile
+    Stage A (`_fold_kernel` with segments) folds (key, lsn-chunk)
+    slices into transition rows (`hot_keys` get real chunks; everyone
+    else is chunk 0); stage B re-shuffles the TINY transition set by
+    key and composes. Cost vs the sequential kernel: the same event
+    shuffle + one extra O(keys + hot×chunks) shuffle + the sampling job
+    that finds the hot set — only worth paying when one timeline
+    dominates the epoch. Row-equality with `fetch_winners` is
+    test-pinned; `_winners` dispatches here when a sampled key profile
     shows a dominant timeline (measured crossover in BENCH.md: wash at
     a 20% top-key share, 1.34–1.63× wins at 38–60%)."""
     import pandas as pd
 
-    if n_events:
-        n_parts = max(1, -(-n_events // _EVENTS_PER_FOLD_PART))
-    else:
-        n_parts = int(events.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if hot_keys is None:
-        hot_keys = sample_hot_keys(events, n_events or 0)
-    if chunk_width is None:
-        chunk_width = max(4096, (n_events or 0) // (4 * n_parts) or 4096)
-    if hot_keys:
-        chunk_col = (
-            F.when(
-                F.col("doc_id").isin(list(hot_keys)),
-                F.floor(F.col("lsn") / F.lit(int(chunk_width))),
-            ).otherwise(F.lit(0)).cast("long")
-        )
-    else:
-        chunk_col = F.lit(0).cast("long")
-    staged = events.select(*_NAMES, chunk_col.alias("chunk"))
-
-    def fold_segments(batches):
-        pdfs = [p for p in batches if not p.empty]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        pdf = pdf.sort_values(["doc_id", "chunk", "lsn"], kind="mergesort")
-        out = []
-        ch = None
-        cur = None
-        restarted = False
-        cols = list(pdf.columns)
-        for tup in pdf.itertuples(index=False):
-            ev = dict(zip(cols, tup))
-            if ev["tokens"] is not None:
-                ev["tokens"] = list(ev["tokens"])
-            if ev["extra"] is not None and not isinstance(ev["extra"], dict):
-                ev["extra"] = dict(ev["extra"])
-            for b in ("deleted", "reset", "set_tokens", "set_source"):
-                ev[b] = bool(ev[b])
-            k = (ev["doc_id"], ev["chunk"])
-            if k != cur:
-                if ch is not None:
-                    out.append(_chain_to_transition(cur[0], cur[1], ch, restarted))
-                cur = k
-                ch = _new_chain(ev["doc_id"])
-                restarted = False
-            if ev["deleted"] or ev["reset"]:
-                restarted = True
-            _chain_apply(ch, ev)
-        if ch is not None:
-            out.append(_chain_to_transition(cur[0], cur[1], ch, restarted))
-        yield pd.DataFrame(out, columns=[f.name for f in _TRANSITION_SCHEMA.fields])
-
-    transitions = staged.repartition(
-        n_parts, F.col("doc_id"), F.col("chunk")
-    ).mapInPandas(fold_segments, _TRANSITION_SCHEMA)
+    n_parts = _fold_parts(n_events)
+    width = max(_MIN_CHUNK, n_events // (4 * n_parts))
+    # integer division: a double quotient drops lsn bits past 2^53
+    chunk_col = (
+        F.when(F.col("doc_id").isin(list(hot_keys)), F.expr(f"lsn div {width}"))
+        .otherwise(F.lit(0)).cast("long")
+    )
+    transitions = (
+        events.select(*_NAMES, chunk_col.alias("chunk"))
+        .repartition(n_parts, F.col("doc_id"), F.col("chunk"))
+        .mapInPandas(_fold_kernel(drops, segments=True), _TRANSITION_SCHEMA)
+    )
 
     def compose_partition(batches):
-        pdfs = [p for p in batches if not p.empty]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        pdf = pdf.sort_values(["doc_id", "chunk"], kind="mergesort")
-        out = []
-        acc = None
-        cols = list(pdf.columns)
-        for tup in pdf.itertuples(index=False):
-            t = dict(zip(cols, tup))
-            if t["tokens"] is not None:
-                t["tokens"] = list(t["tokens"])
-            for m in ("fold_v", "fold_l"):
-                if t[m] is not None and not isinstance(t[m], dict):
-                    t[m] = dict(t[m])
-            for b in ("restarted", "t_mark", "s_mark", "last_deleted"):
-                t[b] = bool(t[b])
-            if acc is not None and acc["doc_id"] == t["doc_id"]:
-                acc = _compose_transitions(acc, t)
-            else:
-                if acc is not None:
-                    out.append(_transition_winner(acc, drops))
-                acc = t
-        if acc is not None:
-            out.append(_transition_winner(acc, drops))
-        yield pd.DataFrame(out, columns=[f.name for f in WINNER_SCHEMA.fields])
+        out = [
+            _transition_winner(reduce(_compose_transitions, ts), drops)
+            for _k, ts in groupby(_rows(batches, _TRANSITION_SCHEMA, ["doc_id", "chunk"]),
+                                  lambda t: t["doc_id"])
+        ]
+        if out:
+            yield pd.DataFrame(out, columns=WINNER_SCHEMA.fieldNames())
 
     # transitions are one row per (key, chunk) — tiny; the compose
     # exchange sizes to keys, not events
@@ -1147,16 +1039,26 @@ def fetch_delta_from_events(
 
 def _winners(spark: SparkSession, events: DataFrame, drops: list[tuple[int, str]],
              n_pk_change: int | None, n_events: int | None) -> DataFrame:
-    """Cross-key resolve → per-key replay over normalized fetch events.
-    The key profile samples the PRE-resolve frame (persisted by the
-    caller, or a pruned parquet slice re-read in the multi-table tail) —
-    see fetch_winners_auto's docstring for the measured why."""
-    profile = (
-        sample_key_profile(events, n_events)
-        if n_events and n_events >= _TREE_MIN_EVENTS else None
-    )
+    """Cross-key resolve → winner fold, THE dispatch between the folds:
+    an epoch of ≥ _TREE_MIN_EVENTS samples a key profile, and a top-key
+    share ≥ _TREE_TOP_SHARE takes `fetch_winners_tree`; all else folds
+    sequentially (`fetch_winners`). The profile samples the PRE-resolve
+    frame (persisted by the caller, or a pruned parquet slice re-read in
+    the multi-table tail): the resolved frame would recompute the whole
+    resolve lineage for one tiny aggregate (6.8 s vs 0.63 s measured on
+    a 500k-event epoch), and resolved PK-change twins shift key shares
+    only second-order."""
+    hot, top = [], 0.0
+    if n_events and n_events >= _TREE_MIN_EVENTS:
+        hot, top = sample_key_profile(events, n_events)
     resolved = resolve_cross_key(spark, events, drops, n_pk_change=n_pk_change)
-    return fetch_winners_auto(resolved, drops, n_events=n_events, profile=profile)
+    if hot and top >= _TREE_TOP_SHARE:
+        _LOG.info(
+            "winner fold dispatch: tree (top-key share %.2f >= %.2f, "
+            "%d hot keys, %d events)", top, _TREE_TOP_SHARE, len(hot), n_events,
+        )
+        return fetch_winners_tree(resolved, drops, n_events, hot)
+    return fetch_winners(resolved, drops, n_events=n_events)
 
 
 def prepare_fetch_epoch(

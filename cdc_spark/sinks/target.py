@@ -331,9 +331,6 @@ class TargetTable:
         Returns None for epochs folded below the compaction watermark."""
         return self.state().get("epoch_stats", {}).get(str(epoch))
 
-    def has_ddl(self, ddl_id: str) -> bool:
-        return ddl_id in self.state()["applied_ddl"]
-
     # -- schema -------------------------------------------------------------
 
     def schema(self, registry: list[dict] | None = None) -> T.StructType:

@@ -153,18 +153,22 @@ def test_single_epoch_fetch_matches_oracle(spark, workdir, cfg):
     _assert_fetch_matches_oracle(spark, table, d)
 
 
-def test_winners_tree_equals_pandas_kernel(spark, workdir):
-    """The parallel-prefix winner fold (fetch_winners_tree, VERDICT r4
-    #6: hot timelines fold as composed segment transitions instead of
-    one serial task) must emit row-for-row what the sequential kernel
-    emits on a Zipf-skewed feed with every transition kind — forcing
-    EVERY key through tiny chunks so composition (incl. restart
-    discards, marker inheritance, fold-stamp merge, drop purges) is
-    exercised on deep chains, and separately with the sampled hot-key
-    auto-split."""
-    from cdc_spark.operators.fetch import (
-        fetch_winners, fetch_winners_tree, normalize_fetch, resolve_cross_key,
-    )
+def _winner_rows(df):
+    """Winner rows keyed by doc_id, with tokens and extra as plain list/dict."""
+    out = {}
+    for r in df.collect():
+        x = r.asDict()
+        x["tokens"] = list(x["tokens"]) if x["tokens"] is not None else None
+        x["extra"] = dict(x["extra"] or {})
+        out[x["doc_id"]] = x
+    return out
+
+
+@pytest.fixture(scope="module")
+def tree_feed(spark, workdir):
+    """Resolved fetch events of a Zipf-skewed feed with every transition
+    kind (PK-changes, masked fields, a drop DDL), its drops and its keys."""
+    from cdc_spark.operators.fetch import normalize_fetch, resolve_cross_key
     from cdc_spark.sources.binlog import read_changes
 
     cfg = GenConfig(
@@ -177,39 +181,72 @@ def test_winners_tree_equals_pandas_kernel(spark, workdir):
     batch = read_changes(spark, sorted(glob.glob(f"{d}/segment-*.parquet")))
     drops = [(2400, "rating")]
     events = resolve_cross_key(spark, normalize_fetch(batch), drops)
+    keys = [r["doc_id"] for r in events.select("doc_id").distinct().collect()]
+    return events, drops, keys
 
-    def norm(rows):
-        out = {}
-        for r in rows:
-            x = r.asDict()
-            x["tokens"] = list(x["tokens"]) if x["tokens"] is not None else None
-            x["extra"] = dict(x["extra"] or {})
-            out[x["doc_id"]] = x
-        return out
 
-    a = norm(fetch_winners(events, drops, n_events=4000).collect())
-    all_keys = [r["doc_id"] for r in events.select("doc_id").distinct().collect()]
-    # every key chunked at width 64 → deep composition chains everywhere
-    b = norm(
-        fetch_winners_tree(events, drops, n_events=4000,
-                           hot_keys=all_keys, chunk_width=64).collect()
+def test_winners_tree_equals_pandas_kernel(spark, tree_feed, monkeypatch):
+    """The parallel-prefix winner fold (fetch_winners_tree, VERDICT r4
+    #6: hot timelines fold as composed segment transitions instead of
+    one serial task) must emit row-for-row what the sequential kernel
+    emits on a Zipf-skewed feed with every transition kind — forcing
+    EVERY key through tiny chunks so composition (incl. restart
+    discards, marker inheritance, fold-stamp merge, drop purges) is
+    exercised on deep chains, and separately with the sampled hot-key
+    split."""
+    from cdc_spark.operators import fetch
+    from cdc_spark.operators.fetch import (
+        fetch_winners, fetch_winners_tree, sample_key_profile,
     )
+
+    events, drops, all_keys = tree_feed
+    a = _winner_rows(fetch_winners(events, drops, n_events=4000))
+    # every key chunked at width 64 (n_events=256 on one fold partition
+    # asks for 64) → deep composition chains everywhere
+    with monkeypatch.context() as m:
+        m.setattr(fetch, "_MIN_CHUNK", 64)
+        b = _winner_rows(fetch_winners_tree(events, drops, 256, all_keys))
     assert set(a) == set(b)
     diffs = [(k, a[k], b[k]) for k in a if a[k] != b[k]]
     assert not diffs, f"{len(diffs)} diffs, first 3: {diffs[:3]}"
-    # sampled auto-split path (hot_keys=None)
-    c = norm(fetch_winners_tree(events, drops, n_events=4000).collect())
+    # sampled hot-key split
+    hot = sample_key_profile(events, 4000)[0]
+    c = _winner_rows(fetch_winners_tree(events, drops, 4000, hot))
     assert a == c
 
 
-def test_winners_auto_dispatch(spark, workdir):
-    """fetch_winners_auto routes on the sampled key profile (BENCH.md
+def test_winners_tree_equals_pandas_kernel_past_2p53(spark, tree_feed, monkeypatch):
+    """lsns past 2^53 (a WAL byte offset can reach them) lose bits in a
+    double: the tree fold's lsn chunks must divide in integers. With
+    every lsn shifted by 2^62 and every key split into 64-lsn chunks,
+    the tree fold stays row-equal to the sequential one."""
+    from pyspark.sql import functions as F
+
+    from cdc_spark.operators import fetch
+    from cdc_spark.operators.fetch import fetch_winners, fetch_winners_tree
+
+    events, drops, all_keys = tree_feed
+    shift = 2 ** 62
+    events = events.withColumn("lsn", F.col("lsn") + F.lit(shift))
+    drops = [(lsn + shift, key) for lsn, key in drops]
+    monkeypatch.setattr(fetch, "_MIN_CHUNK", 64)
+    a = _winner_rows(fetch_winners(events, drops, n_events=256))
+    assert min(r["lsn"] for r in a.values()) >= shift
+    b = _winner_rows(fetch_winners_tree(events, drops, 256, all_keys))
+    assert a == b
+
+
+def test_winners_auto_dispatch(spark, workdir, monkeypatch, caplog):
+    """`_winners` routes on the sampled key profile (BENCH.md
     crossover): small epochs take the sequential kernel without paying
     the profile job; above the gates a dominant timeline takes the tree
     fold — and BOTH routes emit identical winner rows."""
+    import logging
+
+    from cdc_spark.operators import fetch
     from cdc_spark.operators.fetch import (
-        fetch_winners, fetch_winners_auto, normalize_fetch,
-        resolve_cross_key, sample_key_profile,
+        _winners, fetch_winners, normalize_fetch, resolve_cross_key,
+        sample_key_profile,
     )
     from cdc_spark.sources.binlog import read_changes
 
@@ -220,29 +257,28 @@ def test_winners_auto_dispatch(spark, workdir):
     d = f"{workdir}/binlog_winner_auto"
     write_binlog_keys(cfg, d)
     batch = read_changes(spark, sorted(glob.glob(f"{d}/segment-*.parquet")))
-    events = resolve_cross_key(spark, normalize_fetch(batch), [])
+    raw = normalize_fetch(batch)
+    events = resolve_cross_key(spark, raw, [])
 
     hot, top = sample_key_profile(events, 6000)
     assert top > 0.3 and hot, (hot, top)  # zipf-2.0: one dominant key
 
-    def norm(rows):
-        out = {}
-        for r in rows:
-            x = r.asDict()
-            x["tokens"] = list(x["tokens"]) if x["tokens"] is not None else None
-            x["extra"] = dict(x["extra"] or {})
-            out[x["doc_id"]] = x
-        return out
+    def tree_logged():
+        return any("dispatch: tree" in r.getMessage() for r in caplog.records)
 
-    a = norm(fetch_winners(events, [], n_events=6000).collect())
+    a = _winner_rows(fetch_winners(events, [], n_events=6000))
     # forced-tree route (gates floored) must equal the sequential fold
-    b = norm(
-        fetch_winners_auto(events, [], n_events=6000,
-                           min_events=0, top_share=0.0).collect()
-    )
-    assert a == b
-    # default gates on a small epoch: sequential route, same rows
-    c = norm(fetch_winners_auto(events, [], n_events=6000).collect())
+    with caplog.at_level(logging.INFO, logger="cdc_spark.operators.fetch"):
+        with monkeypatch.context() as m:
+            m.setattr(fetch, "_TREE_MIN_EVENTS", 0)
+            m.setattr(fetch, "_TREE_TOP_SHARE", 0.0)
+            b = _winner_rows(_winners(spark, raw, [], None, 6000))
+        assert tree_logged()
+        assert a == b
+        # default gates on a small epoch: sequential route, same rows
+        caplog.clear()
+        c = _winner_rows(_winners(spark, raw, [], None, 6000))
+        assert not tree_logged()
     assert a == c
 
 

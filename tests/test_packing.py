@@ -228,7 +228,7 @@ def test_pack_cli_packs_resolved_table(spark, workdir, small_binlog):
         [sys.executable, "-m", "cdc_spark.job", "pack",
          "--table", table_dir, "--out", out_dir, "--seq-len", "64",
          "--master", "local[2]"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=_REPO, timeout=600,
     )
     assert res.returncode == 0, res.stderr[-2000:]
     stats = json.loads(res.stdout.strip().splitlines()[-1])

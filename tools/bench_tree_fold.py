@@ -2,7 +2,7 @@
 hot-key-dominated epoch (the regime the tree fold targets: one timeline
 holds a large share of the epoch and serializes the sequential fold).
 
-Run: taskset -c 0-(N-1) python /tmp/tree_fold_bench.py N [zipf] [events]
+Run: taskset -c 0-(N-1) python tools/bench_tree_fold.py N [zipf] [events] [reps]
 Prints one JSON line.
 """
 import json
@@ -33,7 +33,7 @@ spark.sparkContext.setLogLevel("ERROR")
 from cdc_spark.genlog import GenConfig, write_binlog_keys
 from cdc_spark.operators.fetch import (
     fetch_winners, fetch_winners_tree, normalize_fetch, resolve_cross_key,
-    sample_hot_keys,
+    sample_key_profile,
 )
 from cdc_spark.sources.binlog import read_changes
 
@@ -52,7 +52,7 @@ events = resolve_cross_key(spark, normalize_fetch(batch), []).persist()
 n_rows = events.count()
 
 # hot-key profile (sampled, same job the tree fold uses)
-hot = sample_hot_keys(events, n_rows)
+hot = sample_key_profile(events, n_rows)[0]
 from pyspark.sql import functions as F
 
 top = (
@@ -69,7 +69,9 @@ for rep in range(reps):
     seq_rows = fetch_winners(events, [], n_events=n_rows).count()
     seq_s.append(round(time.monotonic() - t0, 2))
     t0 = time.monotonic()
-    tree_rows = fetch_winners_tree(events, [], n_events=n_rows).count()
+    # timed with its profile job, as the dispatch in `_winners` pays it
+    tree_hot = sample_key_profile(events, n_rows)[0]
+    tree_rows = fetch_winners_tree(events, [], n_rows, tree_hot).count()
     tree_s.append(round(time.monotonic() - t0, 2))
     print(f"rep{rep}: seq={seq_s[-1]}s tree={tree_s[-1]}s", file=sys.stderr)
 out.update({
