@@ -239,7 +239,7 @@ def main(argv: list[str] | None = None) -> int:
             st = target.state()
             n_rows = target.read_resolved(spark).count()
             print(json.dumps({
-                "epochs_applied": st.get("epochs_applied", len(st["epochs"])),
+                "epochs_applied": st["epochs_applied"],
                 "version": st["version"],
                 "final_rows": n_rows, "seconds": dt,
                 # filtered identically so the two lists stay positionally
@@ -325,7 +325,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             st = table.state()
             print(json.dumps({
-                "epochs_applied": st.get("epochs_applied", 0),
+                "epochs_applied": st["epochs_applied"],
                 "version": st["version"],
                 "final_rows": table.read_resolved(spark).count(),
                 "seconds": round(time.monotonic() - t0, 2),

@@ -63,8 +63,7 @@ from pyspark.sql import types as T
 
 from cdc_spark.caching import track_persist
 from cdc_spark.plans.template import template
-from cdc_spark.sinks.target import norm_registry, registry_key
-from cdc_spark.schema import SPARK_TYPE
+from cdc_spark.sinks.target import extra_value, registry_key
 
 _LOG = logging.getLogger(__name__)
 
@@ -955,13 +954,12 @@ def _fetch_delta_selects(registry: list[dict]):
     filter and key, the state semi-join condition, the pruned state
     image, the image join condition and the typed merge into phys delta
     columns."""
-    reg = norm_registry(registry)
     ssub = [
         F.col("doc_id").alias("_sk"),
         F.col("tokens").alias("_s_tokens"),
         F.col("n_tok").alias("_s_n_tok"),
         F.col("source").alias("_s_source"),
-        *[F.col(c["target"]).alias(f"_s_{c['phys']}") for c in reg],
+        *[F.col(c["target"]).alias(f"_s_{c['phys']}") for c in registry],
     ]
     sel = [
         F.col("doc_id"),
@@ -969,11 +967,8 @@ def _fetch_delta_selects(registry: list[dict]):
         F.when(F.col("need_tokens"), F.col("_s_n_tok")).otherwise(F.col("n_tok")).alias("n_tok"),
         F.when(F.col("need_source"), F.col("_s_source")).otherwise(F.col("source")).alias("source"),
     ]
-    for c in reg:
-        v_f = F.col("extra").getItem(c["source_key"]).cast(SPARK_TYPE[c["type"]])
-        add_lsn = c.get("add_lsn", -1)
-        if add_lsn > 0:
-            v_f = F.when(F.col("lsn") > F.lit(add_lsn), v_f)
+    for c in registry:
+        v_f = extra_value(c)
         merged = F.when(
             F.col("need_extra"), F.coalesce(v_f, F.col(f"_s_{c['phys']}"))
         ).otherwise(v_f)

@@ -49,6 +49,18 @@ set aggregates) whenever the journal proves every delta lsn exceeds
 `base_max_lsn` — the steady-state streaming case. A late-delivered
 epoch below the compaction watermark invalidates that proof and falls
 back to the full hash-aggregate resolve.
+
+One journal format: every entry carries exactly the keys
+`create_if_absent` writes, every registry column its `phys` and
+`add_lsn`, every uncompacted delta epoch its recorded size, and a
+non-empty base lives in `_bucket=` dirs under a journaled
+`base_max_lsn`. Every journal load goes through one reader that checks
+this, so an older journal (a shape no current writer produces) raises
+ValueError naming the table and the shape before any Spark job runs; a
+base is checked with one listdir when compaction starts. Such a table
+is not migrated: rebuild it by replaying its feed into a new path
+(`job replay --binlog <feed> --table <new path>`) — the journal's
+exactly-once guard makes that replay converge to the same state.
 """
 
 from __future__ import annotations
@@ -60,7 +72,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -75,6 +87,16 @@ BASE_FIELDS = [
 ]
 
 _NEG_INF = -(10**18)
+
+#: the keys of every journal entry (`create_if_absent` writes them all)
+_ENTRY_KEYS = frozenset({
+    "version", "kind", "registry", "base_version", "delta_epochs",
+    "delta_refs", "delta_bytes", "applied_ddl", "epoch_floor",
+    "epoch_watermark", "epochs", "epochs_applied", "epoch_stats", "buckets",
+    "bucket_fn", "base_max_lsn", "snapshot_id",
+})
+#: the keys of every registry column (`apply_ddl` writes them all)
+_COLUMN_KEYS = frozenset({"target", "source_key", "type", "add_lsn", "phys"})
 
 _LOG = logging.getLogger(__name__)
 
@@ -91,41 +113,59 @@ def _remove(fn, path: str) -> None:
         _LOG.warning("%s: could not remove; it stays on disk", path, exc_info=True)
 
 
-def norm_registry(reg: list[dict]) -> list[dict]:
-    """Registry entries with `phys` defaulted for legacy journals
-    (pre-round-3 tables rewrote data on rename, so their physical column
-    name always equalled the logical target name)."""
-    return [{**c, "phys": c.get("phys", c["target"])} for c in reg]
+def journal_shape_error(entry: dict) -> str | None:
+    """What makes `entry` a journal shape this engine does not read, or
+    None when it is the one format `TargetTable` writes."""
+    missing, extra = _ENTRY_KEYS - entry.keys(), entry.keys() - _ENTRY_KEYS
+    if missing or extra:
+        return ", ".join([*(f"no {k!r} key" for k in sorted(missing)),
+                          *(f"unknown {k!r} key" for k in sorted(extra))])
+    cols = [c.get("target") for c in entry["registry"] if not _COLUMN_KEYS <= c.keys()]
+    if cols:
+        return f"registry columns {cols} without all of {sorted(_COLUMN_KEYS)}"
+    unsized = [e for e in entry["delta_epochs"] if str(e) not in entry["delta_bytes"]]
+    if unsized:
+        return f"delta epochs {unsized[:5]} without a recorded size"
+    return None
 
 
 def registry_key(registry: list[dict]) -> str:
     """The registry's fingerprint: the plan-template key of every
     projection that depends on it."""
-    return json.dumps(norm_registry(registry), sort_keys=True)
+    return json.dumps(registry, sort_keys=True)
+
+
+def extra_value(c: dict) -> Column:
+    """Registry column `c`'s value in an apply-event: the event's string
+    map under the column's *source* key, cast to the (possibly widened)
+    registry type and masked to events NEWER than the column's add-DDL
+    lsn. That mask makes a projection TIME-INVARIANT: projecting the
+    same events under any later registry yields the same values for the
+    columns that registry names — which is what lets ref-deltas (stored
+    as raw apply-events) defer projection to read/compaction time."""
+    val = F.col("extra").getItem(c["source_key"]).cast(SPARK_TYPE[c["type"]])
+    return F.when(F.col("lsn") > F.lit(c["add_lsn"]), val)
+
+
+def _logical_columns(registry: list[dict]) -> list[Column]:
+    """Phys table columns → logical target names, bookkeeping `last_lsn`
+    last (`deleted` is the caller's)."""
+    return [
+        *(F.col(n) for n, _ in BASE_FIELDS),
+        *(F.col(c["phys"]).alias(c["target"]) for c in registry),
+        F.col("last_lsn"),
+    ]
 
 
 def project_to_table(events: DataFrame, registry: list[dict]) -> DataFrame:
     """Apply-events (APPLY_SCHEMA) → physical table columns under the
-    given registry.
-
-    Extra-column values ride in the event's string map under their
-    *source* key; the physical column uses the STABLE `phys` name at the
-    (possibly widened) registry type. Unregistered keys are ignored.
-    Values are masked to events NEWER than the column's add-DDL lsn.
-    That mask makes the projection TIME-INVARIANT: projecting the same
-    events under any later registry yields the same values for the
-    columns that registry names — which is what lets ref-deltas (stored
-    as raw apply-events) defer projection to read/compaction time."""
+    given registry: each registry column under its STABLE `phys` name,
+    valued by `extra_value`. Unregistered keys are ignored."""
 
     def build():
-        sel = [F.col(n) for n, _ in BASE_FIELDS]
-        for c in norm_registry(registry):
-            val = F.col("extra").getItem(c["source_key"]).cast(SPARK_TYPE[c["type"]])
-            add_lsn = c.get("add_lsn", -1)
-            if add_lsn > 0:
-                val = F.when(F.col("lsn") > F.lit(add_lsn), val)
-            sel.append(val.alias(c["phys"]))
-        return sel + [F.col("lsn").alias("last_lsn"), F.col("deleted")]
+        return [*(F.col(n) for n, _ in BASE_FIELDS),
+                *(extra_value(c).alias(c["phys"]) for c in registry),
+                F.col("lsn").alias("last_lsn"), F.col("deleted")]
 
     return events.select(*template(("project_to_table", registry_key(registry)), build))
 
@@ -205,12 +245,29 @@ class TargetTable:
             int(f[1:9]) for f in os.listdir(self.journal_dir) if f.endswith(".json")
         )
 
+    def _read(self, version: int) -> dict:
+        """The one journal reader: every load of a journal entry comes
+        through here and is refused unless it is the one format this
+        module writes (`journal_shape_error`)."""
+        with open(os.path.join(self.journal_dir, f"v{version:08d}.json")) as f:
+            entry = json.load(f)
+        shape = journal_shape_error(entry)
+        if shape:
+            raise self._refusal(f"journal v{version}", shape)
+        return entry
+
+    def _refusal(self, what: str, shape: str) -> ValueError:
+        return ValueError(
+            f"{self.path}: {what} is in a legacy journal format ({shape}); this "
+            "engine reads only its current format — rebuild the table by "
+            "replaying its feed into a new path"
+        )
+
     def state(self) -> dict:
         vs = self._versions()
         if not vs:
             raise FileNotFoundError(f"no table at {self.path}; call create_if_absent")
-        with open(os.path.join(self.journal_dir, f"v{vs[-1]:08d}.json")) as f:
-            return json.load(f)
+        return self._read(vs[-1])
 
     def state_at(self, version: int) -> dict:
         """Journal entry for an EXACT historical version (Iceberg
@@ -220,33 +277,30 @@ class TargetTable:
         garbage-collected by compaction fails loudly downstream in
         `_require_dirs` (the expireSnapshots analogue — history is
         readable back to the last compaction)."""
-        p = os.path.join(self.journal_dir, f"v{version:08d}.json")
-        if not os.path.isfile(p):
+        if not os.path.isfile(os.path.join(self.journal_dir, f"v{version:08d}.json")):
             vs = self._versions()
             have = f"{vs[0]}..{vs[-1]}" if vs else "none"
             raise ValueError(
                 f"{self.path}: version {version} not in journal "
                 f"(never committed, or expired); retained: {have}"
             )
-        with open(p) as f:
-            return json.load(f)
+        return self._read(version)
 
     def history(self) -> list[dict]:
         """One summary row per retained journal version, oldest first —
         the Iceberg `snapshots` metadata-table analogue (version, kind,
-        epochs applied so far, uncompacted delta count, snapshot id)."""
+        epochs applied so far, uncompacted delta count, highest applied
+        epoch, snapshot id)."""
         out = []
         for v in self._versions():
-            with open(os.path.join(self.journal_dir, f"v{v:08d}.json")) as f:
-                e = json.load(f)
-            eps = e.get("epochs") or []
+            e = self._read(v)
             out.append({
                 "version": v,
-                "kind": e.get("kind"),
-                "epochs_applied": e.get("epochs_applied", 0),
-                "n_delta_epochs": len(e.get("delta_epochs", [])),
-                "max_epoch": max(eps) if eps else None,
-                "snapshot_id": e.get("snapshot_id"),
+                "kind": e["kind"],
+                "epochs_applied": e["epochs_applied"],
+                "n_delta_epochs": len(e["delta_epochs"]),
+                "max_epoch": self.max_epoch(e),
+                "snapshot_id": e["snapshot_id"],
             })
         return out
 
@@ -261,12 +315,11 @@ class TargetTable:
         the latest entries); the walk only runs for already-applied
         ddl_ids."""
         st = self.state()
-        if ddl_id not in st.get("applied_ddl", []):
+        if ddl_id not in st["applied_ddl"]:
             return st["registry"]
         for v in reversed(self._versions()[:-1]):
-            with open(os.path.join(self.journal_dir, f"v{v:08d}.json")) as f:
-                e = json.load(f)
-            if ddl_id not in e.get("applied_ddl", []):
+            e = self._read(v)
+            if ddl_id not in e["applied_ddl"]:
                 return e["registry"]
         # v0 always has an empty applied_ddl, so falling through means
         # the pre-DDL entry was pruned — possible only if one in-flight
@@ -297,25 +350,9 @@ class TargetTable:
 
     def applied_epochs(self, state: dict | None = None) -> tuple[int | None, int, set[int]]:
         """(floor, watermark, sparse): applied ⇔ floor <= e <= watermark
-        or e in the sparse set.
-
-        Legacy journals (written before epoch_floor existed) carry a
-        watermark but no epoch_floor KEY; their semantics were
-        "everything <= watermark is applied", so the floor reads as
-        -inf — otherwise a resumed legacy table would re-apply every
-        compaction-folded epoch (duplicate deltas)."""
+        or e in the sparse set."""
         st = state or self.state()
-        if "epoch_floor" in st:
-            floor = st["epoch_floor"]
-        elif st.get("epoch_watermark", _NEG_INF) > _NEG_INF:
-            floor = _NEG_INF  # legacy journal with a folded watermark
-        else:
-            floor = None
-        return (
-            floor,
-            st.get("epoch_watermark", _NEG_INF),
-            set(st["epochs"]),
-        )
+        return st["epoch_floor"], st["epoch_watermark"], set(st["epochs"])
 
     def max_epoch(self, state: dict | None = None) -> int | None:
         st = state or self.state()
@@ -329,20 +366,22 @@ class TargetTable:
         lets a redelivery be told apart from a PARTIAL delivery (an epoch
         split across micro-batches by a file-source trigger limit).
         Returns None for epochs folded below the compaction watermark."""
-        return self.state().get("epoch_stats", {}).get(str(epoch))
+        return self.state()["epoch_stats"].get(str(epoch))
 
     # -- schema -------------------------------------------------------------
 
-    def schema(self, registry: list[dict] | None = None) -> T.StructType:
-        """LOGICAL schema (target column names) + bookkeeping columns."""
-        reg = norm_registry(self.state()["registry"] if registry is None else registry)
-        fields = [T.StructField(n, t) for n, t in BASE_FIELDS]
-        fields += [T.StructField(c["target"], SPARK_TYPE[c["type"]]) for c in reg]
-        fields += [
+    def _fields(self, registry: list[dict] | None, name: str) -> T.StructType:
+        reg = self.state()["registry"] if registry is None else registry
+        return T.StructType([
+            *(T.StructField(n, t) for n, t in BASE_FIELDS),
+            *(T.StructField(c[name], SPARK_TYPE[c["type"]]) for c in reg),
             T.StructField("last_lsn", T.LongType()),
             T.StructField("deleted", T.BooleanType()),
-        ]
-        return T.StructType(fields)
+        ])
+
+    def schema(self, registry: list[dict] | None = None) -> T.StructType:
+        """LOGICAL schema (target column names) + bookkeeping columns."""
+        return self._fields(registry, "target")
 
     def phys_schema(self, registry: list[dict] | None = None) -> T.StructType:
         """PHYSICAL file-read schema: stable `phys` column names at the
@@ -351,14 +390,7 @@ class TargetTable:
         upcast in place when handed the wider read schema, so a widen
         never needs a rewrite. Files written before an add lack the
         column entirely → nulls."""
-        reg = norm_registry(self.state()["registry"] if registry is None else registry)
-        fields = [T.StructField(n, t) for n, t in BASE_FIELDS]
-        fields += [T.StructField(c["phys"], SPARK_TYPE[c["type"]]) for c in reg]
-        fields += [
-            T.StructField("last_lsn", T.LongType()),
-            T.StructField("deleted", T.BooleanType()),
-        ]
-        return T.StructType(fields)
+        return self._fields(registry, "phys")
 
     # -- DDL (K2/K3: reference sink/CDCKudu.java:68-126 alter-before-DML) ----
 
@@ -376,32 +408,32 @@ class TargetTable:
         nulls). The reference's rename-as-drop+add *loses data*
         (CDCKudu.java:91-102, symmetric set diff); ours preserves it —
         deliberate, test-pinned divergence (SURVEY.md §7.3)."""
+        # ddl_id = "epoch:lsn"; the lsn mints the add's phys id and mask
+        try:
+            lsn = int(ddl_id.rsplit(":", 1)[1])
+        except (IndexError, ValueError):
+            raise ValueError(f"ddl_id {ddl_id!r} has no integer lsn after its "
+                             "last ':' (expected 'epoch:lsn')") from None
         st = self.state()
         if ddl_id in st["applied_ddl"]:
             return
         p = json.loads(payload)
-        reg = norm_registry(st["registry"])
+        reg = [dict(c) for c in st["registry"]]
         if kind == "add_column":
             if p["type"] not in SPARK_TYPE:
                 raise ValueError(f"unsupported column type {p['type']}")
             # add_lsn: only events newer than the add may supply values.
             # Without it, the two-phase DDL-before-DML barrier lets a
             # mid-epoch drop+re-add leak pre-drop values into the
-            # re-added column (projection masks on it; pipeline
-            # project_to_table) — the set-based equivalent of the
-            # reference's strict in-epoch DDL/DML ordering
-            # (CTSQLServer.java:108-114).
-            try:
-                add_lsn = int(ddl_id.rsplit(":", 1)[1])
-            except (IndexError, ValueError):
-                add_lsn = -1
+            # re-added column (`extra_value` masks on it) — the
+            # set-based equivalent of the reference's strict in-epoch
+            # DDL/DML ordering (CTSQLServer.java:108-114).
             reg.append({
                 "target": p["name"], "source_key": p["name"], "type": p["type"],
-                "add_lsn": add_lsn,
+                "add_lsn": lsn,
                 # stable physical id: unique because each DDL event owns a
-                # unique lsn (ddl_id = "epoch:lsn"); collision-free with
-                # any legacy phys (legacy phys never contains "_x")
-                "phys": f"{p['name']}_x{add_lsn}",
+                # unique lsn
+                "phys": f"{p['name']}_x{lsn}",
             })
         elif kind == "rename_column":
             hit = [c for c in reg if c["target"] == p["from"]]
@@ -438,26 +470,18 @@ class TargetTable:
         if not st["base_version"]:
             return None
         d = os.path.join(self.path, "base", f"v{st['base_version']:08d}")
-        return d if os.path.isdir(d) else None
+        return self._require_dirs([d], "base")[0]
 
     def _delta_dirs(self, st: dict) -> list[str]:
         paths = [
             os.path.join(self.path, "delta", f"epoch={e:08d}")
             for e in st["delta_epochs"]
-            if str(e) not in st.get("delta_refs", {})
+            if str(e) not in st["delta_refs"]
         ]
         return self._require_dirs(paths, "delta")
 
     def _ref_dirs(self, st: dict) -> list[str]:
-        return self._require_dirs(
-            list(st.get("delta_refs", {}).values()), "ref-delta"
-        )
-
-    def _carry_dirs(self, st: dict) -> list[str]:
-        """Legacy carry dirs: delta rows (phys columns) that a budgeted
-        compaction tick of an older engine left unconsumed. Read with the
-        deltas until the next compaction consumes them."""
-        return self._require_dirs(list(st.get("carry_deltas", [])), "carry-delta")
+        return self._require_dirs(list(st["delta_refs"].values()), "ref-delta")
 
     def _require_dirs(self, paths: list[str], kind: str) -> list[str]:
         """Journal-referenced directories MUST exist: commit_delta always
@@ -478,25 +502,38 @@ class TargetTable:
 
     def _data_paths(self, st: dict) -> list[str]:
         base = self._base_dir(st)
-        return ([base] if base else []) + self._delta_dirs(st) + self._carry_dirs(st)
+        return ([base] if base else []) + self._delta_dirs(st)
 
-    @staticmethod
-    def _base_partitioned(base_dir: str) -> bool:
-        return any(c.startswith("_bucket=") for c in os.listdir(base_dir))
+    def _base_bucketed(self, st: dict) -> bool:
+        """True iff the base holds `_bucket=` dirs; False for no base or
+        an empty one (no live rows). One listdir, run when
+        compaction starts: data files outside `_bucket=` dirs, or bucket
+        dirs under a null `base_max_lsn`, are a base this engine never
+        writes and are refused before any Spark job."""
+        base = self._base_dir(st)
+        names = os.listdir(base) if base else []
+        # Spark's own markers (_SUCCESS, .crc) start with "_" or "."
+        loose = [n for n in names if not n.startswith(("_", "."))]
+        if loose:
+            raise self._refusal(f"base v{st['base_version']}",
+                                f"data files outside _bucket= dirs: {loose[:3]}")
+        bucketed = any(n.startswith("_bucket=") for n in names)
+        if bucketed and st["base_max_lsn"] is None:
+            raise self._refusal(f"base v{st['base_version']}",
+                                "bucketed base without base_max_lsn")
+        return bucketed
 
     def _bucket_col(self, st: dict) -> F.Column:
-        return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(st.get("buckets", self.buckets))).cast("int")
+        return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(st["buckets"])).cast("int")
 
     def read_base(self, spark: SparkSession, st: dict, keep_bucket: bool = False) -> DataFrame | None:
         base = self._base_dir(st)
         if base is None:
             return None
         df = spark.read.schema(self.phys_schema(st["registry"])).parquet(base)
-        # the _bucket partition column auto-appends on partitioned layouts
+        # the _bucket partition column auto-appends on a non-empty base
         if "_bucket" in df.columns and not keep_bucket:
             df = df.drop("_bucket")
-        if keep_bucket and "_bucket" not in df.columns:
-            df = df.withColumn("_bucket", self._bucket_col(st))
         return df
 
     def read_deltas(self, spark: SparkSession, st: dict) -> DataFrame | None:
@@ -509,7 +546,7 @@ class TargetTable:
         read, which project_to_table's add-lsn masking makes equivalent
         to having projected them at commit time."""
         parts = []
-        paths = self._delta_dirs(st) + self._carry_dirs(st)
+        paths = self._delta_dirs(st)
         if paths:
             parts.append(
                 spark.read.schema(self.phys_schema(st["registry"])).parquet(*paths)
@@ -532,47 +569,27 @@ class TargetTable:
             total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
         return total
 
-    def _delta_bytes(self, st: dict) -> int:
-        """Total uncompacted delta bytes — from journal-recorded sizes
-        (the writer measures each epoch dir ONCE at commit time). Only a
-        legacy journal entry with no recorded size pays a filesystem walk
-        for that epoch; at scale a per-read walk here would be an
-        object-store LIST per query."""
-        sizes = st.get("delta_bytes", {})
-        refs = st.get("delta_refs", {})
-        total = 0
-        for e in st["delta_epochs"]:
-            s = sizes.get(str(e))
-            if s is None:
-                p = refs.get(str(e)) or os.path.join(
-                    self.path, "delta", f"epoch={e:08d}"
-                )
-                s = self._dir_bytes(p)
-            total += s
-        return total
-
     def _fast_resolve_ok(self, st: dict) -> bool:
         """The broadcast fast path is sound iff the journal PROVES every
         delta row's lsn exceeds every base row's lsn (then a delta winner
         unconditionally supersedes its base row). Steady-state streaming
         always satisfies this; a late epoch delivered below the
-        compaction watermark, an epoch committed without stats, or a
-        legacy carry dir (no lsn bound is journaled for its rows) falls
-        back to the full aggregate."""
-        if self._carry_dirs(st):
-            return False
+        compaction watermark or an epoch committed without stats falls
+        back to the full aggregate. The delta volume comes from the sizes
+        the writer recorded at commit: a per-read filesystem walk would
+        be an object-store LIST per query at scale."""
         if not st["delta_epochs"]:
             return True
         if st["base_version"]:
-            base_max = st.get("base_max_lsn")
+            base_max = st["base_max_lsn"]
             if base_max is None:
                 return False
-            stats = st.get("epoch_stats", {})
             for e in st["delta_epochs"]:
-                s = stats.get(str(e))
+                s = st["epoch_stats"].get(str(e))
                 if not s or s.get("min_lsn") is None or s["min_lsn"] <= base_max:
                     return False
-        return self._delta_bytes(st) <= self.resolve_join_max_bytes
+        size = sum(st["delta_bytes"][str(e)] for e in st["delta_epochs"])
+        return size <= self.resolve_join_max_bytes
 
     @staticmethod
     def _lww(df: DataFrame) -> DataFrame:
@@ -592,9 +609,7 @@ class TargetTable:
         """phys column names → logical target names (live rows only)."""
 
         def build():
-            sel = [F.col(n) for n, _ in BASE_FIELDS]
-            sel += [F.col(c["phys"]).alias(c["target"]) for c in norm_registry(registry)]
-            return ~F.col("deleted"), [*sel, F.col("last_lsn")]
+            return ~F.col("deleted"), _logical_columns(registry)
 
         live, sel = template(("target._to_logical", registry_key(registry)), build)
         return df.filter(live).select(*sel)
@@ -676,9 +691,10 @@ class TargetTable:
             ) or e in s_from
 
         new_eps = sorted(e for e in s_to if not _applied_from(e))
-        if f_to is not None and w_to > _NEG_INF:
-            # folded = [f_to, w_to] - [f_from, w_from] - s_from as intervals:
-            # a legacy floor is -inf, so count the span, never walk it
+        if f_to is not None:
+            # folded = [f_to, w_to] - [f_from, w_from] - s_from as
+            # intervals: count the span, never walk it (it covers every
+            # epoch compaction ever folded)
             spans = [(f_to, w_to)]
             if f_from is not None and f_from <= w_from:
                 spans = [(f_to, min(w_to, f_from - 1)), (max(f_to, w_from + 1), w_to)]
@@ -698,7 +714,7 @@ class TargetTable:
         phys = self.phys_schema(reg)
         parts, missing = [], []
         for e in new_eps:
-            ref = (st_to.get("delta_refs") or {}).get(str(e))
+            ref = st_to["delta_refs"].get(str(e))
             d = ref or os.path.join(self.path, "delta", f"epoch={e:08d}")
             if not os.path.isdir(d):
                 missing.append((e, d))
@@ -724,17 +740,8 @@ class TargetTable:
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p)
-        reg_n = norm_registry(reg)
-        sel = [F.col(n) for n, _ in BASE_FIELDS]
-        sel += [F.col(c["phys"]).alias(c["target"]) for c in reg_n]
-        sel += [
-            F.col("last_lsn"),
-            F.when(F.col("deleted"), F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias("_change_type"),
-            F.col("_epoch"),
-        ]
-        return out.select(*sel)
+        change = F.when(F.col("deleted"), F.lit("delete")).otherwise(F.lit("upsert"))
+        return out.select(*_logical_columns(reg), change.alias("_change_type"), F.col("_epoch"))
 
     # -- write ----------------------------------------------------------------
 
@@ -762,7 +769,7 @@ class TargetTable:
             return None
         outdir = os.path.join(self.path, "delta", f"epoch={epoch:08d}")
         if not pre_partitioned:
-            df = df.repartition(st.get("buckets", self.buckets), F.col("doc_id"))
+            df = df.repartition(st["buckets"], F.col("doc_id"))
         df.write.mode("overwrite").parquet(outdir)
         if callable(stats):
             stats = stats()
@@ -791,7 +798,8 @@ class TargetTable:
         """Journal one epoch whose apply-rows sit in `data_dir` (its own
         delta dir, or a referenced staged slice when `ref`), then run the
         inline compaction tick once enough deltas piled up."""
-        refs = {"delta_refs": {**st.get("delta_refs", {}), str(epoch): data_dir}}
+        refs = {"delta_refs": {**st["delta_refs"], str(epoch): data_dir}}
+        floor = st["epoch_floor"]
         entry = self._commit(
             {
                 **st,
@@ -802,17 +810,11 @@ class TargetTable:
                 # measured ONCE here by the writer; read_resolved's
                 # fast-path volume check reads the journal instead of
                 # walking the filesystem per read
-                "delta_bytes": {**st.get("delta_bytes", {}),
-                                str(epoch): self._dir_bytes(data_dir)},
-                # resolved via applied_epochs so a legacy journal (no
-                # epoch_floor key) keeps its -inf floor instead of
-                # un-applying its folded watermark range
-                "epoch_floor": (lambda f: epoch if f is None else min(f, epoch))(
-                    self.applied_epochs(st)[0]
-                ),
+                "delta_bytes": {**st["delta_bytes"], str(epoch): self._dir_bytes(data_dir)},
+                "epoch_floor": epoch if floor is None else min(floor, epoch),
                 "epochs": sorted(set(st["epochs"]) | {epoch}),
-                "epochs_applied": st.get("epochs_applied", 0) + 1,
-                "epoch_stats": {**st.get("epoch_stats", {}),
+                "epochs_applied": st["epochs_applied"] + 1,
+                "epoch_stats": {**st["epoch_stats"],
                                 **({str(epoch): stats} if stats else {})},
             }
         )
@@ -832,35 +834,22 @@ class TargetTable:
         resolve-and-rewrite. The rewrite runs under the CURRENT registry's
         phys schema, so stale phys columns (from drops) and narrow types
         (from widens) are physically normalized away bucket-by-bucket as
-        buckets get dirty — never as a synchronous whole-table job.
-        A legacy (unpartitioned) base forces one full rewrite that adopts
-        the bucket layout and seeds `base_max_lsn`. Legacy carry dirs
-        are read with the deltas and consumed; the new entry drops their
-        journal keys, so GC removes them."""
+        buckets get dirty — never as a synchronous whole-table job. An
+        empty base (every row deleted) contributes nothing."""
+        bucketed = self._base_bucketed(st)
         deltas = self.read_deltas(spark, st)
-        base_dir = self._base_dir(st)
-        bucketed = base_dir is not None and self._base_partitioned(base_dir)
-        prev_max = st.get("base_max_lsn")
+        if deltas is None and bucketed:
+            return st  # nothing to consume
 
-        if deltas is None and bucketed and prev_max is not None:
-            return st  # nothing to consume, layout already current
-
-        buckets = st.get("buckets", self.buckets)
         bcol = self._bucket_col(st)
-        dirty: list[int] | None = None  # None → all buckets
-        delta_max = None
+        parts, delta_max = [], None
         if deltas is not None:
             agg = deltas.groupBy(bcol.alias("_b")).agg(F.max("last_lsn").alias("m")).collect()
-            if bucketed and prev_max is not None:
-                dirty = sorted(r["_b"] for r in agg)
+            dirty = sorted(r["_b"] for r in agg)
             delta_max = max((r["m"] for r in agg), default=None)
-
-        base = self.read_base(spark, st, keep_bucket=True)
-        parts = []
-        if base is not None:
-            parts.append(base.filter(F.col("_bucket").isin(dirty)).drop("_bucket")
-                         if dirty is not None else base.drop("_bucket"))
-        if deltas is not None:
+            if bucketed:
+                base = self.read_base(spark, st, keep_bucket=True)
+                parts.append(base.filter(F.col("_bucket").isin(dirty)).drop("_bucket"))
             parts.append(deltas)
         new_base = st["version"] + 1
         outdir = os.path.join(self.path, "base", f"v{new_base:08d}")
@@ -875,45 +864,31 @@ class TargetTable:
                 .withColumn("_bucket", bcol)
             )
             # ~1 write task per dirty bucket → bounded files per bucket
-            out.repartition(buckets, F.col("_bucket")).write.mode(
+            out.repartition(st["buckets"], F.col("_bucket")).write.mode(
                 "overwrite"
             ).partitionBy("_bucket").parquet(outdir)
         else:
             os.makedirs(outdir, exist_ok=True)
-        if dirty is not None and base_dir:
-            self._link_clean_buckets(base_dir, outdir, exclude=set(dirty))
-        new_max = max((v for v in (prev_max, delta_max) if v is not None), default=None)
-        if parts and (new_max is None or (prev_max is None and base is not None)):
-            # no journal-proven lsn bound for every row: legacy-base
-            # adoption (prev_max None while base rows exist — a
-            # late-delivered delta epoch can sit BELOW legacy base lsns,
-            # so delta_max alone would understate the base maximum and
-            # corrupt the broadcast fast-path invariant) or statless
-            # epochs. The prev_max-None path always full-rewrites (dirty
-            # stays None), so the new base is complete: take its max.
-            new_max = (
-                self.read_base(spark, {**st, "base_version": new_base})
-                .agg(F.max("last_lsn")).first()[0]
-            )
+        if bucketed:
+            self._link_clean_buckets(self._base_dir(st), outdir, exclude=set(dirty))
+        # every row of the new base came from the old base (bounded by
+        # its base_max_lsn) or from the deltas
+        new_max = max((v for v in (st["base_max_lsn"], delta_max) if v is not None),
+                      default=None)
 
         # fold the contiguous applied prefix into the watermark so the
         # epochs list + stats stay O(epochs-since-last-gap), not O(all);
         # the fold starts at epoch_floor, never below it (a feed starting
         # at epoch N>0 must not mark epochs < N applied)
-        floor = st.get("epoch_floor")
-        w = st.get("epoch_watermark", _NEG_INF)
-        if floor is not None and w < floor:
-            w = floor - 1
-        sparse = sorted(set(st["epochs"]))
+        floor, w, sparse = self.applied_epochs(st)
+        if floor is not None:
+            w = max(w, floor - 1)
+        sparse = sorted(sparse)
         while sparse and sparse[0] <= w + 1:
             w = max(w, sparse.pop(0))
-        # the legacy carry keys (`carry_*` and the per-bucket lsn map
-        # `*_by_bucket`) describe rows this rewrite consumed
-        kept = {k: v for k, v in st.items()
-                if not k.startswith("carry_") and not k.endswith("_by_bucket")}
         entry = self._commit(
             {
-                **kept,
+                **st,
                 "version": new_base,
                 "kind": "compact",
                 "base_version": new_base,
@@ -924,7 +899,7 @@ class TargetTable:
                 "epoch_watermark": w,
                 "epochs": sparse,
                 "epoch_stats": {
-                    k: v for k, v in st.get("epoch_stats", {}).items() if int(k) in set(sparse)
+                    k: v for k, v in st["epoch_stats"].items() if int(k) in set(sparse)
                 },
             }
         )

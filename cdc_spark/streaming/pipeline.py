@@ -45,9 +45,7 @@ from cdc_spark.operators import fetch
 from cdc_spark.operators.dedupe import lww_dedupe
 from cdc_spark.operators.normalize import normalize
 from cdc_spark.plans.template import template
-from cdc_spark.sinks.target import (
-    TableRouter, TargetTable, norm_registry, project_to_table,
-)
+from cdc_spark.sinks.target import TableRouter, TargetTable, project_to_table
 from cdc_spark.sources.binlog import list_segments, read_changes, stream_reader
 
 __all__ = [
@@ -275,7 +273,7 @@ def apply_batch(
             # removed the mapping, and a same-epoch re-add would then
             # leak pre-drop values without the purge
             name = json.loads(r["ddl_payload"])["name"]
-            hit = [c for c in norm_registry(tables[k].registry_before_ddl(ddl_id))
+            hit = [c for c in tables[k].registry_before_ddl(ddl_id)
                    if c["target"] == name]
             if hit:
                 drops.setdefault(k, []).append((r["lsn"], hit[0]["source_key"]))
@@ -500,7 +498,7 @@ def _sweep_stage(
     live = set()
     for name in router.names():
         st = router.get(name).state()
-        for p in st.get("delta_refs", {}).values():
+        for p in st["delta_refs"].values():
             live.add(os.path.abspath(os.path.dirname(p)))
     for child in os.listdir(stage_root):
         p = os.path.abspath(os.path.join(stage_root, child))

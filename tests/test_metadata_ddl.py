@@ -117,6 +117,22 @@ def test_drop_is_read_side_only_and_readd_starts_null(spark, tmp_path):
     assert df.filter(F.col("q").isNull()).count() == 1  # pre-drop value gone
 
 
+def test_ddl_id_without_integer_lsn_refuses(spark, tmp_path):
+    """An added column's phys id and add-lsn mask come from the lsn after
+    the ddl_id's last ':'. Without one, a drop and re-add of a column
+    would share one phys id, and the re-added column would read the
+    pre-drop values back; such an id must refuse and commit nothing."""
+    import pytest
+
+    t = TargetTable(str(tmp_path / "t"), compact_every=100)
+    t.create_if_absent()
+    add = json.dumps({"name": "a", "type": "int"})
+    for ddl_id in ("add-a", "0:", "0:x"):
+        with pytest.raises(ValueError, match="no integer lsn"):
+            t.apply_ddl(spark, "add_column", add, ddl_id)
+    assert t.state()["version"] == 0 and t.state()["registry"] == []
+
+
 def test_compaction_rewrites_only_dirty_buckets(spark, tmp_path):
     """File-level pin: after a compaction whose deltas touch a subset of
     buckets, clean buckets' data files are carried forward as hard links
@@ -128,7 +144,7 @@ def test_compaction_rewrites_only_dirty_buckets(spark, tmp_path):
     t.compact(spark)  # base v*, bucket-partitioned
     st = t.state()
     base1 = t._base_dir(st)
-    assert t._base_partitioned(base1)
+    assert t._base_bucketed(st)
     inodes1 = {
         f"{d}/{f}": os.stat(os.path.join(base1, d, f)).st_ino
         for d in os.listdir(base1) if d.startswith("_bucket=")
@@ -225,7 +241,7 @@ def test_incremental_compaction_tick_job_budget(spark, tmp_path):
     t.create_if_absent()
     _delta(spark, t, [{"doc_id": f"d{i:02d}", "last_lsn": i + 1} for i in range(40)], epoch=0)
     t.compact(spark)
-    assert t._base_partitioned(t._base_dir(t.state()))
+    assert t._base_bucketed(t.state())
     _delta(spark, t, [{"doc_id": f"d{i:02d}", "last_lsn": 100 + i} for i in range(0, 40, 3)],
            epoch=1)
     _delta(spark, t, [{"doc_id": f"d{i:02d}", "last_lsn": 200 + i} for i in range(1, 40, 5)],
@@ -233,39 +249,6 @@ def test_incremental_compaction_tick_job_budget(spark, tmp_path):
     n = jobs_during(spark, lambda: t.compact(spark))
     assert t.state()["kind"] == "compact" and t.state()["delta_epochs"] == []
     assert n <= 6, f"incremental compaction tick ran {n} jobs (budget 6)"
-
-
-def test_legacy_base_adoption_recomputes_base_max_lsn(spark, tmp_path):
-    """Legacy-base adoption must recompute base_max_lsn from the
-    rewritten data when the journal had none: seeding it from delta_max
-    alone understates the base maximum when a late-delivered epoch sits
-    below legacy base lsns, and the broadcast fast path would let an
-    older delta image supersede a newer base row."""
-    t = TargetTable(str(tmp_path / "t"), compact_every=100)
-    t.create_if_absent()
-    _delta(spark, t, [{"doc_id": "a", "last_lsn": 50}], epoch=10)
-    t.compact(spark)
-    assert t.state()["base_max_lsn"] == 50
-
-    # simulate a legacy journal written before base_max_lsn existed
-    st = t.state()
-    t._commit({**st, "version": st["version"] + 1, "kind": "legacy-sim",
-               "base_max_lsn": None})
-
-    # a late-delivered epoch BELOW the legacy base's lsns
-    _delta(spark, t, [{"doc_id": "b", "last_lsn": 9, "tokens": [2]}], epoch=9)
-    t.compact(spark)
-    # seeding from delta_max would give 9; the rewritten base carries a@50
-    assert t.state()["base_max_lsn"] == 50
-
-    # the understated bound would have approved the broadcast fast path
-    # for this epoch (min_lsn 20 > 9) and let the OLDER image of "a"
-    # supersede the newer base row — silent LWW corruption
-    _delta(spark, t, [{"doc_id": "a", "last_lsn": 20, "tokens": [7]}], epoch=11)
-    assert not t._fast_resolve_ok(t.state())
-    rows = {r["doc_id"]: r.asDict() for r in t.read_resolved(spark).collect()}
-    assert rows["a"]["last_lsn"] == 50 and rows["a"]["tokens"] == [1]
-    assert rows["b"]["last_lsn"] == 9
 
 
 def test_delta_bytes_recorded_at_commit_not_walked_at_read(spark, tmp_path, monkeypatch):
@@ -285,72 +268,3 @@ def test_delta_bytes_recorded_at_commit_not_walked_at_read(spark, tmp_path, monk
     monkeypatch.setattr(TargetTable, "_dir_bytes", staticmethod(boom))
     rows = t.read_resolved(spark).collect()
     assert len(rows) == 1
-
-
-def test_legacy_carry_dir_is_read_then_consumed_by_compaction(spark, tmp_path):
-    """Tables written by an engine with budgeted compaction ticks can hold
-    carry dirs: delta rows (phys columns) a tick left unconsumed, listed
-    under the journal's `carry_deltas`. Reads must include them, the
-    broadcast fast path must stay off while they exist (no lsn bound is
-    journaled for them), and the next compaction consumes them, drops
-    every carry key, lets GC remove the dirs and restores the fast path."""
-    from cdc_spark.plans.inspect import formatted_plan
-
-    t = TargetTable(str(tmp_path / "t"), compact_every=100, buckets=8)
-    t.create_if_absent()
-    base_rows = [{"doc_id": f"d{i:02d}", "last_lsn": i + 1, "tokens": [i]} for i in range(20)]
-    _delta(spark, t, base_rows, epoch=0)
-    t.compact(spark)
-    delta_rows = [
-        {"doc_id": "d05", "last_lsn": 105, "tokens": [105]},
-        {"doc_id": "d06", "last_lsn": 106, "deleted": True},
-    ]
-    _delta(spark, t, delta_rows, epoch=1)
-
-    carry_rows = [
-        {"doc_id": "d03", "last_lsn": 50, "tokens": [50]},
-        {"doc_id": "d04", "last_lsn": 51, "deleted": True},
-        {"doc_id": "d05", "last_lsn": 60, "tokens": [60]},  # the delta's lsn 105 wins
-        {"doc_id": "c1", "last_lsn": 52, "tokens": [52]},
-    ]
-    sch = t.phys_schema()
-    carry_dir = os.path.join(t.path, "delta", "carry-v00000009")
-    spark.createDataFrame(
-        [(r["doc_id"], r.get("tokens", [1]), 1, "s", r["last_lsn"], r.get("deleted", False))
-         for r in carry_rows],
-        schema=sch,
-    ).write.mode("overwrite").parquet(carry_dir)
-    st = t.state()
-    t._commit({**st, "version": st["version"] + 1, "kind": "legacy-sim",
-               "carry_deltas": [carry_dir]})
-
-    def python_lww(*row_sets):
-        win: dict = {}
-        for r in (r for rs in row_sets for r in rs):
-            key = (r["last_lsn"], r.get("deleted", False))
-            if r["doc_id"] not in win or key > win[r["doc_id"]][0]:
-                win[r["doc_id"]] = (key, r)
-        return {k: (r["last_lsn"], list(r.get("tokens", [1])))
-                for k, ((_, dead), r) in win.items() if not dead}
-
-    def table_rows():
-        return {r["doc_id"]: (r["last_lsn"], list(r["tokens"]))
-                for r in t.read_resolved(spark).collect()}
-
-    want = python_lww(base_rows, delta_rows, carry_rows)
-    assert "d04" not in want and want["d05"] == (105, [105]) and "c1" in want
-    assert table_rows() == want
-    assert not t._fast_resolve_ok(t.state())
-
-    entry = t.compact(spark)
-    assert not [k for k in entry if k.startswith("carry")], entry
-    assert not [k for k in t.state() if k.startswith("carry")]
-    assert not [c for c in os.listdir(os.path.join(t.path, "delta")) if c.startswith("carry-")]
-    assert table_rows() == want
-
-    late_rows = [{"doc_id": "d03", "last_lsn": 300, "tokens": [300]}]
-    _delta(spark, t, late_rows, epoch=2)
-    assert t._fast_resolve_ok(t.state())
-    plan = formatted_plan(t.read_resolved(spark))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-    assert table_rows() == python_lww(base_rows, delta_rows, carry_rows, late_rows)

@@ -72,6 +72,20 @@ def test_compaction_expires_history_loudly(spark, workdir, small_binlog):
         table.read_resolved(spark, version=v_old).collect()
 
 
+def test_time_travel_to_a_collected_base_raises(spark, workdir, small_binlog):
+    """A compaction entry references no delta dirs, only its base; once a
+    later compaction has collected that base, reading the entry must
+    raise, not resolve to an empty table."""
+    d = f"{workdir}/tt_base_gone"
+    table = replay(spark, small_binlog, d, stop_after=2, lineage=False)
+    v = table.compact(spark)["version"]
+    assert table.state_at(v)["delta_epochs"] == []
+    replay(spark, small_binlog, d, lineage=False)
+    table.compact(spark)
+    with pytest.raises(FileNotFoundError, match="journal references 1 base dir"):
+        table.read_resolved(spark, version=v)
+
+
 def test_changelog_applies_forward_to_latest_state(spark, workdir):
     """read_changes_between(v_a) must be a COMPLETE changelog: applying
     its upserts/deletes (LWW by last_lsn) on top of the v_a snapshot
@@ -136,12 +150,12 @@ def test_changelog_empty_and_expired(spark, workdir, small_binlog):
 def test_legacy_journal_changelog_refuses_without_walking_the_floor(
     spark, workdir, small_binlog
 ):
-    """A legacy journal (no `epoch_floor` key) reads its folded floor as
-    -inf; a changelog window from the create version must still refuse
-    at once with "consumed by compaction" instead of walking 10^18
-    epochs. The read runs in a child process under a 2 GiB address-space
-    limit and a 60 s timeout: an implementation that lists the span
-    would otherwise grow until the host runs out of memory."""
+    """A journal from before `epoch_floor` existed (its folded floor read
+    as -inf, which a changelog window once tried to walk) is refused by
+    the journal format check before the changelog scan plans anything.
+    The read runs in a child process under a 2 GiB address-space limit
+    and a 60 s timeout: an implementation that lists the span would
+    otherwise grow until the host runs out of memory."""
     import glob
     import json
     import subprocess
@@ -155,7 +169,8 @@ def test_legacy_journal_changelog_refuses_without_walking_the_floor(
         entry.pop("epoch_floor", None)
         with open(p, "w") as f:
             json.dump(entry, f)
-    assert TargetTable(d).applied_epochs()[0] < -10**17  # legacy -inf floor
+    with pytest.raises(ValueError, match="legacy journal format"):
+        TargetTable(d).state()
     # the refusal comes before any Spark work, so no session is needed
     code = (
         "import resource, sys\n"
@@ -163,13 +178,35 @@ def test_legacy_journal_changelog_refuses_without_walking_the_floor(
         "from cdc_spark.sinks.target import TargetTable\n"
         "try:\n"
         "    TargetTable(sys.argv[1]).read_changes_between(None, 0)\n"
-        "except FileNotFoundError as e:\n"
+        "except ValueError as e:\n"
         "    print('refused:', e)\n"
     )
     out = subprocess.run([sys.executable, "-c", code, d], cwd=_REPO,
                          capture_output=True, text=True, timeout=60)
     assert out.returncode == 0, out.stderr[-2000:]
-    assert "refused:" in out.stdout and "consumed by compaction" in out.stdout
+    assert "refused:" in out.stdout and "legacy journal format" in out.stdout
+    assert "'epoch_floor'" in out.stdout
+
+
+def test_history_reports_max_epoch_of_compactions(spark, workdir, small_binlog):
+    """A compaction folds its epochs into the watermark, leaving the
+    entry's sparse `epochs` list empty; `history()` and `job history`
+    must still report the highest applied epoch, as `max_epoch()` does."""
+    import json
+    import subprocess
+    import sys
+
+    d = f"{workdir}/hist_compacted"
+    table = replay(spark, small_binlog, d, lineage=False, stop_after=4, compact_every=2)
+    hist = table.history()
+    assert hist[-1]["kind"] == "compact" and table.state()["epochs"] == []
+    assert hist[-1]["max_epoch"] == table.max_epoch() == 3
+    for h in hist:
+        assert h["max_epoch"] == table.max_epoch(table.state_at(h["version"]))
+    res = subprocess.run([sys.executable, "-m", "cdc_spark.job", "history", "--table", d],
+                         capture_output=True, text=True, cwd=_REPO, timeout=120)
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert json.loads(res.stdout.strip().splitlines()[-1]) == hist
 
 
 def test_changes_cli_reports_version_zero(spark, workdir, small_binlog):
