@@ -69,21 +69,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # CDC operator queries (events table; DuckDB-oracled)
 # ---------------------------------------------------------------------------
 
-def _q_lww_window(spark, sf):
-    ev = _load(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("event_id").desc())
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.col("value").alias("last_value"),
-        )
-    )
-
-
 _SQL_LWW = """
 SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
        value AS last_value
@@ -1034,7 +1019,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     training-data ops the 100-TB pipeline needs)."""
     return {
         # CDC operators (§2) over the events table
-        "cdc_lww_dedupe_window": _q_lww_window,      # O3 (window form)
         "cdc_lww_dedupe_agg": _q_lww_agg,            # O3 (max_by partial-agg form)
         "cdc_merge_apply": _q_merge_apply,           # K4/K5 final-state semantics
         "cdc_missing_mask_merge": _q_mask_merge,     # T7 before-image fill analogue
@@ -1113,7 +1097,6 @@ def oracle_sql() -> dict[str, str]:
         for l, cond in langs.items()
     )
     return {
-        "cdc_lww_dedupe_window": _SQL_LWW,
         "cdc_lww_dedupe_agg": _SQL_LWW,
         "cdc_merge_apply": """
             SELECT user_id, event_id AS last_event_id, value AS last_value

@@ -37,7 +37,6 @@ EPOCH = int(os.environ.get("CDC_BENCH_EPOCH", "500000"))
 #: contract queries worth timing at sf0.1 (skip the tiny/driver-bound ones)
 HEADLINE = [
     "cdc_lww_dedupe_agg",
-    "cdc_lww_dedupe_window",
     "cdc_merge_apply",
     "cdc_missing_mask_merge",
     "cdc_metrics_agg",

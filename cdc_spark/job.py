@@ -66,11 +66,6 @@ def main(argv: list[str] | None = None) -> int:
                        help="carry: events bring full images; fetch: key-only "
                             "feed, images fetched from earlier events + the "
                             "table's own resolved state (reference CT shape)")
-        if name == "replay":
-            r.add_argument("--no-lineage", action="store_true",
-                           help="skip per-partition lineage emission; routes "
-                                "apply_batch through the Observation-folded "
-                                "single-job fast path (one less job/epoch)")
         r.add_argument("--multi-table", action="store_true",
                        help="route events by the `table` column into "
                             "per-table targets under --table (reference: "
@@ -221,8 +216,7 @@ def main(argv: list[str] | None = None) -> int:
                 target = replay(
                     spark, args.binlog, args.table,
                     compact_every=args.compact_every, stats_out=epoch_stats,
-                    wire=args.wire, lineage=not args.no_lineage,
-                    images=args.images,
+                    wire=args.wire, images=args.images,
                 )
             dt = round(time.monotonic() - t0, 2)
             if args.multi_table:

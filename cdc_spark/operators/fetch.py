@@ -543,7 +543,7 @@ def resolve_cross_key(
     satisfied by fetch_delta's one typed state join.
 
     `n_pk_change`: the epoch's PK-change event count when the caller's
-    stats pass already knows it (lineage_stats pk_change=True). 0 skips
+    probe already counted it (`pipeline._probe`, pk_change=True). 0 skips
     even the edge-probe job — the common no-PK-change epoch then pays
     nothing here."""
     if n_pk_change == 0:

@@ -91,25 +91,6 @@ TOKENS_BASE_SCHEMA = T.StructType(
     ]
 )
 
-# ---------------------------------------------------------------------------
-# F3 — per-micro-batch lineage
-# ---------------------------------------------------------------------------
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("epoch", T.LongType()),
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("min_lsn", T.LongType()),
-        T.StructField("max_lsn", T.LongType()),
-        T.StructField("n_insert", T.LongType()),
-        T.StructField("n_update", T.LongType()),
-        T.StructField("n_delete", T.LongType()),
-        T.StructField("n_ddl", T.LongType()),
-        T.StructField("snapshot_id", T.StringType()),
-        T.StructField("events_per_sec", T.DoubleType()),
-    ]
-)
-
 #: Spark type names accepted for DDL-added columns, and legal widenings
 #: (reference schema evolution is add/drop nullable only, CDCKudu.java:68-126;
 #: we additionally support rename + widen per the north rule).

@@ -10,10 +10,10 @@ apply CDCKudu.java:352-384) but set-based instead of row-at-a-time:
    Spark job (exactly-once; the reference keeps offsets in driver memory
    only, CTInputDStream.java:60-62,96-97).
 2. ONE pruned probe aggregate per epoch → each route's redelivery
-   fingerprint, op counts and DDL events (single-table carry without
-   lineage: a pushdown-pruned DDL probe + Observation metrics instead).
-   `replay` runs a single table's probe on its look-ahead thread while
-   the previous epoch commits.
+   fingerprint, op counts and DDL events (a single-table carry epoch:
+   a pushdown-pruned DDL probe, with the counts folded into its write
+   as Observation metrics). `replay` runs a single table's probe on its
+   look-ahead thread while the previous epoch commits.
 3. checks: unknown ops, redelivered contents, then DDL applied to table
    metadata FIRST — the two-phase replacement for the reference's
    DDL-before-DML sort barrier (CTSQLServer.java:108-114), idempotent by
@@ -22,7 +22,8 @@ apply CDCKudu.java:352-384) but set-based instead of row-at-a-time:
    order, so the feed reads from N partitions — CTInputDStream.java:127's
    TODO) and commits a delta, or, routed, a journal-only reference into
    one staged write; fetch resolves key-only events (operators/fetch.py).
-5. per-partition lineage (offset range, op counts, snapshot id — F3).
+5. lineage: one record per epoch (per route: offset range, op counts,
+   snapshot id — F3), built from counts steps 2 and 4 already took.
 
 Every driver (`replay` / `replay_multi` on one look-ahead loop, `stream`,
 `sources.jdbc.jdbc_replay`) calls the same `apply_batch`, so
@@ -62,9 +63,6 @@ _DDL_PROBE_MAX = 10_000
 _OPS = (("I", "n_insert"), ("U", "n_update"), ("D", "n_delete"),
         ("DDL", "n_ddl"), ("H", "n_heartbeat"))
 _COUNTS = ("n", *(c for _, c in _OPS), "n_unknown", "n_pk_change")
-#: per-partition lineage fields, shared by both on-disk lineage formats
-_LINEAGE = ("partition_id", "min_lsn", "max_lsn", "n_insert", "n_update",
-            "n_delete", "n_ddl", "n_heartbeat")
 
 
 def _unknown_op() -> Column:
@@ -74,13 +72,24 @@ def _unknown_op() -> Column:
     return F.col("op_type").isNull() | ~F.col("op_type").isin(*(o for o, _ in _OPS))
 
 
-def _probe(
-    batch: DataFrame, routed: bool, by_partition: bool, pk_change: bool,
-) -> list[dict]:
+def _counts() -> list[Column]:
+    """Event count, lsn range, per-op and unknown-op counts: the
+    aggregates `_probe` groups and the Observation folds into a write."""
+    op = F.col("op_type")
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.min("lsn").alias("min_lsn"),
+        F.max("lsn").alias("max_lsn"),
+        *(F.count(F.when(op == o, 1)).alias(c) for o, c in _OPS),
+        F.count(F.when(_unknown_op(), 1)).alias("n_unknown"),
+    ]
+
+
+def _probe(batch: DataFrame, routed: bool, pk_change: bool) -> list[dict]:
     """The epoch's ONE narrow aggregation over a pruned scan: per route
-    (and per Spark partition when `by_partition`) the event count, lsn
-    range, op counts and the DDL events themselves (collect_list skips
-    the nulls non-DDL rows produce; DDL volume is tiny by design).
+    the event count, lsn range, op counts and the DDL events themselves
+    (collect_list skips the nulls non-DDL rows produce; DDL volume is
+    tiny by design).
     `pk_change=True` adds `n_pk_change` (updates whose before/after
     doc_id differ), which lets the fetch tail skip the cross-key resolve
     on the common no-PK-change epoch; opt-in because it widens the scan
@@ -88,39 +97,32 @@ def _probe(
 
     def build():
         op = F.col("op_type")
-        keys = [F.col("table")] if routed else []
-        if by_partition:
-            keys.append(F.spark_partition_id().alias("partition_id"))
         pkc = [
             F.count(F.when(
                 (op == "U") & F.col("before.doc_id").isNotNull()
                 & (F.col("before.doc_id") != F.col("after.doc_id")), 1,
             )).alias("n_pk_change")
         ] if pk_change else []
-        return keys, [
-            F.count(F.lit(1)).alias("n"),
-            F.min("lsn").alias("min_lsn"),
-            F.max("lsn").alias("max_lsn"),
-            *(F.count(F.when(op == o, 1)).alias(c) for o, c in _OPS),
-            F.count(F.when(_unknown_op(), 1)).alias("n_unknown"),
+        return [F.col("table")] if routed else [], [
+            *_counts(),
             *pkc,
             F.collect_list(
                 F.when(op == "DDL", F.struct("lsn", "ddl_kind", "ddl_payload"))
             ).alias("ddl_events"),
         ]
 
-    keys, aggs = template(("_probe", routed, by_partition, pk_change), build)
+    keys, aggs = template(("_probe", routed, pk_change), build)
     return [r.asDict() for r in batch.groupBy(*keys).agg(*aggs).collect()]
 
 
 def _ddl_probe(batch: DataFrame, epoch: int) -> list[dict]:
-    """The single-table carry probe without lineage: only DDL and
-    unknown-op rows leave the pushdown-pruned scan, so the strict guard
-    fires BEFORE any DDL mutates the table (a drop_column would
-    otherwise already have compacted the column away for a batch the
-    engine claims it refused). The collect is bounded: DDL volume is
-    tiny by design, so a feed exceeding the cap is hostile/corrupt and
-    must not OOM the driver. Returns one probe-shaped row."""
+    """The single-table carry probe: only DDL and unknown-op rows leave
+    the pushdown-pruned scan, so the strict guard fires BEFORE any DDL
+    mutates the table (a drop_column would otherwise already have
+    compacted the column away for a batch the engine claims it refused).
+    The collect is bounded: DDL volume is tiny by design, so a feed
+    exceeding the cap is hostile/corrupt and must not OOM the driver.
+    Returns one probe-shaped row."""
     cond, cols = template("_ddl_probe", lambda: (
         F.col("op_type").isNull() | ~F.col("op_type").isin("I", "U", "D", "H"),
         [F.col(c) for c in ("lsn", "op_type", "ddl_kind", "ddl_payload")],
@@ -138,12 +140,7 @@ def _ddl_probe(batch: DataFrame, epoch: int) -> list[dict]:
 
 def _observed_metrics() -> list[Column]:
     """The Observation metrics folded into the single-table carry write."""
-    return template("_observed_metrics", lambda: [
-        F.count(F.lit(1)).alias("n"),
-        F.min("lsn").alias("min_lsn"), F.max("lsn").alias("max_lsn"),
-        F.count(F.when(_unknown_op(), 1)).alias("n_unknown"),
-        F.count(F.when(F.col("op_type") == "H", 1)).alias("n_heartbeat"),
-    ])
+    return template("_observed_metrics", _counts)
 
 
 def _fold(rows: list[dict]) -> dict:
@@ -208,14 +205,13 @@ def apply_batch(
     # pruning makes each scan cheaper than materializing the nested
     # images into the columnar cache (measured 5.8s persist vs <1s
     # pruned scans per 250k-event epoch) ------------------------------
-    observed = single and not fetching and lineage_dir is None and not done
+    observed = single and not fetching and not done
     if prepared is not None:
         rows = prepared["probe"]  # the look-ahead already paid this scan
     elif observed:
         rows = _ddl_probe(batch, epoch)
     else:
-        rows = _probe(batch, routed=not single,
-                      by_partition=lineage_dir is not None, pk_change=fetching)
+        rows = _probe(batch, routed=not single, pk_change=fetching)
     by_route: dict = {None: []} if single else {}
     for r in rows:
         by_route.setdefault(None if single else r["table"], []).append(r)
@@ -379,30 +375,16 @@ def apply_batch(
     if not single:
         _sweep_stage(target, os.path.join(target.root, "_mt_stage"), keep_above=epoch)
 
-    # -- lineage -----------------------------------------------------------
+    # -- lineage: the Observation's counts (carry) or the probe's --------
     dt = time.monotonic() - t0
-    tot = metrics if observed else _fold(rows)
-    n_events = int(tot.get("n", 0) - tot.get("n_heartbeat", 0))
+    counts = {None: metrics} if observed else folded
+    n_events = int(sum(c.get("n", 0) - c.get("n_heartbeat", 0) for c in counts.values()))
     if lineage_dir is not None and (entry is not None or not single):
-        parts: dict = {}
-        for r in rows:
-            parts.setdefault(r["partition_id"], []).append(r)
-        parts = [{"partition_id": p, **_fold(rs)} for p, rs in sorted(parts.items())]
-        if single:
-            record = [
-                {"epoch": epoch, **{c: p[c] for c in _LINEAGE},
-                 "snapshot_id": entry["snapshot_id"],
-                 "events_per_sec": n_events / dt if dt > 0 else None}
-                for p in parts
-            ]
-        else:
-            record = {
-                "epoch": epoch,
-                "partitions": [{c: p[c] for c in _LINEAGE} for p in parts],
-                "tables": {k: {**fps[k], "snapshot_id": t.state()["snapshot_id"]}
-                           for k, t in tables.items()},
-                "seconds": dt,
-            }
+        record = {"epoch": epoch, "seconds": dt, "tables": [{
+            "table": k, "n_events": counts[k]["n"],
+            **{c: counts[k][c] for c in ("min_lsn", "max_lsn", *(n for _, n in _OPS))},
+            "snapshot_id": entry["snapshot_id"] if single else t.state()["snapshot_id"],
+        } for k, t in tables.items()]}
         os.makedirs(lineage_dir, exist_ok=True)
         with open(os.path.join(lineage_dir, f"epoch-{epoch:08d}.json"), "w") as f:
             json.dump(record, f)
@@ -642,20 +624,20 @@ def replay(
     byte-identical to the sequential path (same epoch order, same
     commits — only plan construction overlaps).
 
-    CARRY LOOK-AHEAD: a carry epoch's look-ahead runs only its probe job
-    (`_ddl_probe`, or the per-partition `_probe` with lineage), hiding
-    it under the previous epoch's write and commit; the apply still
-    runs the DDL barrier, the unknown-op refusal and the DML tail in
-    epoch order."""
+    CARRY LOOK-AHEAD: a carry epoch's look-ahead runs only its
+    `_ddl_probe` job, hiding it under the previous epoch's write and
+    commit; the apply still runs the DDL barrier, the unknown-op refusal
+    and the DML tail in epoch order.
+
+    `lineage` decides only whether `_lineage/epoch-N.json` records are
+    written; the apply path is the same either way."""
     table = TargetTable(table_path, compact_every=compact_every)
     table.create_if_absent()
 
     def look(e: int, batch: DataFrame) -> dict:
         if images == "carry":
-            rows = (_probe(batch, routed=False, by_partition=True, pk_change=False)
-                    if lineage else _ddl_probe(batch, e))
-            return {"probe": rows, "persisted": []}
-        rows = _probe(batch, routed=False, by_partition=lineage, pk_change=True)
+            return {"probe": _ddl_probe(batch, e), "persisted": []}
+        rows = _probe(batch, routed=False, pk_change=True)
         f = _fold(rows)
         if f["n_unknown"] or f["n_ddl"]:
             # unknown ops must refuse IN ORDER on the apply; DDL needs the

@@ -1,16 +1,20 @@
 from __future__ import annotations
 
 import gc
+import glob
+import json
 import shutil
 import tempfile
 import threading
 import time
+import uuid
 
 import pytest
 
 from cdc_spark import oracle
 from cdc_spark.genlog import GenConfig, write_binlog
 from cdc_spark.session import get_spark
+from cdc_spark.sinks.target import TargetTable
 
 
 @pytest.fixture(scope="session")
@@ -63,21 +67,25 @@ def rows_equal(oracle_rows: list[dict], engine_rows: list[dict]) -> list[str]:
 
 
 def jobs_during(spark, fn) -> int:
-    """Spark jobs launched by fn(), via the sequential job-id counter
-    (probe jobs bracket the run; their own 2 jobs are subtracted)."""
+    """Spark jobs launched by fn(), via the sequential job-id counter:
+    the ids strictly between the last job of a probe run before fn()
+    and the first job of a probe run after it. Each probe runs in its
+    own job group, so its job ids are read from the status tracker
+    rather than assumed."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    def probe() -> int:
-        sc.setJobGroup("job_probe", "job_probe")
+    def probe() -> list[int]:
+        group = f"job_probe_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
         spark.range(1).count()
-        ids = tracker.getJobIdsForGroup("job_probe")
+        ids = tracker.getJobIdsForGroup(group)
         sc.setJobGroup(None, None)
-        return max(ids)
+        return ids
 
-    before = probe()
+    before = max(probe())
     fn()
-    after = probe()
+    after = min(probe())
     return after - before - 1
 
 
@@ -116,3 +124,27 @@ def assert_matches_oracle(spark, table, binlog_dir):
     actual = [r.asDict() for r in table.read_resolved(spark).collect()]
     diffs = rows_equal(expected, actual)
     assert not diffs, f"{len(diffs)} diffs, first 10: {diffs[:10]}"
+
+
+def assert_lineage_records(table_dir, target, epochs) -> list[dict]:
+    """One `_lineage/epoch-N.json` record per applied epoch, with one
+    entry per route (`table` null for a single TargetTable) whose op
+    counts sum to that table's journal epoch_stats n_events and whose
+    lsn range is the journal's."""
+    routes = ({None: target} if isinstance(target, TargetTable)
+              else {n: target.get(n) for n in target.names()})
+    files = sorted(glob.glob(f"{table_dir}/_lineage/epoch-*.json"))
+    records = [json.load(open(f)) for f in files]
+    assert [r["epoch"] for r in records] == list(epochs)
+    ops = ("n_insert", "n_update", "n_delete", "n_ddl", "n_heartbeat")
+    for r in records:
+        assert set(r) == {"epoch", "seconds", "tables"} and r["seconds"] > 0
+        assert {t["table"] for t in r["tables"]} == set(routes)
+        for t in r["tables"]:
+            assert set(t) == {"table", "n_events", "min_lsn", "max_lsn", *ops,
+                              "snapshot_id"}
+            assert t["snapshot_id"]
+            stats = routes[t["table"]].epoch_stats(r["epoch"])
+            assert sum(t[c] for c in ops) == t["n_events"] == stats["n_events"]
+            assert (t["min_lsn"], t["max_lsn"]) == (stats["min_lsn"], stats["max_lsn"])
+    return records

@@ -10,9 +10,10 @@ import pyarrow.parquet as pq
 import pytest
 
 from cdc_spark.genlog import GenConfig, write_binlog
-from cdc_spark.streaming.pipeline import apply_batch, read_changes, replay
+from cdc_spark.streaming import pipeline
+from cdc_spark.streaming.pipeline import apply_batch, read_changes, replay, stream
 from cdc_spark.sinks.target import TargetTable
-from tests.conftest import assert_matches_oracle
+from tests.conftest import assert_lineage_records, assert_matches_oracle
 
 HB_CFG = GenConfig(n_events=4000, n_docs=300, events_per_epoch=1000, p_heartbeat=0.05, seed=42)
 
@@ -39,9 +40,32 @@ def test_heartbeats_dropped_final_state_matches_oracle(spark, workdir, hb_binlog
 
     lineage_files = glob.glob(f"{workdir}/table_hb/_lineage/*.json")
     n_hb = sum(
-        row["n_heartbeat"] for f in lineage_files for row in json.load(open(f))
+        t["n_heartbeat"] for f in lineage_files for t in json.load(open(f))["tables"]
     )
     assert n_hb > 0
+
+
+def test_stream_writes_one_lineage_record_per_epoch(spark, workdir, hb_binlog, monkeypatch):
+    """`stream` applies every single-table carry epoch through the DDL
+    probe and the Observation-folded write (never the grouped probe) and
+    writes one lineage record per epoch, heartbeats counted there and
+    dropped from the table."""
+    calls = {"_probe": 0, "_ddl_probe": 0}
+    for name in calls:
+        real = getattr(pipeline, name)
+
+        def counted(*args, _real=real, _name=name, **kwargs):
+            calls[_name] += 1
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, name, counted)
+    tdir = f"{workdir}/table_hb_stream"
+    table = stream(spark, hb_binlog, tdir, checkpoint_dir=f"{workdir}/ckpt_hb_stream")
+    assert_matches_oracle(spark, table, hb_binlog)
+    n_epochs = HB_CFG.n_events // HB_CFG.events_per_epoch
+    records = assert_lineage_records(tdir, table, range(n_epochs))
+    assert sum(r["tables"][0]["n_heartbeat"] for r in records) > 0
+    assert calls == {"_probe": 0, "_ddl_probe": n_epochs}, calls
 
 
 def test_unknown_op_fails_batch(spark, workdir, small_binlog):

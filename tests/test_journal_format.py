@@ -102,8 +102,7 @@ def test_legacy_shape_refuses_before_any_spark_job(spark, current_table, tmp_pat
             t.compact(spark)
         assert t.path in str(err.value) and "replaying its feed" in str(err.value)
 
-    # jobs_during reads 1 for a no-op: each of its bracketing probes runs 2 jobs
-    assert jobs_during(spark, compact) == jobs_during(spark, lambda: None)
+    assert jobs_during(spark, compact) == 0
     if not shape.startswith(("base_", "bucketed_")):
         with pytest.raises(ValueError, match=REFUSED):
             t.read_resolved(spark)

@@ -3,13 +3,13 @@ and on a TableRouter, each in carry mode without lineage, carry mode
 with lineage, and fetch mode. Every cell must equal its oracle, and the
 Spark jobs each epoch's apply runs are pinned against the counts the
 three separate apply bodies ran before they were folded into one:
-single-table carry without lineage (the Observation-folded write) stays
-equal, and every router cell drops at least the job the merged probe
-saves (per-table stats and the DDL probe are one aggregate now)."""
+single-table carry (the Observation-folded write) stays equal, and
+every router cell drops at least the job the merged probe saves
+(per-table stats and the DDL probe are one aggregate now). Lineage
+costs no job: carry with lineage runs exactly the jobs carry without
+it runs."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -19,7 +19,7 @@ from cdc_spark.sinks.target import TableRouter, TargetTable
 from cdc_spark.sources.binlog import list_segments, read_changes
 from cdc_spark.streaming.pipeline import apply_batch
 
-from conftest import jobs_during, rows_equal
+from conftest import assert_lineage_records, jobs_during, rows_equal
 
 ROUTED_SCHEDULE = (
     (0.15, "add_column", {"name": "quality", "type": "float"}, 0),
@@ -38,12 +38,12 @@ FEEDS = {
 #: jobs per epoch (3 epochs) of the three former apply bodies on these
 #: feeds, local[4] with 8 shuffle partitions
 BEFORE = {
-    ("single", "carry"): [4, 4, 4],
-    ("single", "carry_lineage"): [5, 5, 5],
-    ("single", "fetch"): [12, 13, 13],
-    ("router", "carry"): [6, 6, 6],
-    ("router", "carry_lineage"): [7, 7, 7],
-    ("router", "fetch"): [23, 25, 25],
+    ("single", "carry"): [3, 3, 3],
+    ("single", "carry_lineage"): [4, 4, 4],
+    ("single", "fetch"): [11, 12, 12],
+    ("router", "carry"): [5, 5, 5],
+    ("router", "carry_lineage"): [6, 6, 6],
+    ("router", "fetch"): [22, 24, 24],
 }
 
 
@@ -66,15 +66,9 @@ def _expected(shape: str, feed: str, images: str) -> dict:
             for name, (state, reg) in oracle.replay_tables(glob, images=images).items()}
 
 
-@pytest.mark.parametrize("shape", ["single", "router"])
-@pytest.mark.parametrize("cell", ["carry", "carry_lineage", "fetch"])
-def test_lifecycle_cell_matches_oracle_within_job_budget(
-    spark, workdir, feeds, shape, cell
-):
-    images = "fetch" if cell == "fetch" else "carry"
-    feed = feeds[shape, images]
-    root = f"{workdir}/lifecycle_t_{shape}_{cell}"
-    lineage_dir = f"{root}/_lineage" if cell == "carry_lineage" else None
+def _apply_feed(spark, shape, root, feed, lineage_dir, images):
+    """Apply every epoch of `feed` to a fresh target at `root`; returns
+    the target and the Spark jobs each epoch's apply ran."""
     if shape == "single":
         target = TargetTable(root)
         target.create_if_absent()
@@ -86,6 +80,19 @@ def test_lifecycle_cell_matches_oracle_within_job_budget(
         jobs.append(jobs_during(spark, lambda: apply_batch(
             spark, target, batch, epoch, lineage_dir=lineage_dir, images=images,
         )))
+    return target, jobs
+
+
+@pytest.mark.parametrize("shape", ["single", "router"])
+@pytest.mark.parametrize("cell", ["carry", "carry_lineage", "fetch"])
+def test_lifecycle_cell_matches_oracle_within_job_budget(
+    spark, workdir, feeds, shape, cell
+):
+    images = "fetch" if cell == "fetch" else "carry"
+    feed = feeds[shape, images]
+    root = f"{workdir}/lifecycle_t_{shape}_{cell}"
+    lineage_dir = f"{root}/_lineage" if cell == "carry_lineage" else None
+    target, jobs = _apply_feed(spark, shape, root, feed, lineage_dir, images)
 
     for name, want in _expected(shape, feed, images).items():
         table = target if name is None else target.get(name)
@@ -101,7 +108,9 @@ def test_lifecycle_cell_matches_oracle_within_job_budget(
     else:
         assert all(j <= b for j, b in zip(jobs, before)), (jobs, before)
     if lineage_dir is not None:
-        assert len(os.listdir(lineage_dir)) == len(jobs)
+        assert_lineage_records(root, target, range(len(jobs)))
+        _, plain = _apply_feed(spark, shape, f"{root}_plain", feed, None, images)
+        assert jobs == plain, (jobs, plain)
 
 
 def test_carry_lookahead_failure_warns_and_applies_synchronously(

@@ -3,8 +3,9 @@ engine's final table must equal the single-threaded oracle per-row
 (token-array equality — the BASELINE.json input_hint invariant)."""
 
 from cdc_spark.genlog import GenConfig, write_binlog
+from cdc_spark.sinks.target import TargetTable
 from cdc_spark.streaming.pipeline import replay
-from tests.conftest import assert_matches_oracle
+from tests.conftest import assert_lineage_records, assert_matches_oracle
 
 
 def test_golden_replay_default(spark, small_binlog, workdir):
@@ -33,36 +34,32 @@ def test_golden_replay_heavy_skew(spark, workdir):
 
 
 def test_lineage_emitted(spark, small_binlog, workdir):
-    import glob
-    import json
-
     tdir = f"{workdir}/t_lineage"
-    replay(spark, small_binlog, tdir, lineage=True)
-    files = sorted(glob.glob(f"{tdir}/_lineage/epoch-*.json"))
-    assert len(files) == 5
-    rows = json.load(open(files[0]))
-    assert rows and all(
-        set(r) >= {"epoch", "partition_id", "min_lsn", "max_lsn", "n_insert",
-                   "n_update", "n_delete", "n_ddl", "snapshot_id", "events_per_sec"}
-        for r in rows
-    )
-    total = sum(r["n_insert"] + r["n_update"] + r["n_delete"] + r["n_ddl"] for r in rows)
-    assert total == 1000  # epoch 0 event count
+    table = replay(spark, small_binlog, tdir, lineage=True)
+    records = assert_lineage_records(tdir, table, range(5))
+    assert records[0]["tables"][0]["n_events"] == 1000  # epoch 0 event count
 
 
 def test_observed_fast_path_equals_lineage_path(spark, small_binlog, workdir):
-    """lineage=False routes apply_batch through the Observation-folded
-    single-job fast path; final state, journal stats, and oracle match
-    the two-pass lineage path exactly."""
-    stats_fast: list = []
-    t_fast = replay(spark, small_binlog, f"{workdir}/t_fast", lineage=False,
-                    stats_out=stats_fast)
-    t_full = replay(spark, small_binlog, f"{workdir}/t_full_ref", lineage=True)
-    assert_matches_oracle(spark, t_fast, small_binlog)
-    a = {r["doc_id"]: r.asDict() for r in t_fast.read_resolved(spark).collect()}
-    b = {r["doc_id"]: r.asDict() for r in t_full.read_resolved(spark).collect()}
+    """Lineage on and off run one apply path: equal tables, equal
+    journal stats and the same Spark jobs per epoch (each resumed
+    `replay` call applies one more epoch)."""
+    from tests.conftest import jobs_during
+
+    def run(name: str, lineage: bool):
+        d = f"{workdir}/{name}"
+        jobs = [jobs_during(spark, lambda: replay(
+            spark, small_binlog, d, lineage=lineage, stop_after=k + 1))
+            for k in range(5)]
+        return TargetTable(d), jobs
+
+    t_off, jobs_off = run("t_fast", lineage=False)
+    t_on, jobs_on = run("t_full_ref", lineage=True)
+    assert_matches_oracle(spark, t_off, small_binlog)
+    a = {r["doc_id"]: r.asDict() for r in t_off.read_resolved(spark).collect()}
+    b = {r["doc_id"]: r.asDict() for r in t_on.read_resolved(spark).collect()}
     assert a == b
     # journal-recorded per-epoch stats (the redelivery fingerprint) agree
     for e in range(5):
-        assert t_fast.epoch_stats(e) == t_full.epoch_stats(e)
-    assert all(r["applied"] for r in stats_fast)
+        assert t_off.epoch_stats(e) == t_on.epoch_stats(e)
+    assert jobs_on == jobs_off, (jobs_on, jobs_off)
