@@ -183,6 +183,9 @@ def apply_batch(
     unsupplied fields are fetched from earlier same-epoch events or the
     table's own resolved state (operators/fetch.py).
 
+    `lineage_dir`: where the epoch's lineage record goes (F3; None
+    writes none). It never changes which jobs the epoch runs.
+
     `prepared` (single table only): this epoch's look-ahead result from
     `replay`, computed while the PREVIOUS epoch was still committing —
     the probe rows (the feed alone decides them, so the DDL barrier
